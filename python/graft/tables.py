@@ -103,10 +103,9 @@ class GraftTable:
         than once; ``spark.conf.set("spark.graft.dml.materializeSource",
         mode)`` controls pinning it first: ``auto`` (default) pins only
         non-deterministic sources (correctness), ``all`` always pins (the
-        knob for an expensive multi-join source), ``none`` is auto's
-        floor. Pinning uses an eager localCheckpoint so a lost block
-        fails loudly and the command retries bounded by
-        ``spark.graft.dml.materializeSource.maxAttempts``."""
+        knob for an expensive multi-join source). Pinning uses an eager
+        localCheckpoint so a lost block fails loudly and the command
+        retries, at most 4 attempts in all."""
         return GraftMergeBuilder(
             self._spark, self._jt.merge(source._jdf, condition))
 

@@ -36,20 +36,12 @@ object DeltaMirror {
   def enabled(m: Metadata): Boolean =
     m.configuration.get(PROP).exists(_.split(",").map(_.trim).contains("delta"))
 
-  /** Test hook: simulates a filesystem failure inside the mirror hook
-    * (the commit must survive; the next hook must backfill). */
-  @volatile private[graft] var failNextMirror: Boolean = false
-
   /** Post-commit hook body: mirror graft commit `version` (its `actions`)
     * into `_delta_log`. `snap` is a snapshot AT OR PAST `version`.
     * Graft DV sidecars re-encode into spec-format Delta DV files at
     * mirror time (metadata-scale; data files are still shared). */
   def mirror(log: GraftLog, version: Long, actions: Seq[Action],
       snap: Snapshot): Unit = {
-    if (failNextMirror) {
-      failNextMirror = false
-      throw new RuntimeException("injected mirror failure (test hook)")
-    }
     val deltaLog = new Path(log.dataPath, "_delta_log")
     val conf = log.spark.sessionState.newHadoopConf()
     def addJsonDv(a: AddFile): String = addJson(a, dvDescriptor(log.dataPath, conf, a))

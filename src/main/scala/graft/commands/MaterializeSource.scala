@@ -1,5 +1,7 @@
 package graft.commands
 
+import scala.util.DynamicVariable
+
 import org.apache.spark.SparkException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -23,11 +25,12 @@ import org.apache.spark.storage.StorageLevel
  * instead of silently recomputing from lineage — which for the
  * non-deterministic sources that `auto` pins would re-roll the dice and
  * hand later phases different rows than earlier ones saw. On that loud
- * failure the whole command retries (bounded) with the blocks replicated,
- * matching the failure-handling contract of the reference
- * (merge/MergeIntoMaterializeSource.scala:52-63,108-116,187-192 —
- * re-designed: one shared helper for both commands, conf-driven modes,
- * and the retry driven from the pin site rather than a per-command mixin).
+ * failure the whole command retries (at most [[LOST_BLOCK_ATTEMPTS]] times)
+ * with the blocks replicated, matching the failure-handling contract of
+ * the reference (merge/MergeIntoMaterializeSource.scala:52-63,108-116,
+ * 187-192 — re-designed: one shared helper for both commands, conf-driven
+ * modes, and the retry driven from the pin site rather than a per-command
+ * mixin).
  *
  * Modes (`spark.graft.dml.materializeSource`):
  *  - `auto` (default): pin exactly what correctness demands — a
@@ -40,23 +43,23 @@ import org.apache.spark.storage.StorageLevel
  *  - `all`: always pin — the knob for an expensive multi-join source
  *    that would otherwise compute once per pass (up to 4x for INSERT
  *    REPLACE).
- *  - `none`: alias of auto's floor (non-deterministic still pins;
- *    silently corrupting a command is never an option).
  */
 object MaterializeSource {
 
   val CONF = "spark.graft.dml.materializeSource"
 
-  /** Bounded whole-command retries when the materialized blocks are lost
-    * mid-command (cluster executor loss). Attempt 1 stores DISK_ONLY;
-    * retries replicate (DISK_ONLY_2) so a single further loss cannot
-    * strand the command again. */
-  val MAX_ATTEMPTS_CONF = "spark.graft.dml.materializeSource.maxAttempts"
+  /** Attempts a computation over locally checkpointed blocks gets before
+    * a lost block fails it for good: attempt 1 stores its blocks once,
+    * every retry replicates them so a single further loss cannot strand
+    * it again. */
+  val LOST_BLOCK_ATTEMPTS = 4
 
-  /** Test hook: invoked after each materialization completes, before the
-    * command body runs, with (attempt, checkpointed RDD). Fault-injection
-    * suites unpersist the RDD here to simulate executor/block loss. */
-  private[graft] var onMaterialized: (Int, RDD[_]) => Unit = (_, _) => ()
+  /** Fault-injection seam, scoped to one call with `withValue`: invoked
+    * after each materialization completes, before the command body runs,
+    * with (attempt, checkpointed RDD). Tests unpersist the RDD here to
+    * simulate executor/block loss. */
+  private[graft] val onPinned =
+    new DynamicVariable[(Int, RDD[_]) => Unit]((_, _) => ())
 
   /** Pin `source` per the conf mode, run `body` against the (possibly
     * materialized) frame, and release the blocks afterwards. `passes` is
@@ -65,8 +68,7 @@ object MaterializeSource {
   def withPinned[T](source: DataFrame, passes: Int)(body: DataFrame => T): T = {
     val spark = source.sparkSession
     val mode = spark.conf.get(CONF, "auto").toLowerCase
-    require(Seq("auto", "none", "all").contains(mode),
-      s"$CONF must be auto|none|all, got '$mode'")
+    require(mode == "auto" || mode == "all", s"$CONF must be auto|all, got '$mode'")
     val analyzed = source.queryExecution.analyzed
     val nonDeterministic =
       analyzed.exists(p => p.expressions.exists(e => !e.deterministic))
@@ -75,10 +77,9 @@ object MaterializeSource {
     val pin = passes > 1 && (mode == "all" || nonDeterministic)
     if (!pin) return body(source)
 
-    val maxAttempts = spark.conf.get(MAX_ATTEMPTS_CONF, "4").toInt
-    var attempt = 1
-    var lastLoss: Throwable = null
-    while (attempt <= maxAttempts) {
+    retryOnLostBlocks("DML source materialization lost its checkpointed " +
+        s"blocks on all $LOST_BLOCK_ATTEMPTS attempts; the command made no " +
+        "partial commit and can be re-run.") { attempt =>
       val level =
         if (attempt == 1) StorageLevel.DISK_ONLY else StorageLevel.DISK_ONLY_2
       // InternalRow buffers are reused by the scan — copy before storing
@@ -88,20 +89,29 @@ object MaterializeSource {
       rdd.localCheckpoint() // sever lineage: lost block => loud failure
       try {
         rdd.count() // evaluate the source exactly once, before any phase
-        onMaterialized(attempt, rdd)
-        return body(SparkShims.internalCreateDataFrame(spark, rdd, source.schema))
-      } catch {
+        onPinned.value(attempt, rdd)
+        body(SparkShims.internalCreateDataFrame(spark, rdd, source.schema))
+      } finally rdd.unpersist(blocking = false)
+    }
+  }
+
+  /** Run `attempt(n)` for n = 1, 2, ... until it completes without losing
+    * its locally checkpointed blocks; after [[LOST_BLOCK_ATTEMPTS]] losses,
+    * fail with `exhausted` and the last loss as cause. Any other failure
+    * propagates at once. */
+  private[graft] def retryOnLostBlocks[T](exhausted: => String)(
+      attempt: Int => T): T = {
+    var lastLoss: Throwable = null
+    var n = 1
+    while (n <= LOST_BLOCK_ATTEMPTS) {
+      try return attempt(n)
+      catch {
         case t: Throwable if isMaterializedBlockLost(t) =>
           lastLoss = t
-          attempt += 1
-      } finally {
-        rdd.unpersist(blocking = false)
+          n += 1
       }
     }
-    throw new SparkException(
-      s"DML source materialization lost its checkpointed blocks on all " +
-        s"$maxAttempts attempts (set $MAX_ATTEMPTS_CONF to raise); the " +
-        "command made no partial commit and can be re-run.", lastLoss)
+    throw new SparkException(exhausted, lastLoss)
   }
 
   /** True when the failure (anywhere in the cause chain) is Spark's

@@ -201,62 +201,6 @@ object TextKernels {
     hits
   }
 
-  /** Shared scan for the DSIR hashed feature map: visit the bucket id of
-    * every unigram and adjacent-bigram feature of `s` (whitespace tokens;
-    * caller lowercases upstream). Bucketing is floorMod of the mixed
-    * feature hash — the SAME function builds the count vectors and scores
-    * documents, so the estimator is self-consistent by construction.
-    * Returns the feature count. */
-  private def foreachNgramBucket(s: UTF8String, buckets: Int)(
-      f: Int => Unit): Long = {
-    val bytes = s.getBytes
-    val len = bytes.length
-    var prev = 0L
-    var tokens = 0L
-    var i = 0
-    while (i < len) {
-      while (i < len && isSpace(bytes(i))) i += 1
-      val start = i
-      while (i < len && !isSpace(bytes(i))) i += 1
-      if (i > start) {
-        val h = hashRange(bytes, start, i)
-        val uni = VectorKernels.mix(h ^ 0xC2B2AE3D27D4EB4FL)
-        f(java.lang.Math.floorMod(uni, buckets.toLong).toInt)
-        tokens += 1
-        if (tokens >= 2) {
-          val bi = VectorKernels.mix(
-            VectorKernels.mix(prev ^ 0x9E3779B97F4A7C15L) ^ h)
-          f(java.lang.Math.floorMod(bi, buckets.toLong).toInt)
-        }
-        prev = h
-      }
-    }
-    if (tokens == 0) 0L else tokens * 2 - 1
-  }
-
-  /** Bucket ids of every unigram/bigram feature (build-side of the DSIR
-    * hashed estimator: explode + count = the bucket count vector). */
-  def ngramBucketIds(s: UTF8String, buckets: Int)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val out = new java.util.ArrayList[Int](64)
-    foreachNgramBucket(s, buckets)(b => { out.add(b); () })
-    val arr = new Array[Int](out.size)
-    var i = 0
-    while (i < arr.length) { arr(i) = out.get(i); i += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(arr)
-  }
-
-  /** Score-side of the DSIR hashed estimator: (n_feats, sum of the
-    * broadcast per-bucket log ratios over the document's features). */
-  def hashedNgramScore(
-      s: UTF8String,
-      lr: Array[Double]): org.apache.spark.sql.catalyst.InternalRow = {
-    var sum = 0.0
-    val n = foreachNgramBucket(s, lr.length)(b => sum += lr(b))
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](n, sum))
-  }
-
   /** Exact Jaccard of two SORTED distinct long arrays: linear merge. */
   def sortedJaccard(a: org.apache.spark.sql.catalyst.util.ArrayData,
       b: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
@@ -610,58 +554,5 @@ case class BloomShingleHits(
     })
 
   override protected def withNewChildInternal(newChild: Expression): BloomShingleHits =
-    copy(child = newChild)
-}
-
-/** Bucket ids of a document's unigram+bigram features under the DSIR
-  * hashed feature map — the BUILD side of the estimator: exploding this
-  * array and counting per bucket yields the corpus' feature-count vector
-  * with one map-side-combined aggregate. */
-case class NgramBucketIds(child: Expression, buckets: Int)
-    extends UnaryExpression {
-  require(buckets > 0)
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullSafeEval(a: Any): Any =
-    TextKernels.ngramBucketIds(a.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"""
-      ${ev.value} = graft.expressions.TextKernels.ngramBucketIds($a, $buckets);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): NgramBucketIds =
-    copy(child = newChild)
-}
-
-/** DSIR importance score in ONE pass: (n_feats, log_weight) where
-  * log_weight sums the broadcast per-bucket log ratios over the
-  * document's unigram+bigram features. The executor-resident state is
-  * the B-sized double array; scoring shuffles nothing and explodes
-  * nothing. */
-case class HashedNgramScore(
-    child: Expression,
-    lrBc: org.apache.spark.broadcast.Broadcast[Array[Double]])
-    extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_feats", LongType, nullable = false),
-    StructField("log_weight", DoubleType, nullable = false)))
-
-  override def nullSafeEval(a: Any): Any =
-    TextKernels.hashedNgramScore(a.asInstanceOf[UTF8String], lrBc.value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val bcRef = ctx.addReferenceObj("lrBc", lrBc,
-        classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-      s"""
-      ${ev.value} = graft.expressions.TextKernels.hashedNgramScore(
-        $a, (double[]) $bcRef.value());
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): HashedNgramScore =
     copy(child = newChild)
 }

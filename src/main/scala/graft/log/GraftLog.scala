@@ -319,65 +319,49 @@ class GraftLog private (
           Actions.serialize(actions))
     }
     val snap = update()
-    // EVERYTHING past this point is a BEST-EFFORT post-commit hook: the
-    // commit file is already durable, so a transient failure (racing log
-    // cleanup under a healing fold, FS hiccup, checkpoint write error)
-    // must not surface as a failed write — the caller would retry the
-    // transaction and double-apply the data. Each hook self-repairs: a
-    // missing checksum sidecar heals from raw commits on the next chain
-    // touch, a skipped checkpoint re-arms at the next interval hit.
+    // EVERYTHING past this point is a best-effort post-commit hook (see
+    // `postCommitHook`). Each hook self-repairs: a missing checksum
+    // sidecar heals from raw commits on the next chain touch, a skipped
+    // checkpoint re-arms at the next interval hit, auto-compact pressure
+    // persists, and the next mirror hook backfills whatever this one
+    // missed (deterministic version mapping makes the repair exact).
     //
     // The checksum sidecar must describe the version JUST COMMITTED: under
     // a racing writer update() can return a LATER version, and writing
     // that version's checksum from this commit's actions would both skip
     // `version`'s own sidecar forever and clobber the racer's correct one.
-    val postCommitLog = org.slf4j.LoggerFactory.getLogger(classOf[GraftLog])
     val snapAtV =
-      try { if (snap.version == version) snap else getSnapshotAt(version) }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          postCommitLog.warn(
-            s"post-commit snapshot pin of $dataPath@$version failed; " +
-              s"skipping its checksum sidecar (the chain heals later): $e")
-          snap
-      }
-    try {
+      if (snap.version == version) snap
+      else postCommitHook("snapshot pin", version)(getSnapshotAt(version))
+        .getOrElse(snap)
+    postCommitHook("checksum", version) {
       if (snapAtV.version == version)
         writeChecksum(snapAtV, actions, trustedCounts)
-      maybeCheckpoint(snap)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        postCommitLog.warn(
-          s"post-commit checksum/checkpoint of $dataPath@$version failed; " +
-            s"both self-repair on a later commit: $e")
     }
-    // BEST-EFFORT like the mirror below: the commit is already durable, so
-    // a failed opportunistic compaction (concurrent-commit conflict, ...)
-    // must not surface as a failed write that the caller would retry and
-    // double-apply.
-    try maybeAutoCompact(snapAtV, actions)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(classOf[GraftLog]).warn(
-          s"auto-compact of $dataPath after v$version failed; pressure " +
-            s"persists and a later commit retries: $e")
-    }
-    // Delta-format mirror (UniForm-style): BEST-EFFORT. The graft commit
-    // above is already durable, so a mirror failure must not surface as
-    // a failed write — the caller would retry and double-apply the data.
-    // The next commit's hook backfills whatever this one missed
-    // (deterministic version mapping makes the repair exact).
-    if (graft.commands.DeltaMirror.enabled(snap.metadata)) {
-      try graft.commands.DeltaMirror.mirror(this, version, actions, snap)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(classOf[GraftLog]).warn(
-            s"Delta mirror of $dataPath@$version failed; the next commit " +
-              s"will backfill it: $e")
-      }
-    }
+    postCommitHook("checkpoint", version)(maybeCheckpoint(snap))
+    postCommitHook("auto-compact", version)(maybeAutoCompact(snapAtV, actions))
+    if (graft.commands.DeltaMirror.enabled(snap.metadata))
+      postCommitHook("delta mirror", version)(
+        graft.commands.DeltaMirror.mirror(this, version, actions, snap))
     snap
   }
+
+  /** Run one post-commit hook of commit `version` BEST-EFFORT: the commit
+    * file is already durable, so a failure (racing log cleanup under a
+    * healing fold, FS hiccup, concurrent-commit conflict) must not surface
+    * as a failed write — the caller would retry the transaction and
+    * double-apply the data. The failure is logged with the hook's name
+    * and swallowed; `None` stands for the failed hook's result. */
+  private def postCommitHook[T](name: String, version: Long)(
+      body: => T): Option[T] =
+    try Some(body)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        GraftLog.postCommitLog.warn(
+          s"post-commit hook '$name' of $dataPath@$version failed; it " +
+            s"heals on a later commit: $e")
+        None
+    }
 
   /** Per-commit checksum sidecar: the fold-state fingerprint (aggregates
     * + protocol + metadata + txn/domain maps) a cold reader re-derives
@@ -644,7 +628,7 @@ class GraftLog private (
     if (snap.version > 0 && snap.version % checkpointInterval == 0 &&
         !store.exists(FileNames.checkpointFile(logPath, snap.version))) {
       checkpoint(snap)
-      maybeCleanExpiredLogs(snap)
+      postCommitHook("log cleanup", snap.version)(maybeCleanExpiredLogs(snap))
     }
   }
 
@@ -660,8 +644,7 @@ class GraftLog private (
     if (conf.getOrElse("graft.enableExpiredLogCleanup", "true").toBoolean) {
       val hours = conf.getOrElse("graft.logRetentionHours",
         (30 * 24).toString).toDouble
-      try cleanUpExpiredLogs((hours * 3600 * 1000).toLong)
-      catch { case scala.util.control.NonFatal(_) => }
+      cleanUpExpiredLogs((hours * 3600 * 1000).toLong)
     }
   }
 
@@ -999,6 +982,7 @@ class GraftLog private (
 
 object GraftLog {
   private val cache = new ConcurrentHashMap[String, GraftLog]()
+  private val postCommitLog = org.slf4j.LoggerFactory.getLogger(classOf[GraftLog])
 
   /** User-supplied time-travel timestamp -> epoch millis. Accepts
     * 'yyyy-MM-dd[ HH:mm:ss[.f...]]' — a date-only literal means midnight,
@@ -1260,8 +1244,7 @@ class Snapshot(
     * commits extend the driver-held OVERLAY (O(tail), not O(files)), so
     * read-only refreshes of a huge table never materialize the base. */
   private[log] def advance(tail: Seq[(Long, Path)]): Snapshot = {
-    var p = protocol; var m = metadata
-    var txns = setTransactions
+    var state = NonFileState(protocol, metadata, setTransactions, domains)
     val stayLazy = lazyBase.isDefined && !materialized && !tombsMaterialized
     var files: Map[String, AddFile] = if (stayLazy) Map.empty else filesMap
     var tailAdds = lazyBase.map(_.tailAdds).getOrElse(Map.empty)
@@ -1271,7 +1254,6 @@ class Snapshot(
     var tailTombs = lazyBase.map(_.tailTombs).getOrElse(Map.empty)
     var tailUntombed = lazyBase.map(_.tailUntombed).getOrElse(Set.empty)
     var ts = timestampMillis
-    var doms = domains
     tail.foreach { case (_, deltaPath) =>
       val status = log.store.fs(deltaPath).getFileStatus(deltaPath)
       ts = status.getModificationTime
@@ -1292,25 +1274,41 @@ class Snapshot(
             tailAdds -= r.path; tailRemoved += r.path
             tailTombs += r.path -> r; tailUntombed -= r.path
           } else { files -= r.path; tombs += r.path -> r }
-        case meta: Metadata => m = meta
-        case proto: Protocol => p = proto
-        case t: SetTransaction => txns += t.appId -> t.version
-        case d: DomainMetadata =>
-          doms = if (d.removed) doms - d.domain else doms + (d.domain -> d.configuration)
-        case _ =>
+        case other => state = state.fold(other)
       }
     }
     if (stayLazy) {
       val nb = lazyBase.get.copy(tailAdds = tailAdds,
         tailRemovedPaths = tailRemoved, tailTombs = tailTombs,
         tailUntombed = tailUntombed)
-      new Snapshot(log, tail.last._1, p, m, txns, nb.materialize(log.spark),
-        nb.materializeTombs(log.spark), ts, doms, Some(nb))
+      new Snapshot(log, tail.last._1, state.protocol, state.metadata,
+        state.txns, nb.materialize(log.spark), nb.materializeTombs(log.spark),
+        ts, state.domains, Some(nb))
     } else {
-      new Snapshot(log, tail.last._1, p, m, txns, files,
-        tombs.values.toSeq, ts, doms)
+      new Snapshot(log, tail.last._1, state.protocol, state.metadata,
+        state.txns, files, tombs.values.toSeq, ts, state.domains)
     }
   }
+}
+
+/** The non-file part of table state — protocol, metadata, app
+  * transaction versions and domains — and the one rule for folding an
+  * action into it. File actions are the caller's; every other action
+  * (CommitInfo, CheckpointMetadata, SidecarFile, ...) leaves it as is. */
+private[log] case class NonFileState(protocol: Protocol, metadata: Metadata,
+    txns: Map[String, Long], domains: Map[String, String]) {
+  def fold(a: Action): NonFileState = a match {
+    case m: Metadata => copy(metadata = m)
+    case p: Protocol => copy(protocol = p)
+    case t: SetTransaction => copy(txns = txns + (t.appId -> t.version))
+    case d: DomainMetadata => copy(domains =
+      if (d.removed) domains - d.domain else domains + (d.domain -> d.configuration))
+    case _ => this
+  }
+}
+
+private[log] object NonFileState {
+  val empty = NonFileState(Protocol(), null, Map.empty, Map.empty)
 }
 
 object Snapshot {
@@ -1366,19 +1364,8 @@ object Snapshot {
           // Distributed: executors decode per-kind pruned scans in
           // parallel; the driver receives ready arrays. The non-file
           // actions always come from the manifest (metadata-scale).
-          var p = Protocol(); var m: Metadata = null
-          var txns = Map.empty[String, Long]
-          var doms = Map.empty[String, String]
-          manifest.filter(col("add").isNull && col("remove").isNull)
-            .collect().foreach(_.unwrap match {
-              case meta: Metadata => m = meta
-              case proto: Protocol => p = proto
-              case t: SetTransaction => txns += t.appId -> t.version
-              case d: DomainMetadata =>
-                doms = if (d.removed) doms - d.domain
-                       else doms + (d.domain -> d.configuration)
-              case _ =>   // CheckpointMetadata / SidecarFile / CommitInfo
-            })
+          val state = manifest.filter(col("add").isNull && col("remove").isNull)
+            .collect().foldLeft(NonFileState.empty)((st, a) => st.fold(a.unwrap))
           val fileActions =
             if (sidecars.isEmpty) manifest
             else log.spark.read.schema(schema)
@@ -1393,14 +1380,14 @@ object Snapshot {
             if (sidecars.isEmpty) Seq(cpPath.toString)
             else sidecars.map(s => new Path(log.logPath, s.path).toString).toSeq
           val lazyState = LazyFileState(manifestPaths, Map.empty, Set.empty)
-          new Snapshot(log, cp, p, m, txns, lazyState.materialize(log.spark),
-            lazyState.materializeTombs(log.spark), 0L, doms, Some(lazyState))
+          new Snapshot(log, cp, state.protocol, state.metadata, state.txns,
+            lazyState.materialize(log.spark),
+            lazyState.materializeTombs(log.spark), 0L, state.domains,
+            Some(lazyState))
         } else {
           // Small classic checkpoint: ONE streamed pass folds every
           // action kind (no extra jobs on the cold-load path).
-          var p = Protocol(); var m: Metadata = null
-          var txns = Map.empty[String, Long]
-          var doms = Map.empty[String, String]
+          var state = NonFileState.empty
           val files = scala.collection.mutable.HashMap.empty[String, AddFile]
           val tombs = scala.collection.mutable.HashMap.empty[String, RemoveFile]
           val it = manifest.toLocalIterator()
@@ -1408,16 +1395,11 @@ object Snapshot {
             it.next().unwrap match {
               case a: AddFile => files.put(a.path, a)
               case r: RemoveFile => tombs.put(r.path, r)
-              case meta: Metadata => m = meta
-              case proto: Protocol => p = proto
-              case t: SetTransaction => txns += t.appId -> t.version
-              case d: DomainMetadata =>
-                doms = if (d.removed) doms - d.domain
-                       else doms + (d.domain -> d.configuration)
-              case _ =>
+              case other => state = state.fold(other)
             }
           }
-          new Snapshot(log, cp, p, m, txns, files.toMap, tombs.values.toSeq, 0L, doms)
+          new Snapshot(log, cp, state.protocol, state.metadata, state.txns,
+            files.toMap, tombs.values.toSeq, 0L, state.domains)
         }
       case None => empty(log)
     }

@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.SparkException
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import org.apache.spark.sql.graftshim.SparkShims
+
+import graft.commands.MaterializeSource
 
 /**
  * Corpus-structure operators: connected components (the step that turns
@@ -34,18 +35,6 @@ import org.apache.spark.sql.graftshim.SparkShims
  */
 object Clustering {
 
-  /** Test hook: invoked after each round's labels materialize, with
-    * (attempt, pinned RDD). Fault-injection suites unpersist the RDD here
-    * to simulate executor/block loss mid-loop. */
-  private[graft] var onRoundMaterialized: (Int, RDD[_]) => Unit = (_, _) => ()
-
-  /** Bounded whole-computation retries when a round's locally
-    * checkpointed blocks are lost mid-loop (cluster executor churn) —
-    * the same lost-block contract as DML source materialization
-    * ([[graft.commands.MaterializeSource]]): fail loudly, retry from the
-    * source with replicated storage, never recompute silently. */
-  val MAX_ATTEMPTS_CONF = "spark.graft.ml.materialize.maxAttempts"
-
   /**
    * Connected components of an undirected graph given as an edge list.
    * Output: one row per distinct vertex appearing in `edges`, with the
@@ -61,38 +50,34 @@ object Clustering {
    * costs zero extra jobs. Superseded rounds unpersist eagerly — a long
    * run holds at most edges + two label generations, not one block set
    * per round. Lost checkpoint blocks (executor death) fail the loop
-   * loudly and it retries from the edge list with replicated storage
-   * (bounded by [[MAX_ATTEMPTS_CONF]], default 4); the RETURNED frame is
-   * likewise localCheckpoint-backed, so a block lost after return fails
-   * the caller's action loudly rather than silently recomputing.
+   * loudly and it retries from the edge list with replicated storage —
+   * the lost-block contract of DML source materialization, at most
+   * [[MaterializeSource.LOST_BLOCK_ATTEMPTS]] attempts. The RETURNED frame
+   * is likewise localCheckpoint-backed, so a block lost after return
+   * fails the caller's action loudly rather than silently recomputing.
    * Isolated vertices (not in any edge) are the caller's concern — union
    * them in as self-loops if they must appear.
    *
    * @param edges two-column DataFrame; column names taken positionally
    *              as (u, v), any integral type
    */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
-    val maxAttempts = spark.conf.get(MAX_ATTEMPTS_CONF, "4").toInt
-    var attempt = 1
-    var lastLoss: Throwable = null
-    while (attempt <= maxAttempts) {
-      try return ccAttempt(edges, maxIter, attempt)
-      catch {
-        case t: Throwable
-            if graft.commands.MaterializeSource.isMaterializedBlockLost(t) =>
-          lastLoss = t
-          attempt += 1
-      }
-    }
-    throw new SparkException(
-      s"connectedComponents lost its checkpointed label blocks on all " +
-        s"$maxAttempts attempts (set $MAX_ATTEMPTS_CONF to raise); no " +
-        "partial state escapes and the call can be re-run.", lastLoss)
-  }
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    connectedComponents(edges, maxIter, (_, _) => ())
 
-  private def ccAttempt(
-      edges: DataFrame, maxIter: Int, attempt: Int): DataFrame = {
+  /** [[connectedComponents]] with a fault-injection seam: `onRoundPinned`
+    * runs after each round's labels materialize, with (attempt, pinned
+    * RDD); tests unpersist the RDD there to simulate block loss. */
+  private[graft] def connectedComponents(edges: DataFrame, maxIter: Int,
+      onRoundPinned: (Int, RDD[_]) => Unit): DataFrame =
+    MaterializeSource.retryOnLostBlocks("connectedComponents lost its " +
+        "checkpointed label blocks on all " +
+        s"${MaterializeSource.LOST_BLOCK_ATTEMPTS} attempts; no partial " +
+        "state escapes and the call can be re-run.") {
+      ccAttempt(edges, maxIter, _, onRoundPinned)
+    }
+
+  private def ccAttempt(edges: DataFrame, maxIter: Int, attempt: Int,
+      onRoundPinned: (Int, RDD[_]) => Unit): DataFrame = {
     val spark = edges.sparkSession
     val Array(uc, vc) = edges.columns.take(2)
     // Attempt 1 pins MEMORY_AND_DISK; retries replicate so a single
@@ -116,7 +101,7 @@ object Clustering {
       rdd.persist(level)
       rdd.localCheckpoint()
       rdd.count()
-      onRoundMaterialized(attempt, rdd)
+      onRoundPinned(attempt, rdd)
       pins += rdd
       (SparkShims.internalCreateDataFrame(spark, rdd, df.schema), rdd,
         acc.value)

@@ -1323,22 +1323,22 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
     // retry and double-apply the data. Inject failures on every .crc /
     // _last_checkpoint overwrite and assert commits still succeed, then
     // lift the fault and assert the chain heals on the next commit.
-    spark.conf.set("spark.graft.logStore.impl", "graft.FaultySidecarLogStore")
-    val dir = tmpDir()
-    try {
+    FaultyLogStore.installed(spark) {
+      val dir = tmpDir()
       val df = spark.range(0, 10).toDF("id")
       Graft.write(df, dir,
         configuration = Map("graft.checkpointInterval" -> "2"))
-      FaultySidecarLogStore.fail.set(true)
       // v1 (checksum fails) and v2 (checksum + checkpoint pointer fail)
-      Graft.write(df, dir, mode = "append")
-      Graft.write(df, dir, mode = "append")
+      FaultyLogStore.failing(p =>
+          p.getName.endsWith(".crc") || p.getName == "_last_checkpoint") {
+        Graft.write(df, dir, mode = "append")
+        Graft.write(df, dir, mode = "append")
+      }
       assert(Graft.read(spark, dir).count() === 30,
         "a post-commit hook failure lost or failed a durable commit")
       val log = GraftLog.forTable(spark, dir)
       assert(!log.store.exists(
         graft.log.FileNames.checksumFile(log.logPath, 2L)))
-      FaultySidecarLogStore.fail.set(false)
       // chain heals: the next commit's sidecar lands with exact counts
       Graft.write(df, dir, mode = "append")
       val snap = log.update()
@@ -1346,27 +1346,6 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
         graft.log.FileNames.checksumFile(log.logPath, snap.version)))
       assert(crc.numFiles === snap.numFiles)
       assert(Graft.read(spark, dir).count() === 40)
-    } finally {
-      FaultySidecarLogStore.fail.set(false)
-      spark.conf.unset("spark.graft.logStore.impl")
     }
   }
-}
-
-/** Fault-injection store: while [[FaultySidecarLogStore.fail]] is set,
-  * every checksum-sidecar / checkpoint-pointer overwrite throws — the
-  * shape of a transient FS error landing AFTER the commit is durable. */
-class FaultySidecarLogStore(conf: org.apache.hadoop.conf.Configuration)
-    extends graft.log.LogStore(conf) {
-  override def writeOverwrite(path: org.apache.hadoop.fs.Path,
-      content: String): Unit = {
-    if (FaultySidecarLogStore.fail.get &&
-        (path.getName.endsWith(".crc") || path.getName == "_last_checkpoint"))
-      throw new java.io.IOException(s"injected post-commit failure: $path")
-    super.writeOverwrite(path, content)
-  }
-}
-
-object FaultySidecarLogStore {
-  val fail = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -106,52 +106,59 @@ class DeltaMirrorSuite extends AnyFunSuite {
       (0L until 25L))
   }
 
+  /** Run `body` with the table's write of mirror commit `v` failing. */
+  private def failingMirror[T](v: Long)(body: => T): T =
+    FaultyLogStore.failing(p => p.getParent.getName == "_delta_log" &&
+      p.getName == f"$v%020d.json")(body)
+
   test("mirror hook is best-effort: a mirror failure never fails the commit") {
-    val dir = tmpDir()
-    Graft.write(spark.range(0, 10).toDF("id"), dir,
-      configuration = Map(graft.commands.DeltaMirror.PROP -> "delta"))
-    graft.commands.DeltaMirror.failNextMirror = true
-    // the graft commit must succeed even though its mirror hook blows up
-    Graft.write(spark.range(10, 20).toDF("id"), dir)
-    assert(Graft.read(spark, dir).count() === 20)
-    assert(!JFiles.exists(Paths.get(dir, "_delta_log", f"${1L}%020d.json")),
-      "test hook did not suppress the mirror write")
-    // the next commit's hook repairs the hole
-    Graft.write(spark.range(20, 25).toDF("id"), dir)
-    assert(JFiles.exists(Paths.get(dir, "_delta_log", f"${1L}%020d.json")))
-    assert(JFiles.exists(Paths.get(dir, "_delta_log", f"${2L}%020d.json")))
-    val view = deltaViewOf(dir)
-    Graft.convertFromDelta(spark, view)
-    assert(Graft.read(spark, view).orderBy("id").as[Long].collect().toSeq ===
-      (0L until 25L))
+    FaultyLogStore.installed(spark) {
+      val dir = tmpDir()
+      Graft.write(spark.range(0, 10).toDF("id"), dir,
+        configuration = Map(graft.commands.DeltaMirror.PROP -> "delta"))
+      // the graft commit must succeed even though its mirror hook blows up
+      failingMirror(1L)(Graft.write(spark.range(10, 20).toDF("id"), dir))
+      assert(Graft.read(spark, dir).count() === 20)
+      assert(!JFiles.exists(Paths.get(dir, "_delta_log", f"${1L}%020d.json")),
+        "the injected fault did not suppress the mirror write")
+      // the next commit's hook repairs the hole
+      Graft.write(spark.range(20, 25).toDF("id"), dir)
+      assert(JFiles.exists(Paths.get(dir, "_delta_log", f"${1L}%020d.json")))
+      assert(JFiles.exists(Paths.get(dir, "_delta_log", f"${2L}%020d.json")))
+      val view = deltaViewOf(dir)
+      Graft.convertFromDelta(spark, view)
+      assert(Graft.read(spark, view).orderBy("id").as[Long].collect().toSeq ===
+        (0L until 25L))
+    }
   }
 
   test("backfilled protocol derives from the commit's own state, not the current one") {
-    val dir = tmpDir()
-    Graft.write(spark.range(0, 10).toDF("id"), dir,
-      configuration = Map(graft.commands.DeltaMirror.PROP -> "delta"))
-    // v1 enables CDF but its mirror hook dies; v2 then enables DVs and
-    // its hook backfills mirror v1 — which must carry the v1-era protocol
-    // (writer 4, no reader features), not the v2-era DV protocol.
-    graft.commands.DeltaMirror.failNextMirror = true
-    GraftTable.forPath(spark, dir).upsertProperties(
-      Map("graft.enableChangeDataFeed" -> "true"))
-    assert(!JFiles.exists(Paths.get(dir, "_delta_log", f"${1L}%020d.json")))
-    GraftTable.forPath(spark, dir).upsertProperties(
-      Map("graft.enableDeletionVectors" -> "true"))
-    val m1 = JFiles.readString(Paths.get(dir, "_delta_log", f"${1L}%020d.json"))
-    val m2 = JFiles.readString(Paths.get(dir, "_delta_log", f"${2L}%020d.json"))
-    if (m1.contains(""""protocol"""")) {
-      assert(!m1.contains("deletionVectors"),
-        s"backfilled v1 leaked the v2 protocol: $m1")
-      assert(m1.contains(""""minWriterVersion":4"""), m1)
+    FaultyLogStore.installed(spark) {
+      val dir = tmpDir()
+      Graft.write(spark.range(0, 10).toDF("id"), dir,
+        configuration = Map(graft.commands.DeltaMirror.PROP -> "delta"))
+      // v1 enables CDF but its mirror hook dies; v2 then enables DVs and
+      // its hook backfills mirror v1 — which must carry the v1-era protocol
+      // (writer 4, no reader features), not the v2-era DV protocol.
+      failingMirror(1L)(GraftTable.forPath(spark, dir).upsertProperties(
+        Map("graft.enableChangeDataFeed" -> "true")))
+      assert(!JFiles.exists(Paths.get(dir, "_delta_log", f"${1L}%020d.json")))
+      GraftTable.forPath(spark, dir).upsertProperties(
+        Map("graft.enableDeletionVectors" -> "true"))
+      val m1 = JFiles.readString(Paths.get(dir, "_delta_log", f"${1L}%020d.json"))
+      val m2 = JFiles.readString(Paths.get(dir, "_delta_log", f"${2L}%020d.json"))
+      if (m1.contains(""""protocol"""")) {
+        assert(!m1.contains("deletionVectors"),
+          s"backfilled v1 leaked the v2 protocol: $m1")
+        assert(m1.contains(""""minWriterVersion":4"""), m1)
+      }
+      assert(m2.contains("deletionVectors"), m2)
+      // the repaired mirror still folds to the right state
+      val view = deltaViewOf(dir)
+      Graft.convertFromDelta(spark, view)
+      assert(Graft.read(spark, view).orderBy("id").as[Long].collect().toSeq ===
+        (0L until 10L))
     }
-    assert(m2.contains("deletionVectors"), m2)
-    // the repaired mirror still folds to the right state
-    val view = deltaViewOf(dir)
-    Graft.convertFromDelta(spark, view)
-    assert(Graft.read(spark, view).orderBy("id").as[Long].collect().toSeq ===
-      (0L until 10L))
   }
 
   test("mirror checkpoint carries unexpired tombstones, dataChange=false") {

@@ -1,0 +1,43 @@
+package graft
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+
+import graft.log.LogStore
+
+/** Fault-injection store, plugged in through `spark.graft.logStore.impl`:
+  * inside a [[FaultyLogStore.failing]] block every log write, put-if-absent
+  * or overwrite, whose path matches the block's predicate throws — the
+  * shape of a transient filesystem error. */
+class FaultyLogStore(conf: Configuration) extends LogStore(conf) {
+  override def write(path: Path, chunks: Iterator[String]): Unit = {
+    FaultyLogStore.check(path)
+    super.write(path, chunks)
+  }
+
+  override def writeOverwrite(path: Path, chunks: Iterator[String]): Unit = {
+    FaultyLogStore.check(path)
+    super.writeOverwrite(path, chunks)
+  }
+}
+
+object FaultyLogStore {
+  @volatile private var failWhen: Path => Boolean = _ => false
+
+  private def check(path: Path): Unit =
+    if (failWhen(path))
+      throw new java.io.IOException(s"injected store failure: $path")
+
+  /** Run `body` with this store behind every table it opens first. */
+  def installed[T](spark: SparkSession)(body: => T): T = {
+    spark.conf.set("spark.graft.logStore.impl", classOf[FaultyLogStore].getName)
+    try body finally spark.conf.unset("spark.graft.logStore.impl")
+  }
+
+  /** Run `body` with every write to a path matching `pred` failing. */
+  def failing[T](pred: Path => Boolean)(body: => T): T = {
+    failWhen = pred
+    try body finally failWhen = _ => false
+  }
+}

@@ -162,24 +162,22 @@ class InsertReplaceSuite extends AnyFunSuite {
     assert(content(dir) === (0L until 10L).map(i => i -> s"s$i").toSet)
   }
 
-  test("auto/none re-scan a deterministic source (pushdown-friendly plans per pass)") {
+  test("auto re-scans a deterministic source (pushdown-friendly plans per pass)") {
     val dir = tmpDir()
     seed(dir)
-    val acc = spark.sparkContext.longAccumulator("ir-src-rows-none")
+    val acc = spark.sparkContext.longAccumulator("ir-src-rows-auto")
     GraftTable.forPath(spark, dir).insertReplaceUsing(countedSource(acc), Seq("k"))
     assert(acc.value > 10L,
       "a deterministic source under auto should re-scan per pass " +
         "(pinning would force full materialization and lose pushdown)")
-    // a NON-deterministic source pins in every mode — the correctness floor
+    // a NON-deterministic source pins under auto too — the correctness floor
     val dir2 = tmpDir()
     seed(dir2)
     val acc2 = spark.sparkContext.longAccumulator("ir-src-rows-nondet")
     val bump2 = udf((x: Long) => { acc2.add(1); x }).asNondeterministic()
     val src2 = spark.range(0, 10).select(bump2(col("id")).as("k"),
       concat(lit("s"), col("id")).as("v"))
-    spark.conf.set(graft.commands.MaterializeSource.CONF, "none")
-    try GraftTable.forPath(spark, dir2).insertReplaceUsing(src2, Seq("k"))
-    finally spark.conf.unset(graft.commands.MaterializeSource.CONF)
+    GraftTable.forPath(spark, dir2).insertReplaceUsing(src2, Seq("k"))
     assert(acc2.value === 10L,
       s"non-deterministic source evaluated ${acc2.value} times, want 10")
   }

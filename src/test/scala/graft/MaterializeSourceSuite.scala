@@ -32,10 +32,8 @@ class MaterializeSourceSuite extends AnyFunSuite {
       concat(lit("s"), col("id")).as("v"))
   }
 
-  private def withHook[T](hook: (Int, org.apache.spark.rdd.RDD[_]) => Unit)(f: => T): T = {
-    MaterializeSource.onMaterialized = hook
-    try f finally MaterializeSource.onMaterialized = (_, _) => ()
-  }
+  private def withHook[T](hook: (Int, org.apache.spark.rdd.RDD[_]) => Unit)(f: => T): T =
+    MaterializeSource.onPinned.withValue(hook)(f)
 
   test("block loss on attempt 1 retries the whole command to the same result") {
     val dir = tmpDir()
@@ -61,20 +59,22 @@ class MaterializeSourceSuite extends AnyFunSuite {
     val dir = tmpDir()
     seed(dir)
     val before = Graft.read(spark, dir).as[(Long, String)].collect().toSet
-    spark.conf.set(MaterializeSource.MAX_ATTEMPTS_CONF, "2")
     val acc = spark.sparkContext.longAccumulator("mat-fail-rows")
-    try {
-      val e = intercept[SparkException] {
-        withHook { (_, rdd) => rdd.unpersist(blocking = true) } {
-          GraftTable.forPath(spark, dir)
-            .insertReplaceUsing(nonDetSource(acc), Seq("k"))
-        }
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[SparkException] {
+      withHook { (attempt, rdd) =>
+        attempts.set(attempt)
+        rdd.unpersist(blocking = true)
+      } {
+        GraftTable.forPath(spark, dir)
+          .insertReplaceUsing(nonDetSource(acc), Seq("k"))
       }
-      assert(e.getMessage.contains("materialization lost its checkpointed blocks"),
-        e.getMessage)
-      assert(MaterializeSource.isMaterializedBlockLost(e.getCause),
-        s"cause should be the checkpoint-block-not-found: ${e.getCause}")
-    } finally spark.conf.unset(MaterializeSource.MAX_ATTEMPTS_CONF)
+    }
+    assert(e.getMessage.contains("materialization lost its checkpointed blocks"),
+      e.getMessage)
+    assert(MaterializeSource.isMaterializedBlockLost(e.getCause),
+      s"cause should be the checkpoint-block-not-found: ${e.getCause}")
+    assert(attempts.get === MaterializeSource.LOST_BLOCK_ATTEMPTS)
     val after = Graft.read(spark, dir).as[(Long, String)].collect().toSet
     assert(after === before, "a failed command must not partially commit")
   }
@@ -110,6 +110,16 @@ class MaterializeSourceSuite extends AnyFunSuite {
       }
     } finally spark.conf.unset(MaterializeSource.CONF)
     assert(pinned.get === 0, "passes=1 must skip the pin")
+  }
+
+  test("materializeSource accepts only auto|all") {
+    spark.conf.set(MaterializeSource.CONF, "none")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        MaterializeSource.withPinned(spark.range(3).toDF(), passes = 2)(_.count())
+      }
+      assert(e.getMessage.contains("must be auto|all"), e.getMessage)
+    } finally spark.conf.unset(MaterializeSource.CONF)
   }
 
   test("lost-block detector matches the Spark error and nothing else") {

@@ -1412,38 +1412,31 @@ class MultimodalSuite extends org.scalatest.funsuite.AnyFunSuite {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("u", "v")
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
     val killed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    graft.ml.Clustering.onRoundMaterialized = (attempt, rdd) => {
+    val got = graft.ml.Clustering.connectedComponents(edges, 25, (attempt, rdd) => {
       attempts.set(math.max(attempts.get, attempt))
       // kill the first pinned round once: the next round's read then hits
       // the checkpoint-block-not-found path, exactly like executor loss
       if (attempt == 1 && !killed.getAndSet(true)) rdd.unpersist(blocking = true)
-    }
-    try {
-      val got = graft.ml.Clustering.connectedComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-        10L -> 10L, 11L -> 10L))
-      assert(attempts.get === 2, "loop should have retried exactly once")
-    } finally graft.ml.Clustering.onRoundMaterialized = (_, _) => ()
+    }).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L))
+    assert(attempts.get === 2, "loop should have retried exactly once")
   }
 
   test("connectedComponents: persistent block loss fails loudly") {
     import spark.implicits._
     val edges = Seq((1L, 2L)).toDF("u", "v")
-    spark.conf.set(graft.ml.Clustering.MAX_ATTEMPTS_CONF, "2")
-    graft.ml.Clustering.onRoundMaterialized =
-      (_, rdd) => rdd.unpersist(blocking = true)
-    try {
-      val e = intercept[org.apache.spark.SparkException] {
-        graft.ml.Clustering.connectedComponents(edges).collect()
-      }
-      assert(e.getMessage.contains(
-        "connectedComponents lost its checkpointed label blocks"),
-        e.getMessage)
-    } finally {
-      graft.ml.Clustering.onRoundMaterialized = (_, _) => ()
-      spark.conf.unset(graft.ml.Clustering.MAX_ATTEMPTS_CONF)
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[org.apache.spark.SparkException] {
+      graft.ml.Clustering.connectedComponents(edges, 25, (attempt, rdd) => {
+        attempts.set(attempt)
+        rdd.unpersist(blocking = true)
+      }).collect()
     }
+    assert(e.getMessage.contains(
+      "connectedComponents lost its checkpointed label blocks"),
+      e.getMessage)
+    assert(attempts.get === graft.commands.MaterializeSource.LOST_BLOCK_ATTEMPTS)
   }
 
 }

@@ -12,7 +12,8 @@ import graft.ml.Similarity
   * broadcast of small join sides, metadata-only aggregates, and measured
   * ANN recall. A refactor that silently loses one of these passes every
   * row-level correctness check but dies at 100 TB — these tests pin the
-  * plan shape itself. */
+  * plan shape itself. One source audit rides along: no global mutable
+  * state on the engine's objects. */
 class PlanAuditSuite extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -406,5 +407,47 @@ class PlanAuditSuite extends AnyFunSuite {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  test("no top-level object in src/main/scala declares a var") {
+    // A var on an object is JVM-wide mutable state: concurrent callers
+    // share it, and a test hook left set by a failed test breaks every
+    // later caller. Fault-injection seams are scoped to one call instead.
+    import scala.jdk.CollectionConverters._
+    import scala.reflect.internal.util.BatchSourceFile
+    import scala.reflect.io.AbstractFile
+    import scala.tools.nsc.{Global, Settings}
+    import scala.tools.nsc.reporters.StoreReporter
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root), s"no engine sources at ${root.toAbsolutePath}")
+    val settings = new Settings()
+    settings.usejavacp.value = true
+    val reporter = new StoreReporter(settings)
+    val global = new Global(settings, reporter)
+    import global.{CompilationUnit, ModuleDef, PackageDef, Tree, ValDef}
+    new global.Run
+    def varsOf(obj: ModuleDef, owner: String): List[String] = {
+      val name = owner + obj.name
+      obj.impl.body.flatMap {
+        case v: ValDef if v.mods.isMutable => List(s"$name.${v.name}")
+        case m: ModuleDef => varsOf(m, s"$name.")
+        case _ => Nil
+      }
+    }
+    def topLevel(t: Tree): List[ModuleDef] = t match {
+      case PackageDef(_, stats) => stats.flatMap(topLevel)
+      case m: ModuleDef => List(m)
+      case _ => Nil
+    }
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    val hits = files.flatMap { f =>
+      val unit = new CompilationUnit(
+        new BatchSourceFile(AbstractFile.getFile(f.toFile)))
+      topLevel(global.newUnitParser(unit).parse()).flatMap(varsOf(_, s"$f: "))
+    }
+    assert(!reporter.hasErrors, reporter.infos.mkString("\n"))
+    assert(files.size > 50, s"only ${files.size} sources under $root")
+    assert(hits.isEmpty, s"vars on top-level objects:\n${hits.mkString("\n")}")
   }
 }
