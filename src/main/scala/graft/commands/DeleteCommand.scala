@@ -62,13 +62,7 @@ object Dml {
   /** Exact row count of `files` from their numRecords stats — no scan.
     * None when any file lacks stats (converted tables, foreign writers). */
   def statsRowCount(files: Seq[AddFile]): Option[Long] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val counts = files.map { f =>
-      Option(f.stats).flatMap { j =>
-        val n = mapper.readTree(j).path("numRecords")
-        if (n.isNumber) Some(n.asLong) else None
-      }
-    }
+    val counts = files.map(f => graft.stats.StatsSpace.numRecords(f.stats))
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 }

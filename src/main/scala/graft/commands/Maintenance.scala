@@ -273,12 +273,22 @@ object OptimizeCommand {
         java.util.Arrays.sort(zs)
         cuts(zs, targetFiles - 1)
       }
-    val route = partitionRouting(targetFiles)
-    val clustered = df
-      .withColumn("__zkey", curve(zparts))
-      .withColumn("__route", element_at(lit(route),
-        ZOrder.boundaryBucket(col("__zkey").cast("double"), zBounds) + 1))
-      .repartition(targetFiles, col("__route"))
+    val keyed = df.withColumn("__zkey", curve(zparts))
+    val routed =
+      if (zBounds.nonEmpty || targetFiles <= 1) {
+        val route = partitionRouting(targetFiles)
+        keyed.withColumn("__route", element_at(lit(route),
+            ZOrder.boundaryBucket(col("__zkey").cast("double"), zBounds) + 1))
+          .repartition(targetFiles, col("__route"))
+      } else {
+        // An empty sample (stats that overstate numRecords, or stats-less
+        // files of very wide rows) leaves no cuts: Spark's range
+        // partitioner samples the zkeys itself, and a unique tiebreak
+        // splits even a run of equal zkeys into `targetFiles` outputs.
+        keyed.withColumn("__route", monotonically_increasing_id())
+          .repartitionByRange(targetFiles, col("__zkey"), col("__route"))
+      }
+    val clustered = routed
       .sortWithinPartitions("__zkey")
       .drop("__zkey", "__route")
     txn.writeFiles(clustered, dataChange = false)
@@ -287,16 +297,9 @@ object OptimizeCommand {
   /** Estimated selected-row count from AddFile stats (numRecords), byte
     * heuristic when a file carries none — only steers the sample
     * fraction, never correctness. */
-  private def estimateRows(files: Seq[AddFile]): Long = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    files.map { f =>
-      val n = Option(f.stats).map { s =>
-        try mapper.readTree(s).path("numRecords").asLong(-1L)
-        catch { case _: Exception => -1L }
-      }.getOrElse(-1L)
-      if (n >= 0L) n else math.max(1L, f.size / 64)
-    }.sum
-  }
+  private def estimateRows(files: Seq[AddFile]): Long =
+    files.map(f => graft.stats.StatsSpace.numRecords(f.stats).filter(_ >= 0L)
+      .getOrElse(math.max(1L, f.size / 64))).sum
 
   /** Exact inversion of Spark's `repartition(n, expr)` placement
     * (pmod(murmur3(expr, seed 42), n)): route(b) is an int that lands in

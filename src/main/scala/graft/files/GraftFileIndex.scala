@@ -15,8 +15,10 @@ import graft.stats.StatsSkipping
 /**
  * A `FileIndex` whose listing comes from the transaction log, not the
  * filesystem: partition values are read from each AddFile's
- * `partitionValues` (never parsed from paths), partition filters prune
- * driver-side, and data filters prune via distributed stats skipping.
+ * `partitionValues` (never parsed from paths), and partition filters and
+ * stats skipping prune the file list — in a driver loop of interpreted
+ * predicates below the distributed-skipping threshold, as one filter over
+ * the snapshot's parsed-stats view at or above it.
  * Spark's FileSourceStrategy then plans a vectorized, codegen'd Parquet
  * scan over exactly the surviving files. (Reference concept:
  * files/TahoeFileIndex.scala:53-470 — re-designed.)

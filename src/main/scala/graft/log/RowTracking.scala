@@ -42,8 +42,7 @@ object RowTracking {
       .getOrElse(-1L)
 
   private def numRecords(a: AddFile): Long =
-    Option(a.stats).map(s => mapper.readTree(s).path("numRecords"))
-      .filter(_.isNumber).map(_.asLong).getOrElse(-1L)
+    graft.stats.StatsSpace.numRecords(a.stats).getOrElse(-1L)
 
   /**
    * Assign fresh base row ids to AddFiles that lack one. Returns the
@@ -104,9 +103,10 @@ object RowTracking {
         }
       }.collect().toMap
     ok ++ missing.map { a =>
+      // Malformed stats read as absent: the footer count replaces them.
       val node = Option(a.stats)
-        .map(s => mapper.readTree(s).asInstanceOf[
-          com.fasterxml.jackson.databind.node.ObjectNode])
+        .flatMap(s => scala.util.Try(mapper.readTree(s)).toOption)
+        .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
         .getOrElse(mapper.createObjectNode())
       node.put("numRecords", counts(a.path))
       a.copy(stats = mapper.writeValueAsString(node))

@@ -124,25 +124,18 @@ object GraftRuleUtil {
       case _ => None
     }
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def logicalCount(f: graft.log.AddFile): Option[Long] =
+    graft.stats.StatsSpace.numRecords(f.stats).map(_ - f.dvCardinality.getOrElse(0L))
 
   /** LOGICAL numRecords per file (physical stats minus deletion-vector
     * cardinality); None if any file lacks stats. */
   def numRecords(index: GraftFileIndex): Option[Seq[Long]] = {
-    val counts = index.files.map { f =>
-      Option(f.stats).map(s => mapper.readTree(s).path("numRecords"))
-        .filter(_.isNumber)
-        .map(_.asLong - f.dvCardinality.getOrElse(0L))
-    }
+    val counts = index.files.map(logicalCount)
     if (counts.forall(_.isDefined)) Some(counts.flatten) else None
   }
 
   /** Logical row count of one file; -1 when stats are absent. */
-  def logicalRows(f: graft.log.AddFile): Long =
-    Option(f.stats).map(s => mapper.readTree(s).path("numRecords"))
-      .filter(_.isNumber)
-      .map(_.asLong - f.dvCardinality.getOrElse(0L))
-      .getOrElse(-1L)
+  def logicalRows(f: graft.log.AddFile): Long = logicalCount(f).getOrElse(-1L)
 }
 
 /** COUNT(*) / MIN(col) / MAX(col) with no filters or groups, answered

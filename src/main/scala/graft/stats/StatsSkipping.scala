@@ -1,20 +1,25 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedExtractValue}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.log.AddFile
 
 /**
  * File-pruning from per-file min/max/nullCount statistics: data predicates
- * are compiled into a "stats-space" predicate and evaluated AS A SPARK JOB
- * over the `Dataset[AddFile]` — metadata-scale work distributes across the
- * cluster, so skipping stays cheap even with millions of files.
+ * are compiled into ONE resolved "stats-space" Catalyst predicate over the
+ * parsed stats struct, evaluated in one of two venues. Below the
+ * distributed threshold a plain driver loop parses each file's stats and
+ * runs the interpreted predicate: no plan, no analyzer, no generated code,
+ * no job. At or above it the same predicate runs as a filter over the
+ * snapshot's cached parsed-stats view, so metadata-scale work distributes.
  * (Reference concept: stats/DataSkippingReader.scala:612-705 +
- * DataFiltersBuilder.scala:263-436 — re-designed for DataFrame eval.)
+ * DataFiltersBuilder.scala:263-436 — re-designed.)
  *
  * Soundness: any sub-predicate we cannot compile, and any file whose stats
  * are missing/unparseable, KEEPS the file (three-valued logic resolved
@@ -29,8 +34,10 @@ object StatsSkipping {
     StatsSpace.statsDocSchema(dataSchema)
 
   /**
-   * Prune `files` using data filters. Returns the surviving files.
-   * Runs distributed when there are files+filters; otherwise passthrough.
+   * Prune `files` using data filters on the driver. Returns the surviving
+   * files. Each file's stats JSON is parsed by the same `from_json`
+   * expression (schema, options, session time zone) the distributed
+   * venue uses, so malformed, partial and nested stats resolve alike.
    */
   def filterFiles(
       spark: SparkSession,
@@ -43,27 +50,38 @@ object StatsSkipping {
     // schema keeps compile() from emitting stats-space predicates for
     // columns that were never collected.
     val statsVisible = StructType(statsColumns.select(dataSchema))
-    val preds = dataFilters.flatMap(f => compile(f, statsVisible))
-    if (preds.isEmpty) return files
-    import spark.implicits._
-    val withStats = spark.createDataset(files)
-      .withColumn("_parsed", from_json(col("stats"), statsSchema(statsVisible)))
-    val keep = preds.map(p => coalesce(p, lit(true))).reduce(_ && _)
-    withStats
-      .where(col("_parsed").isNull || col("stats").isNull || keep)
-      .drop("_parsed")
-      .as[AddFile]
-      .collect()
-      .toSeq
+    val keep = compileAll(dataFilters, statsVisible).getOrElse(return files)
+    val parse = JsonToStructs(statsSchema(statsVisible), Map.empty,
+      BoundReference(0, StringType, nullable = true),
+      Some(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)))
+    val pred = Predicate.createInterpreted(keep)
+    pred.initialize(0)
+    val json, parsed = new GenericInternalRow(1)
+    files.filter { f =>
+      f.stats == null || {
+        json.update(0, UTF8String.fromString(f.stats))
+        val doc = parse.eval(json)
+        doc == null || { parsed.update(0, doc); pred.eval(parsed) }
+      }
+    }
+  }
+
+  /** The conjunction of every compilable filter, each null resolved to
+    * "keep"; None when no filter compiles. */
+  private def compileAll(filters: Seq[Expression], statsVisible: StructType)
+      : Option[Expression] = {
+    val preds = filters.flatMap(f => compile(f, statsVisible))
+    if (preds.isEmpty) None else Some(preds.map(orTrue).reduce(And))
   }
 
   /** Unified file selection: partition pruning + stats skipping, choosing
     * the execution venue by file count. Below the threshold (or for a
-    * pinned DML candidate subset) the driver path runs — a tight local
-    * loop plus one small local job. At or above it, both phases run as
-    * ONE distributed filter over the snapshot's cached parsed-stats view,
-    * so a 10M-file table neither re-serializes its file list per query
-    * nor prunes partitions in a single driver thread. */
+    * pinned DML candidate subset) both phases are interpreted predicates
+    * in a driver loop — no Spark job, no plan, no generated code. At or
+    * above it, both phases run as ONE distributed filter over the
+    * snapshot's cached parsed-stats view, so a 10M-file table neither
+    * re-serializes its file list per query nor prunes partitions in a
+    * single driver thread. */
   def pruneAndFilter(
       spark: SparkSession,
       snapshot: graft.log.Snapshot,
@@ -117,10 +135,9 @@ object StatsSkipping {
       }
       conds += SparkShims.column(mapped)
     }
-    val preds = dataFilters.flatMap(f => compile(f, statsVisible))
-    if (preds.nonEmpty) {
-      val keep = preds.map(p => coalesce(p, lit(true))).reduce(_ && _)
-      conds += (col("_parsed").isNull || col("stats").isNull || keep)
+    compileAll(dataFilters, statsVisible).foreach { keep =>
+      conds += (col("_parsed").isNull || col("stats").isNull ||
+        SparkShims.column(byName(keep)))
     }
     val all = conds.result()
     // Nothing compiled to a pushable condition: the answer is the full
@@ -132,17 +149,31 @@ object StatsSkipping {
     view.where(all.reduce(_ && _)).drop("_parsed").as[AddFile].collect().toSeq
   }
 
-  private def stat(section: String, name: String): Column =
-    col("_parsed").getField(section).getField(name)
+  /** Rebind a compiled predicate from the driver venue's bound stats row
+    * to the view's `_parsed` column, resolving every stats field BY NAME
+    * (the view's schema is its first caller's). */
+  private def byName(keep: Expression): Expression = keep.transformUp {
+    case _: BoundReference => UnresolvedAttribute("_parsed")
+    case GetStructField(child, _, Some(name)) => UnresolvedExtractValue(child, Literal(name))
+  }
 
-  private def litOf(l: Literal): Option[Column] = l.dataType match {
+  private def orTrue(e: Expression): Expression = Coalesce(Seq(e, Literal.TrueLiteral))
+
+  /** Literal types that min/max stats are collected for. */
+  private def statsLiteral(l: Literal): Boolean = l.value != null && (l.dataType match {
     case _: IntegerType | _: LongType | _: ShortType | _: ByteType |
          _: DoubleType | _: FloatType | _: StringType | _: BooleanType |
-         _: DateType | _: TimestampType =>
-      Option(l.value).map { _ =>
-        lit(CatalystTypeConverters.createToScalaConverter(l.dataType)(l.value))
-      }
-    case _ => None
+         _: DateType | _: TimestampType => true
+    case _ => false
+  })
+
+  /** The type the analyzer compares two different types in, where this
+    * compiler can apply it without one: the wider of two non-decimal
+    * numerics. Any other mix is undecidable here (the file is kept). */
+  private def widerNumeric(a: DataType, b: DataType): Option[DataType] = {
+    val order = Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+    val (i, j) = (order.indexOf(a), order.indexOf(b))
+    if (i < 0 || j < 0) None else Some(order(math.max(i, j)))
   }
 
   /** Stats min/max are byte-ordered (parquet footer order). A string
@@ -151,75 +182,83 @@ object StatsSkipping {
     * file whose matches sort outside the byte range — those columns are
     * invisible to skipping (the reference makes the same choice for
     * collated columns in its skipping logic). */
-  private def statsComparable(dt: org.apache.spark.sql.types.DataType): Boolean =
+  private def statsComparable(dt: DataType): Boolean =
     dt match {
       case st: StringType => st == StringType
       case _ => true
     }
 
-  private def attrName(e: Expression, schema: StructType): Option[String] = {
+  private def attrField(e: Expression, schema: StructType): Option[StructField] = {
     val name = e match {
       case a: AttributeReference => Some(a.name)
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        Some(u.nameParts.last)
+      case u: UnresolvedAttribute => Some(u.nameParts.last)
       case _ => None
     }
     name.flatMap(n => schema.fields.find(_.name.equalsIgnoreCase(n))
-      .filter(f => statsComparable(f.dataType)).map(_.name))
+      .filter(f => statsComparable(f.dataType)))
   }
 
   /**
-   * Compile one data predicate into a stats-space predicate Column.
-   * None = cannot decide from stats (file must be kept).
+   * Compile one data predicate into a resolved stats-space predicate over
+   * `BoundReference(0, statsSchema(schema))`, the parsed stats document.
+   * No analyzer runs over it, so every comparison is built in its final
+   * types. None = cannot decide from stats (file must be kept).
    */
-  def compile(e: Expression, schema: StructType): Option[Column] = e match {
-    case And(l, r) =>
-      (compile(l, schema), compile(r, schema)) match {
-        case (Some(a), Some(b)) => Some(coalesce(a, lit(true)) && coalesce(b, lit(true)))
-        case (Some(a), None) => Some(a)
-        case (None, Some(b)) => Some(b)
-        case _ => None
-      }
-    case Or(l, r) =>
-      for (a <- compile(l, schema); b <- compile(r, schema))
-        yield coalesce(a, lit(true)) || coalesce(b, lit(true))
-    case EqualTo(a, l: Literal) =>
-      attrName(a, schema).flatMap(n => litOf(l).map(v =>
-        stat("minValues", n) <= v && stat("maxValues", n) >= v))
-    case EqualTo(l: Literal, a) => compile(EqualTo(a, l), schema)
-    case LessThan(a, l: Literal) =>
-      attrName(a, schema).flatMap(n => litOf(l).map(v => stat("minValues", n) < v))
-    case LessThan(l: Literal, a) => compile(GreaterThan(a, l), schema)
-    case LessThanOrEqual(a, l: Literal) =>
-      attrName(a, schema).flatMap(n => litOf(l).map(v => stat("minValues", n) <= v))
-    case LessThanOrEqual(l: Literal, a) => compile(GreaterThanOrEqual(a, l), schema)
-    case GreaterThan(a, l: Literal) =>
-      attrName(a, schema).flatMap(n => litOf(l).map(v => stat("maxValues", n) > v))
-    case GreaterThan(l: Literal, a) => compile(LessThan(a, l), schema)
-    case GreaterThanOrEqual(a, l: Literal) =>
-      attrName(a, schema).flatMap(n => litOf(l).map(v => stat("maxValues", n) >= v))
-    case GreaterThanOrEqual(l: Literal, a) => compile(LessThanOrEqual(a, l), schema)
-    case IsNull(a) =>
-      attrName(a, schema).map(n => stat("nullCount", n) > lit(0L))
-    case IsNotNull(a) =>
-      attrName(a, schema).map(n =>
-        stat("nullCount", n) < col("_parsed").getField("numRecords"))
-    case In(a, list) if list.nonEmpty && list.forall(_.isInstanceOf[Literal]) =>
-      attrName(a, schema).flatMap { n =>
-        val opts = list.map(l => litOf(l.asInstanceOf[Literal]))
-        if (opts.exists(_.isEmpty) || opts.size > 100) None
-        else Some(opts.flatten.map(v =>
-          stat("minValues", n) <= v && stat("maxValues", n) >= v).reduce(_ || _))
-      }
-    case StartsWith(a, l @ Literal(_, StringType)) =>
-      attrName(a, schema).flatMap { n =>
-        litOf(l).map { _ =>
-          val prefix = l.value.toString
-          val len = prefix.length
-          substring(stat("minValues", n), 0, len) <= lit(prefix) &&
-            substring(stat("maxValues", n), 0, len) >= lit(prefix)
+  def compile(e: Expression, schema: StructType): Option[Expression] = {
+    val parsed = BoundReference(0, statsSchema(schema), nullable = true)
+    def field(of: Expression, name: String): Expression =
+      GetStructField(of, of.dataType.asInstanceOf[StructType].fieldIndex(name), Some(name))
+    def stat(section: String, name: String): Expression = field(field(parsed, section), name)
+    /** `op(stat, l)` in the type the analyzer would compare them in. */
+    def cmp(a: Expression, l: Literal, section: String)(
+        op: (Expression, Expression) => Expression): Option[Expression] =
+      attrField(a, schema).filter(_ => statsLiteral(l)).flatMap { f =>
+        val s = stat(section, f.name)
+        if (f.dataType == l.dataType) Some(op(s, l))
+        else widerNumeric(f.dataType, l.dataType).map { t =>
+          def to(e: Expression): Expression = if (e.dataType == t) e else Cast(e, t)
+          op(to(s), Literal(to(l).eval(), t))
         }
       }
-    case _ => None
+    def within(a: Expression, l: Literal): Option[Expression] =
+      for (lo <- cmp(a, l, "minValues")(LessThanOrEqual);
+           hi <- cmp(a, l, "maxValues")(GreaterThanOrEqual)) yield And(lo, hi)
+    def atomic(a: Expression): Option[String] =
+      attrField(a, schema).filterNot(_.dataType.isInstanceOf[StructType]).map(_.name)
+    def go(e: Expression): Option[Expression] = e match {
+      case And(l, r) =>
+        (go(l), go(r)) match {
+          case (Some(a), Some(b)) => Some(And(orTrue(a), orTrue(b)))
+          case (a, b) => a.orElse(b)
+        }
+      case Or(l, r) =>
+        for (a <- go(l); b <- go(r)) yield Or(orTrue(a), orTrue(b))
+      case EqualTo(a, l: Literal) => within(a, l)
+      case EqualTo(l: Literal, a) => within(a, l)
+      case LessThan(a, l: Literal) => cmp(a, l, "minValues")(LessThan)
+      case LessThan(l: Literal, a) => cmp(a, l, "maxValues")(GreaterThan)
+      case LessThanOrEqual(a, l: Literal) => cmp(a, l, "minValues")(LessThanOrEqual)
+      case LessThanOrEqual(l: Literal, a) => cmp(a, l, "maxValues")(GreaterThanOrEqual)
+      case GreaterThan(a, l: Literal) => cmp(a, l, "maxValues")(GreaterThan)
+      case GreaterThan(l: Literal, a) => cmp(a, l, "minValues")(LessThan)
+      case GreaterThanOrEqual(a, l: Literal) => cmp(a, l, "maxValues")(GreaterThanOrEqual)
+      case GreaterThanOrEqual(l: Literal, a) => cmp(a, l, "minValues")(LessThanOrEqual)
+      case IsNull(a) =>
+        atomic(a).map(n => GreaterThan(stat("nullCount", n), Literal(0L)))
+      case IsNotNull(a) =>
+        atomic(a).map(n => LessThan(stat("nullCount", n), field(parsed, "numRecords")))
+      case In(a, list) if list.nonEmpty && list.size <= 100 &&
+          list.forall(_.isInstanceOf[Literal]) =>
+        val each = list.map(l => within(a, l.asInstanceOf[Literal]))
+        if (each.exists(_.isEmpty)) None else Some(each.flatten.reduce(Or))
+      case StartsWith(a, l @ Literal(v, StringType)) if v != null =>
+        val len = Literal(v.asInstanceOf[UTF8String].numChars())
+        def prefix(s: Expression) = Substring(s, Literal(0), len)
+        for (lo <- cmp(a, l, "minValues")((s, p) => LessThanOrEqual(prefix(s), p));
+             hi <- cmp(a, l, "maxValues")((s, p) => GreaterThanOrEqual(prefix(s), p)))
+          yield And(lo, hi)
+      case _ => None
+    }
+    go(e)
   }
 }

@@ -47,6 +47,16 @@ object StatsSpace {
     case _ => LongType
   }
 
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A stats document's `numRecords`: the one reader of row counts from
+    * stats. None when the stats are absent, malformed, or carry no
+    * numeric count — the same "no stats" that skipping keeps a file for. */
+  def numRecords(stats: String): Option[Long] =
+    if (stats == null) None
+    else try Some(mapper.readTree(stats).path("numRecords")).filter(_.isNumber).map(_.asLong)
+    catch { case _: java.io.IOException => None }
+
   /** Schema of the per-file stats JSON for an ALREADY stats-projected
     * value schema (all fields forced nullable — any file may omit any
     * stat). */

@@ -250,6 +250,32 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(Graft.read(spark, dir).count() === lineitem.count())
   }
 
+  test("zorder with an empty sample still splits into the target file count") {
+    // Stats that overstate numRecords shrink the sample fraction until no
+    // row is drawn; with no zkey cuts the rewrite must still spread the
+    // rows over its target file count instead of one giant file.
+    val dir = tmpDir()
+    val maxSize = 16384L
+    Graft.write(lineitem.limit(0), dir,
+      configuration = Map("graft.optimize.maxFileSize" -> maxSize.toString))
+    val txn = GraftLog.forTable(spark, dir).startTransaction()
+    val adds = txn.writeFiles(lineitem.repartition(2), dataChange = true)
+    assert(adds.forall(a => graft.stats.StatsSpace.numRecords(a.stats).isDefined))
+    txn.commit(adds.map(a => a.copy(stats = a.stats.replaceFirst(
+      "\"numRecords\":\\d+", "\"numRecords\":1000000000000"))), "WRITE")
+    val targetFiles = (GraftTable.forPath(spark, dir).snapshot.allFiles
+      .map(_.size).sum / maxSize).toInt
+    assert(targetFiles > 4)
+    GraftTable.forPath(spark, dir).optimize().executeZOrderBy("l_orderkey", "l_partkey")
+    val files = GraftTable.forPath(spark, dir).snapshot.allFiles.filter(f =>
+      graft.stats.StatsSpace.numRecords(f.stats).exists(_ > 0))
+    assert(files.size > targetFiles / 2,
+      s"expected about $targetFiles files, got ${files.size}")
+    assert(files.map(f => graft.stats.StatsSpace.numRecords(f.stats).get).sum
+      === lineitem.count())
+    assert(Graft.read(spark, dir).exceptAll(lineitem).isEmpty)
+  }
+
   test("partitionRouting inverts repartition placement exactly") {
     import org.apache.spark.sql.functions.spark_partition_id
     Seq(1, 2, 7, 37, 256).foreach { n =>

@@ -409,6 +409,54 @@ class PlanAuditSuite extends AnyFunSuite {
     }
   }
 
+  test("small-list stats skipping runs no Spark job and compiles no code") {
+    // Every read and DML scan skips files through this path: a plan per
+    // call, or generated code baked with each query's literals, is paid
+    // on every op. Two calls with fresh literals must add neither.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+      GreaterThanOrEqual, LessThanOrEqual, Literal}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.types.LongType
+    val dir = tmpDir()
+    (0 until 4).foreach(i =>
+      Graft.write(spark.range(i * 100L, (i + 1) * 100L).toDF("id").coalesce(1), dir))
+    val snap = graft.log.GraftLog.forTable(spark, dir).update()
+    val id = AttributeReference("id", LongType)()
+    def kept(lo: Long): Int = graft.stats.StatsSkipping.filterFiles(spark,
+      snap.allFiles, snap.metadata.schema,
+      Seq(And(GreaterThanOrEqual(id, Literal(lo)), LessThanOrEqual(id, Literal(lo + 20)))))
+      .size
+    assert(snap.allFiles.size === 4)
+    assert(kept(0L) === 1) // warm-up: class loading only
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.audit")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.audit", "skip")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(kept(150L) === 1 && kept(290L) === 2)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+        "stats skipping compiled generated code")
+      // The listener bus delivers in order: once the sentinel job is
+      // seen, every job the skipping calls started has been seen too.
+      sc.setLocalProperty("graft.audit", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("sentinel"), "listener never saw the sentinel job")
+      assert(!jobs.contains("skip"), "stats skipping ran a Spark job")
+    } finally {
+      sc.setLocalProperty("graft.audit", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("no top-level object in src/main/scala declares a var") {
     // A var on an object is JVM-wide mutable state: concurrent callers
     // share it, and a test hook left set by a failed test breaks every

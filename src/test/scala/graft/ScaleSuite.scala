@@ -71,6 +71,118 @@ class ScaleSuite extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.distributedSkipping.threshold")
   }
 
+  test("skipping venues agree and stay sound over a seeded predicate matrix") {
+    import java.time.{Instant, LocalDate}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graftshim.SparkShims
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = Files.createTempDirectory("graft-skipfuzz").toString
+    // One row per id; `i` is null on every 7th, `c` is a UTF8_LCASE string
+    // whose byte order differs from its collation order.
+    def rows(lo: Long, hi: Long, allNull: Boolean = false): DataFrame = {
+      val base = spark.range(lo, hi).select(
+        col("id").as("l"),
+        when(col("id") % 7 =!= 0, col("id").cast("int")).as("i"),
+        format_string("k%03d", col("id")).as("s"),
+        date_add(lit("2020-01-01").cast("date"), col("id").cast("int")).as("d"),
+        timestamp_seconds(col("id") * 3600).as("ts"),
+        (col("id") < 150).as("b"),
+        expr("collate(CASE WHEN id % 2 = 0 THEN format_string('k%03d', id) " +
+          "ELSE format_string('K%03d', id) END, 'UTF8_LCASE')").as("c"))
+      val out = if (allNull) base.select(base.columns.map(n =>
+        when(lit(false), col(n)).as(n)): _*) else base
+      out.coalesce(1)
+    }
+    (0 until 4).foreach(k => Graft.write(rows(k * 100L, (k + 1) * 100L), dir))
+    Graft.write(rows(500, 520, allNull = true), dir) // no min/max at all
+    // files whose stats are missing, or not JSON at all
+    val txn = GraftLog.forTable(spark, dir).startTransaction()
+    val nullStats = txn.writeFiles(rows(400, 450), dataChange = true)
+      .map(_.copy(stats = null))
+    val badStats = txn.writeFiles(rows(450, 500), dataChange = true)
+      .map(_.copy(stats = "{\"numRecords\":50,\"minValues\":{\"l\":"))
+    txn.commit(nullStats ++ badStats, "WRITE")
+    val snap = GraftLog.forTable(spark, dir).update()
+    val schema = snap.metadata.schema
+    val collated = schema("c").dataType
+    assert(collated != StringType)
+    val files = snap.allFiles
+    assert(files.size === 7)
+    val scan = Graft.read(spark, dir).withColumn("_file", input_file_name()).cache()
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+
+    val rnd = new scala.util.Random(20261018L)
+    val cols = Seq("l", "i", "s", "d", "ts", "b", "c")
+    def n(): Int = rnd.nextInt(540) - 10
+    def value(c: String): Literal = c match {
+      case "l" => Literal(n().toLong)
+      case "i" => Literal(n())
+      case "s" => Literal(f"k${n()}%03d")
+      case "d" => Literal(LocalDate.of(2020, 1, 1).plusDays(n()))
+      case "ts" => Literal(Instant.ofEpochSecond(n() * 3600L))
+      case "b" => Literal(rnd.nextBoolean())
+      case "c" => Literal.create(UTF8String.fromString(f"K${n()}%03d"), collated)
+    }
+    // a literal of another type than its column's, as hand-built filters carry
+    def foreign(c: String): Literal = c match {
+      case "l" => if (rnd.nextBoolean()) Literal(n()) else Literal(n() + 0.5)
+      case "i" => Literal(n().toLong)
+      case "d" => Literal(Instant.ofEpochSecond(n() * 86400L + 1577836800L))
+      case _ => value(c)
+    }
+    def leaf(): Expression = {
+      val c = cols(rnd.nextInt(cols.size))
+      val a = UnresolvedAttribute(c)
+      rnd.nextInt(10) match {
+        case k if k < 5 =>
+          val v = if (rnd.nextInt(3) == 0) foreign(c) else value(c)
+          val ops = Seq[(Expression, Expression) => Expression](
+            EqualTo, LessThan, LessThanOrEqual, GreaterThan, GreaterThanOrEqual)
+          val op = ops(rnd.nextInt(ops.size))
+          if (rnd.nextBoolean()) op(a, v) else op(v, a)
+        case 5 =>
+          val size = if (rnd.nextInt(3) == 0) 101 + rnd.nextInt(20) else 1 + rnd.nextInt(5)
+          In(a, Seq.fill(size)(value(c)))
+        case 6 =>
+          val t = if (rnd.nextBoolean()) "s" else "c"
+          val v = value(t)
+          val prefix = v.value.toString.take(1 + rnd.nextInt(3))
+          StartsWith(UnresolvedAttribute(t),
+            Literal.create(UTF8String.fromString(prefix), v.dataType))
+        case 7 => IsNull(a)
+        case _ => IsNotNull(a)
+      }
+    }
+    def pred(depth: Int): Expression =
+      if (depth == 0 || rnd.nextInt(3) == 0) leaf()
+      else if (rnd.nextBoolean()) And(pred(depth - 1), pred(depth - 1))
+      else Or(pred(depth - 1), pred(depth - 1))
+    def skip(p: Expression): Set[String] = graft.stats.StatsSkipping.pruneAndFilter(
+      spark, snap, None, new StructType(), Nil, schema, Seq(p)).map(_.path).toSet
+
+    var pruned = 0
+    (0 until 60).foreach { _ =>
+      val p = pred(2)
+      val driver = skip(p)
+      spark.conf.set("spark.graft.distributedSkipping.threshold", "1")
+      val dist = try skip(p)
+        finally spark.conf.unset("spark.graft.distributedSkipping.threshold")
+      assert(dist === driver, s"venues diverged for $p")
+      val matching = scan.where(SparkShims.column(p)).select("_file").distinct()
+        .collect().map(r => name(r.getString(0))).toSet
+      val keptNames = driver.map(name)
+      assert(matching.subsetOf(keptNames),
+        s"dropped a file with matching rows for $p: ${matching -- keptNames}")
+      if (driver.size < files.size) pruned += 1
+    }
+    assert(pruned > 10, s"only $pruned of 60 predicates pruned any file")
+    scan.unpersist()
+  }
+
   test("1M-AddFile checkpoint cold-loads and advances without collect") {
     val dir = Files.createTempDirectory("graft-scale").toString
     Graft.create(spark, dir, new StructType().add("id", LongType))
