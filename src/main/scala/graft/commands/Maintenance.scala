@@ -239,8 +239,11 @@ object OptimizeCommand {
     val want = math.min(1000000L, math.max(10000L, targetFiles * 200L))
     val estRows = estimateRows(files)
     val fraction = math.min(1.0, want.toDouble / math.max(estRows, 1L))
-    val sampled = probe.sample(withReplacement = false, fraction, seed = 42)
-      .collect()
+    // Stats that overstate numRecords (or stats-less files of very wide
+    // rows) can shrink the fraction until no row is drawn; the leading
+    // rows then stand in, so a non-empty table always yields cuts.
+    val sampled = Some(probe.sample(withReplacement = false, fraction, seed = 42)
+      .collect()).filter(_.nonEmpty).getOrElse(probe.limit(want.toInt).collect())
     def cuts(sorted: Array[Double], k: Int): Array[Double] =
       (1 to k).map(j => sorted(math.min(sorted.length - 1,
         (j.toLong * sorted.length / (k + 1)).toInt))).toArray
@@ -273,22 +276,12 @@ object OptimizeCommand {
         java.util.Arrays.sort(zs)
         cuts(zs, targetFiles - 1)
       }
-    val keyed = df.withColumn("__zkey", curve(zparts))
-    val routed =
-      if (zBounds.nonEmpty || targetFiles <= 1) {
-        val route = partitionRouting(targetFiles)
-        keyed.withColumn("__route", element_at(lit(route),
-            ZOrder.boundaryBucket(col("__zkey").cast("double"), zBounds) + 1))
-          .repartition(targetFiles, col("__route"))
-      } else {
-        // An empty sample (stats that overstate numRecords, or stats-less
-        // files of very wide rows) leaves no cuts: Spark's range
-        // partitioner samples the zkeys itself, and a unique tiebreak
-        // splits even a run of equal zkeys into `targetFiles` outputs.
-        keyed.withColumn("__route", monotonically_increasing_id())
-          .repartitionByRange(targetFiles, col("__zkey"), col("__route"))
-      }
-    val clustered = routed
+    val route = partitionRouting(targetFiles)
+    val clustered = df
+      .withColumn("__zkey", curve(zparts))
+      .withColumn("__route", element_at(lit(route),
+        ZOrder.boundaryBucket(col("__zkey").cast("double"), zBounds) + 1))
+      .repartition(targetFiles, col("__route"))
       .sortWithinPartitions("__zkey")
       .drop("__zkey", "__route")
     txn.writeFiles(clustered, dataChange = false)

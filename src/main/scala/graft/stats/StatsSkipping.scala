@@ -167,15 +167,6 @@ object StatsSkipping {
     case _ => false
   })
 
-  /** The type the analyzer compares two different types in, where this
-    * compiler can apply it without one: the wider of two non-decimal
-    * numerics. Any other mix is undecidable here (the file is kept). */
-  private def widerNumeric(a: DataType, b: DataType): Option[DataType] = {
-    val order = Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
-    val (i, j) = (order.indexOf(a), order.indexOf(b))
-    if (i < 0 || j < 0) None else Some(order(math.max(i, j)))
-  }
-
   /** Stats min/max are byte-ordered (parquet footer order). A string
     * column under a non-default collation (e.g. UTF8_LCASE) orders
     * differently, so a stats-space comparison could wrongly prune a
@@ -201,25 +192,21 @@ object StatsSkipping {
   /**
    * Compile one data predicate into a resolved stats-space predicate over
    * `BoundReference(0, statsSchema(schema))`, the parsed stats document.
-   * No analyzer runs over it, so every comparison is built in its final
-   * types. None = cannot decide from stats (file must be kept).
+   * No analyzer runs over it, so a comparison is built only where the
+   * literal already has its column's type. None = cannot decide from
+   * stats (file must be kept).
    */
   def compile(e: Expression, schema: StructType): Option[Expression] = {
     val parsed = BoundReference(0, statsSchema(schema), nullable = true)
     def field(of: Expression, name: String): Expression =
       GetStructField(of, of.dataType.asInstanceOf[StructType].fieldIndex(name), Some(name))
     def stat(section: String, name: String): Expression = field(field(parsed, section), name)
-    /** `op(stat, l)` in the type the analyzer would compare them in. */
+    /** `op(stat, l)`; a literal of another type than its column's keeps
+      * the file (analyzed filters arrive with their types coerced). */
     def cmp(a: Expression, l: Literal, section: String)(
         op: (Expression, Expression) => Expression): Option[Expression] =
-      attrField(a, schema).filter(_ => statsLiteral(l)).flatMap { f =>
-        val s = stat(section, f.name)
-        if (f.dataType == l.dataType) Some(op(s, l))
-        else widerNumeric(f.dataType, l.dataType).map { t =>
-          def to(e: Expression): Expression = if (e.dataType == t) e else Cast(e, t)
-          op(to(s), Literal(to(l).eval(), t))
-        }
-      }
+      attrField(a, schema).filter(f => statsLiteral(l) && f.dataType == l.dataType)
+        .map(f => op(stat(section, f.name), l))
     def within(a: Expression, l: Literal): Option[Expression] =
       for (lo <- cmp(a, l, "minValues")(LessThanOrEqual);
            hi <- cmp(a, l, "maxValues")(GreaterThanOrEqual)) yield And(lo, hi)

@@ -274,6 +274,18 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(files.map(f => graft.stats.StatsSpace.numRecords(f.stats).get).sum
       === lineitem.count())
     assert(Graft.read(spark, dir).exceptAll(lineitem).isEmpty)
+    // The rows are z-ordered, not split in input order: each output file
+    // covers a slice of the l_orderkey range, not the whole of it.
+    import org.apache.spark.sql.functions.{input_file_name, max, min}
+    val Array(lo, hi) = lineitem.agg(min("l_orderkey"), max("l_orderkey")).head()
+      .toSeq.map(_.asInstanceOf[Number].longValue).toArray
+    val widths = Graft.read(spark, dir).groupBy(input_file_name())
+      .agg(min("l_orderkey"), max("l_orderkey")).collect()
+      .map(r => r.getAs[Number](2).longValue - r.getAs[Number](1).longValue)
+    assert(widths.length === files.size)
+    assert(widths.forall(_ < hi - lo), s"a file spans the whole key range: ${widths.toSeq}")
+    assert(widths.sum < files.size * (hi - lo) * 3 / 4,
+      s"files are not clustered on l_orderkey: ${widths.toSeq} of ${hi - lo}")
   }
 
   test("partitionRouting inverts repartition placement exactly") {

@@ -88,6 +88,30 @@ class RowTrackingSuite extends AnyFunSuite {
     assert(idsOf(dir).size === 25)
   }
 
+  test("malformed stats read as absent: COUNT(*) scans, backfill takes the footer count") {
+    val dir = tmpDir()
+    Graft.write(spark.range(10).toDF("id").coalesce(1), dir)
+    val txn = GraftLog.forTable(spark, dir).startTransaction()
+    val bad = txn.writeFiles(spark.range(10, 15).toDF("id").coalesce(1), dataChange = true)
+      .map(_.copy(stats = "{\"numRecords\":5,\"minValues\":{\"id\":"))
+    txn.commit(bad, "WRITE")
+    assert(graft.stats.StatsSpace.numRecords(bad.head.stats).isEmpty)
+    // no metadata answer from a file without a readable count: a real scan
+    val counted = Graft.read(spark, dir).groupBy().count()
+    val plan = counted.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("LocalRelation"), s"expected a scan in:\n$plan")
+    assert(counted.head.getLong(0) === 15L)
+    // backfill reads the malformed file's count from its parquet footer
+    GraftTable.forPath(spark, dir)
+      .upsertProperties(Map("graft.enableRowTracking" -> "true"))
+    val fixed = GraftTable.forPath(spark, dir).snapshot.allFiles
+      .find(_.path == bad.head.path).get
+    assert(graft.stats.StatsSpace.numRecords(fixed.stats) === Some(5L))
+    assert(fixed.baseRowId === Some(10L))
+    assert(idsOf(dir).values.toSet === (0L until 15L).toSet)
+    assert(Graft.read(spark, dir).count() === 15L)
+  }
+
   test("backfill batches commit bounded and survive a pre-assigned mix") {
     val dir = tmpDir()
     (0 until 4).foreach(i =>

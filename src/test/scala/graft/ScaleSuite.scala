@@ -127,7 +127,7 @@ class ScaleSuite extends AnyFunSuite {
       case "b" => Literal(rnd.nextBoolean())
       case "c" => Literal.create(UTF8String.fromString(f"K${n()}%03d"), collated)
     }
-    // a literal of another type than its column's, as hand-built filters carry
+    // a literal of another type than its column's: skipping must keep the file
     def foreign(c: String): Literal = c match {
       case "l" => if (rnd.nextBoolean()) Literal(n()) else Literal(n() + 0.5)
       case "i" => Literal(n().toLong)
