@@ -884,7 +884,7 @@ object ConvertFromDeltaCommand {
         .write.mode("overwrite")
         .parquet(FileNames.checkpointFile(log.logPath, 0L).toString)
       log.store.writeOverwrite(FileNames.lastCheckpointFile(log.logPath),
-        s"""{"version":0,"size":${small.size + n}}""")
+        Actions.lastCheckpointToJson(LastCheckpoint(0L, small.size + n)))
       log.store.writeOverwrite(FileNames.checksumFile(log.logPath, 0L),
         Actions.checksumToJson(VersionChecksum(
           tableSizeBytes = totalBytes,

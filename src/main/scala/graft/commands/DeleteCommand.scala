@@ -177,14 +177,7 @@ object DeleteCommand {
           }
       }
 
-      // First deletion vector on this table: gate readers that would
-      // otherwise ignore the dvPath field and resurrect deleted rows.
-      val protocolBump: Seq[Action] =
-        if (adds.exists(_.dvPath.isDefined))
-          TableFeatures.requiredUpgrade(txn.snapshot.protocol, m,
-            TableFeatures.deletionVectors).toSeq
-        else Nil
-      txn.commit(protocolBump ++ removes ++ adds ++ cdcActions, "DELETE",
+      txn.commit(removes ++ adds ++ cdcActions, "DELETE",
         operationParameters = condition.map(c => "predicate" -> c.toString).toMap,
         operationMetrics = metrics)
       metrics
@@ -320,15 +313,10 @@ object UpdateCommand {
           val post = updatedRows.withColumn(Cdc.CHANGE_TYPE, lit("update_postimage"))
           Cdc.writeChangeFiles(spark, log, pre.unionByName(post))
         } else Nil
-        val protocolBump: Seq[Action] =
-          if (dvAdds.nonEmpty)
-            TableFeatures.requiredUpgrade(txn.snapshot.protocol, m,
-              TableFeatures.deletionVectors).toSeq
-          else Nil
         metrics += ("numAddedFiles" -> newAdds.size.toString,
           "numDeletionVectors" -> dvAdds.size.toString,
           "numUpdatedRows" -> updatedCount.toString)
-        txn.commit(protocolBump ++ removes ++ dvAdds ++ newAdds ++ cdcActions,
+        txn.commit(removes ++ dvAdds ++ newAdds ++ cdcActions,
           "UPDATE",
           operationParameters = condition.map(c => "predicate" -> c.toString).toMap,
           operationMetrics = metrics.toMap)

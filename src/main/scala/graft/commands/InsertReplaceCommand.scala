@@ -175,18 +175,12 @@ object InsertReplaceCommand {
           Cdc.writeChangeFiles(spark, log,
             deletes.map(d => d.unionByName(inserts)).getOrElse(inserts))
         } else Nil
-      val protocolBump: Seq[Action] =
-        if (rewriteAdds.exists(_.dvPath.isDefined))
-          TableFeatures.requiredUpgrade(txn.snapshot.protocol, m,
-            TableFeatures.deletionVectors).toSeq
-        else Nil
-
       val metrics = Map(
         "numRemovedFiles" -> removes.size.toString,
         "numAddedFiles" -> (rewriteAdds.size + insertAdds.size).toString,
         "numTargetRowsDeleted" -> deletedCount.toString) ++
         Dml.statsRowCount(insertAdds).map("numTargetRowsInserted" -> _.toString)
-      txn.commit(protocolBump ++ removes ++ rewriteAdds ++ insertAdds ++ cdcActions,
+      txn.commit(removes ++ rewriteAdds ++ insertAdds ++ cdcActions,
         "INSERT REPLACE",
         operationParameters = Map("predicate" -> condition.toString),
         operationMetrics = metrics)

@@ -421,11 +421,6 @@ object MergeCommand {
           .select(col("__f"), col("__i"))
         val (removes, dvAdds, nChanged) = graft.dv.DeletionVectors
           .writeDeletionVectors(spark, log, rewriteFiles, dvTargets)
-        val protocolBump: Seq[Action] =
-          if (dvAdds.nonEmpty)
-            TableFeatures.requiredUpgrade(txn.snapshot.protocol, m,
-              TableFeatures.deletionVectors).toSeq
-          else Nil
         // With no NOT-MATCHED-BY-SOURCE clauses, every written row is an
         // update or an insert, so inserted = written - updated (footer
         // stats; deleted rows are bitmap-marked, never written).
@@ -440,7 +435,7 @@ object MergeCommand {
           "numDeletionVectors" -> dvAdds.size.toString,
           "numChangedTargetRows" -> nChanged.toString,
           "numTargetFilesAdded" -> adds.size.toString) ++ rowMetrics
-        txn.commit(protocolBump ++ removes ++ dvAdds ++ adds ++ cdcActions,
+        txn.commit(removes ++ dvAdds ++ adds ++ cdcActions,
           "MERGE", operationMetrics = metrics)
         metrics
       } else {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.log.{AddFile, GraftLog, Metadata, Snapshot}
+import graft.log.{AddFile, GraftLog, Metadata, Protocol, Snapshot, TableFeatures}
 
 /**
  * Deletion vectors: per-file [[Bitmap64]] sidecars of deleted row
@@ -87,12 +87,22 @@ object DeletionVectors {
 
   // ---- read path ----------------------------------------------------------
 
+  /** Whether `p` lists the deletion-vector reader feature. Every commit
+    * that carries a DV file also carries the feature, so without it no
+    * file of the table has a DV. */
+  def supported(p: Protocol): Boolean =
+    p.readerFeatureNames.contains(TableFeatures.deletionVectors.name)
+
   /** The DV-splicing parquet format for `files`, or None when no file
-    * carries a DV (callers keep the plain columnar ParquetFileFormat). */
+    * carries a DV (callers keep the plain columnar ParquetFileFormat).
+    * `files` is not evaluated when `protocol` does not support DVs, so a
+    * checkpoint-backed snapshot's file list stays off the driver. */
   def readerFormat(
       log: GraftLog,
-      files: Seq[AddFile]): Option[GraftParquetFileFormat] = {
-    val dvFiles = files.filter(_.dvPath.isDefined)
+      protocol: Protocol,
+      files: => Seq[AddFile]): Option[GraftParquetFileFormat] = {
+    val dvFiles =
+      if (supported(protocol)) files.filter(_.dvPath.isDefined) else Nil
     if (dvFiles.isEmpty) None
     else Some(new GraftParquetFileFormat(
       log.dataPath.toString,

@@ -163,7 +163,8 @@ object GraftFileIndex {
     if (graft.schema.ColumnMapping.idMode(m))
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     val format =
-      if (applyDv) graft.dv.DeletionVectors.readerFormat(log, index.files)
+      if (applyDv) graft.dv.DeletionVectors
+        .readerFormat(log, snapshot.protocol, index.files)
         .getOrElse(new ParquetFileFormat)
       else new ParquetFileFormat
     val relation = HadoopFsRelation(

@@ -181,6 +181,15 @@ case class VersionChecksum(
     // with O(log n) reads. -1 = chain not established (older tables).
     commitTimestamp: Long = -1L)
 
+/** The `_last_checkpoint` pointer: the newest checkpoint's version, its
+  * action count, and the sidecar bucket count of a v2 checkpoint (absent
+  * for a classic one). */
+case class LastCheckpoint(
+    version: Long,
+    size: Long,
+    @JsonDeserialize(contentAs = classOf[java.lang.Integer])
+    sidecarBuckets: Option[Int] = None)
+
 case class SingleAction(
     txn: SetTransaction = null,
     add: AddFile = null,
@@ -226,6 +235,16 @@ object Actions {
 
   def checksumFromJson(json: String): VersionChecksum =
     mapper.readValue(json, classOf[VersionChecksum])
+
+  def lastCheckpointToJson(c: LastCheckpoint): String =
+    mapper.writeValueAsString(c)
+
+  /** The pointer in `json`; None when it does not parse or names no
+    * version. */
+  def lastCheckpointFromJson(json: String): Option[LastCheckpoint] =
+    try Option(mapper.readValue(json, classOf[LastCheckpoint]))
+      .filter(_.version >= 0)
+    catch { case _: java.io.IOException => None }
 
   /** Serialize a full commit: one action per line. */
   def serialize(actions: Seq[Action]): String =

@@ -3,7 +3,7 @@ package graft.log
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 import graft.tx.OptimisticTransaction
 
@@ -13,12 +13,15 @@ import graft.tx.OptimisticTransaction
  * Checkpoints; /root/reference/spark/.../DeltaLog.scala:80,
  * SnapshotManagement.scala, Checkpoints.scala:304-420 — re-designed).
  *
- * Scale notes: table state is held as a driver-side map of AddFiles
- * (a 100 TB table at ~1 GB/file is ~1e5 entries — small); distributed
- * operations (data skipping, VACUUM listing, checkpoint writes) run over
- * `Dataset[AddFile]` views so stats evaluation parallelizes across the
- * cluster. Snapshot updates are incremental: only commit JSONs newer than
- * the cached snapshot are parsed.
+ * Scale notes: a snapshot's file state is either a driver-side map of
+ * AddFiles (a 100 TB table at ~1 GB/file is ~1e5 entries — small) or,
+ * past the state-reconstruction threshold and for every v2 checkpoint,
+ * checkpoint-backed: the checkpoint parquet plus a driver-held overlay of
+ * later commits. Checkpoint writes and stream starts run where that state
+ * lives — from the driver map, or over the checkpoint parquet on the
+ * executors — with no file-count setting of their own. Snapshot updates
+ * are incremental: only commit JSONs newer than the cached snapshot are
+ * parsed.
  */
 class GraftLog private (
     @transient private val creatorSpark: SparkSession,
@@ -648,29 +651,12 @@ class GraftLog private (
     }
   }
 
-  /** Write snapshot state as a Parquet checkpoint + `_last_checkpoint`. */
-  /** Action count recorded by `_last_checkpoint` for version `cp` (used
-    * to pick driver-fold vs distributed state reconstruction). */
-  def lastCheckpointSize(cp: Long): Option[Long] =
-    try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(store.read(FileNames.lastCheckpointFile(logPath)))
-      if (node.path("version").asLong(-1) == cp)
-        Some(node.path("size").asLong(-1)).filter(_ >= 0)
-      else None
-    } catch { case _: Exception => None }
-
-  /** Whether `_last_checkpoint` says checkpoint `cp` is v2 (sidecars);
-    * None when the pointer is missing, stale or unreadable — callers
-    * must then probe the checkpoint itself. */
-  def lastCheckpointIsV2(cp: Long): Option[Boolean] =
-    try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(store.read(FileNames.lastCheckpointFile(logPath)))
-      if (node.path("version").asLong(-1) == cp)
-        Some(node.has("sidecarBuckets"))
-      else None
-    } catch { case _: Exception => None }
+  /** The `_last_checkpoint` pointer; None when it is missing or does not
+    * parse. Callers compare its version with the checkpoint they mean: a
+    * pointer that names another one is stale for them. */
+  private[graft] def lastCheckpoint: Option[LastCheckpoint] =
+    store.readOpt(FileNames.lastCheckpointFile(logPath))
+      .flatMap(Actions.lastCheckpointFromJson)
 
   /** `classic`: all actions in the checkpoint itself. `v2`: a small
     * manifest (metadata-scale actions + CheckpointMetadata + SidecarFile
@@ -693,20 +679,15 @@ class GraftLog private (
   private[graft] def sidecarBucket(path: String, k: Int): Int =
     GraftLog.sidecarBucketOf(path, k)
 
-  /** How the last checkpoint write assembled its file rows
-    * ("driver" | "distributed") — observable for scale tests. */
-  @transient private[graft] var lastCheckpointMode: String = ""
-
-  /** Above this many file-state rows, checkpoint writes assemble their
-    * rows on the EXECUTORS (previous checkpoint parquet + delta-tail
-    * fold) instead of serializing a driver-side Seq through
-    * createDataset — at 10M files the driver Seq is multi-GB and one
-    * serialization choke point (reference concept:
-    * Checkpoints.scala:363 writeCheckpointFiles over the cached state
-    * dataset — re-designed). */
-  val DISTRIBUTED_CHECKPOINT_CONF = "spark.graft.checkpoint.driverThreshold"
-
+  /** Write snapshot state as a Parquet checkpoint + `_last_checkpoint`.
+    * The file rows come from the snapshot ([[Snapshot.checkpointRows]]),
+    * so they are assembled where its file state lives: a driver-held
+    * snapshot ships its maps, a checkpoint-backed one is read from its
+    * checkpoint parquet on the executors. A snapshot backed by the
+    * checkpoint at its own version is already checkpointed; rewriting it
+    * would read and overwrite the same files in one job. */
   def checkpoint(snap: Snapshot = snapshot): Unit = {
+    if (snap.lazyBase.exists(_.version == snap.version)) return
     val session = spark
     import session.implicits._
     import org.apache.spark.sql.functions.{coalesce, col, lit}
@@ -726,25 +707,15 @@ class GraftLog private (
       .get("graft.deletedFileRetentionHours").map(_.toDouble)
       .getOrElse(graft.commands.VacuumCommand.defaultRetentionHours) * 3600 * 1000).toLong
     val tombCutoff = System.currentTimeMillis() - retentionMs
-    // Lazy snapshots count tombstones with a distributed agg; the driver
-    // branch below (small tables only) is the one place that pulls them.
+    // Lazy snapshots count tombstones with a distributed agg, never
+    // pulling them onto the driver.
     val liveTombCount =
-      if (snap.lazyBase.isDefined && !snap.tombsMaterialized)
+      if (snap.checkpointBacked && !snap.tombsMaterialized)
         snap.tombstonesDS.where(coalesce(col("deletionTimestamp"),
           lit(Long.MaxValue)) >= tombCutoff).count()
       else snap.tombstones.count(_.deletionTimestamp.forall(_ >= tombCutoff))
     val fileCount = snap.numFiles + liveTombCount
-    val distThreshold = session.conf
-      .getOption(DISTRIBUTED_CHECKPOINT_CONF).map(_.toLong).getOrElse(200000L)
-    val (fileRowsDF, mode) =
-      if (fileCount < distThreshold) {
-        val liveTombs = snap.tombstones.filter(
-          _.deletionTimestamp.forall(_ >= tombCutoff))
-        val rows: Seq[SingleAction] =
-          snap.allFiles.map(_.wrap) ++ liveTombs.map(_.wrap)
-        (session.createDataset(rows).toDF, "driver")
-      } else (distributedStateRows(snap, tombCutoff), "distributed")
-    lastCheckpointMode = mode
+    val fileRowsDF = snap.checkpointRows(tombCutoff)
     // Parallelism: a checkpoint of N files is tiny metadata; one file per
     // ~100k actions keeps both write and cold-read costs bounded.
     val parts = math.max(1, (fileCount / 100000).toInt)
@@ -755,10 +726,13 @@ class GraftLog private (
       // count) keep their existing sidecar files; only churned buckets
       // rewrite. Changed set = paths in the delta tail since that
       // checkpoint (the same commits an incremental snapshot folds).
-      val reusable: Map[Int, Seq[SingleAction]] = previousV2Sidecars(snap, k)
+      val prev = lastCheckpoint.filter(p =>
+        p.version < snap.version && p.sidecarBuckets.contains(k)).map(_.version)
+      val reusable: Map[Int, Seq[SingleAction]] =
+        prev.map(previousV2Sidecars).getOrElse(Map.empty)
       val changed: Set[Int] =
         if (reusable.isEmpty) (0 until k).toSet
-        else changedSidecarBuckets(snap, k)
+        else changedSidecarBuckets(prev.get, snap.version, k)
       val toWrite: Set[Int] =
         (0 until k).filter(b => changed.contains(b) || !reusable.contains(b)).toSet
       // Static helper, not the instance method: a closure over `this`
@@ -800,114 +774,42 @@ class GraftLog private (
       session.createDataset(manifest).repartition(1)
         .write.mode("overwrite").parquet(cpPath.toString)
       store.writeOverwrite(FileNames.lastCheckpointFile(logPath),
-        s"""{"version":${snap.version},"size":$total,"sidecarBuckets":$k}""")
+        Actions.lastCheckpointToJson(LastCheckpoint(snap.version, total, Some(k))))
     } else {
       session.createDataset(small).toDF.unionByName(fileRowsDF)
         .repartition(parts)
         .write.mode("overwrite").parquet(cpPath.toString)
       store.writeOverwrite(FileNames.lastCheckpointFile(logPath),
-        s"""{"version":${snap.version},"size":$total}""")
+        Actions.lastCheckpointToJson(LastCheckpoint(snap.version, total)))
     }
   }
 
-  /** File-action rows (live adds + retained tombstones) of `snap`,
-    * reconstructed on the executors: the previous checkpoint's parquet
-    * (manifest or v2 sidecars) is read distributed, the delta tail —
-    * metadata-scale JSON the driver parses for snapshots anyway — joins
-    * it as one small dataset, and a single per-path last-writer-wins
-    * shuffle reconciles. The driver never holds or serializes the
-    * per-file row set. */
-  private def distributedStateRows(
-      snap: Snapshot, tombCutoff: Long): org.apache.spark.sql.DataFrame = {
+  /** SidecarFile rows of the v2 checkpoint at `version`, keyed by bucket
+    * id. */
+  private def previousV2Sidecars(version: Long): Map[Int, Seq[SingleAction]] = {
     val session = spark
     import session.implicits._
-    import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
-    val schema = session.emptyDataset[SingleAction].schema
-    val listing = store.list(logPath)
-    val baseCp = listing
-      .flatMap(st => FileNames.checkpointVersion(st.getPath.getName))
-      .filter(_ < snap.version).maxOption
-    val tailVersions = listing
-      .flatMap(st => FileNames.deltaVersion(st.getPath.getName))
-      .filter(v => baseCp.forall(v > _) && v <= snap.version).sorted
-    val tailRows: Seq[(Long, SingleAction)] = tailVersions.flatMap { v =>
-      Actions.deserialize(store.read(FileNames.deltaFile(logPath, v))).collect {
-        case a: AddFile => v -> a.wrap
-        case r: RemoveFile => v -> r.wrap
-      }
-    }
-    val names = schema.fieldNames.toSeq
-    val cols = names.map(col)
-    val baseDF = baseCp match {
-      case None =>
-        session.emptyDataset[SingleAction].toDF.withColumn("__v", lit(-1L))
-      case Some(v) =>
-        val manifest = session.read.schema(schema)
-          .parquet(FileNames.checkpointFile(logPath, v).toString)
-        val sidecarPaths = manifest.where(col("sidecar").isNotNull)
-          .select(col("sidecar.path")).as[String].collect()
-        val fileSrc =
-          if (sidecarPaths.isEmpty) manifest
-          else session.read.schema(schema)
-            .parquet(sidecarPaths.map(pp => new Path(logPath, pp).toString): _*)
-        fileSrc
-          .where(col("add").isNotNull || col("remove").isNotNull)
-          .withColumn("__v", lit(v))
-    }
-    val tailDF = session.createDataset(tailRows).toDF("__v", "a")
-      .select(names.map(n => col(s"a.$n").as(n)) :+ col("__v"): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__p").orderBy(col("__v").desc)
-    baseDF.select(cols :+ col("__v"): _*)
-      .unionByName(tailDF)
-      .withColumn("__p", coalesce(col("add.path"), col("remove.path")))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .where(col("add").isNotNull ||
-        coalesce(col("remove.deletionTimestamp"), lit(Long.MaxValue)) >= tombCutoff)
-      .drop("__rn", "__v", "__p")
-  }
-
-  /** SidecarFile rows of the previous checkpoint keyed by bucket id, iff
-    * it was a v2 checkpoint written with the same bucket count. */
-  private def previousV2Sidecars(
-      snap: Snapshot, k: Int): Map[Int, Seq[SingleAction]] = {
-    val session = spark
-    import session.implicits._
-    val prev = try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(store.read(FileNames.lastCheckpointFile(logPath)))
-      val v = node.path("version").asLong(-1)
-      val buckets = node.path("sidecarBuckets").asInt(-1)
-      if (v >= 0 && v < snap.version && buckets == k) Some(v) else None
-    } catch { case _: Exception => None }
-    prev match {
-      case None => Map.empty
-      case Some(v) =>
-        val bucketRe = ".*/bucket=(\\d+)/.*".r
-        spark.read.schema(spark.emptyDataset[SingleAction].schema)
-          .parquet(FileNames.checkpointFile(logPath, v).toString)
-          .as[SingleAction].collect()
-          .filter(_.sidecar != null)
-          .groupBy(_.sidecar.path match {
-            case bucketRe(b) => b.toInt
-            case _ => -1
-          })
-          .collect { case (b, rows) if b >= 0 => b -> rows.toSeq }
-          .toMap
-    }
+    val bucketRe = ".*/bucket=(\\d+)/.*".r
+    session.read.schema(session.emptyDataset[SingleAction].schema)
+      .parquet(FileNames.checkpointFile(logPath, version).toString)
+      .as[SingleAction].collect()
+      .filter(_.sidecar != null)
+      .groupBy(_.sidecar.path match {
+        case bucketRe(b) => b.toInt
+        case _ => -1
+      })
+      .collect { case (b, rows) if b >= 0 => b -> rows.toSeq }
+      .toMap
   }
 
   /** Buckets whose paths were added/removed by any commit in
-    * (previousCheckpoint, snap.version]; every bucket when the tail
-    * cannot be read (full rewrite is always safe). */
-  private def changedSidecarBuckets(snap: Snapshot, k: Int): Set[Int] =
+    * (prev, version]; every bucket when the tail cannot be read (full
+    * rewrite is always safe). */
+  private def changedSidecarBuckets(prev: Long, version: Long, k: Int): Set[Int] =
     try {
-      val prev = lastCheckpointVersionBefore(snap.version)
-        .getOrElse(return (0 until k).toSet)
       val out = scala.collection.mutable.Set.empty[Int]
       var v = prev + 1
-      while (v <= snap.version) {
+      while (v <= version) {
         Actions.deserialize(store.read(FileNames.deltaFile(logPath, v))).foreach {
           case a: AddFile => out += sidecarBucket(a.path, k)
           case r: RemoveFile => out += sidecarBucket(r.path, k)
@@ -917,13 +819,6 @@ class GraftLog private (
       }
       out.toSet
     } catch { case _: Exception => (0 until k).toSet }
-
-  private def lastCheckpointVersionBefore(version: Long): Option[Long] =
-    try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(store.read(FileNames.lastCheckpointFile(logPath)))
-      Some(node.path("version").asLong(-1)).filter(v => v >= 0 && v < version)
-    } catch { case _: Exception => None }
 
   /** Delete log entries older than both retention and the last checkpoint.
     *
@@ -1057,20 +952,16 @@ object GraftLog {
 }
 
 /**
- * Immutable view of table state at one version. State is the reconciled
- * fold of actions (last metadata/protocol wins; last action per file path
- * wins; removes become tombstones) — reference rules PROTOCOL.md:913-934.
- */
-/**
  * Deferred file state for checkpoint-backed snapshots: the driver holds
- * only the commit TAIL since the checkpoint (paths added/removed after
- * it); the base file set stays in the checkpoint's parquet until — if
- * ever — a caller forces full materialization. Reads plan through
- * `allFilesDS` (checkpoint scan + overlay), so a 10M-file table is
- * queryable with driver memory bounded by the post-skipping survivors,
- * not the table's file count.
+ * only the commit TAIL since the checkpoint at `version` (paths
+ * added/removed after it); the base file set stays in the checkpoint's
+ * parquet until — if ever — a caller forces full materialization. Reads
+ * plan through `allFilesDS` (checkpoint scan + overlay), so a 10M-file
+ * table is queryable with driver memory bounded by the post-skipping
+ * survivors, not the table's file count.
  */
 case class LazyFileState(
+    version: Long,
     manifestPaths: Seq[String],
     tailAdds: Map[String, AddFile],
     tailRemovedPaths: Set[String],
@@ -1131,6 +1022,14 @@ case class LazyFileState(
   }
 }
 
+/**
+ * Immutable view of table state at one version. State is the reconciled
+ * fold of actions (last metadata/protocol wins; last action per file path
+ * wins; removes become tombstones) — reference rules PROTOCOL.md:913-934.
+ * The file state is either held on the driver or checkpoint-backed
+ * (`lazyBase`); whole-state work (checkpoint writes, stream starts)
+ * runs where it lives.
+ */
 class Snapshot(
     @transient val log: GraftLog,
     val version: Long,
@@ -1145,6 +1044,13 @@ class Snapshot(
   extends Serializable {
 
   def spark: SparkSession = log.spark
+
+  /** Whether the file state is checkpoint-backed — checkpoint parquet
+    * plus a driver-held overlay of later commits — rather than held on
+    * the driver. Set at load; materializing the maps does not change it,
+    * and a commit folded onto a materialized snapshot yields a
+    * driver-held one. */
+  private[graft] def checkpointBacked: Boolean = lazyBase.isDefined
 
   @volatile private[graft] var materialized = lazyBase.isEmpty
   private[log] lazy val filesMap: Map[String, AddFile] = {
@@ -1205,6 +1111,27 @@ class Snapshot(
     case Some(b) if !materialized => b.toDS(spark)
     case _ =>
       spark.createDataset(allFiles)(org.apache.spark.sql.Encoders.product[AddFile])
+  }
+
+  /** The file-action rows a checkpoint of this snapshot holds — every
+    * live AddFile plus the tombstones deleted at or after `tombCutoff` —
+    * in the full SingleAction schema. A checkpoint-backed snapshot reads
+    * them from its checkpoint parquet masked by its overlay, on the
+    * executors, even after a caller materialized its maps; a driver-held
+    * one ships its maps. */
+  private[log] def checkpointRows(tombCutoff: Long): DataFrame = {
+    val enc = Encoders.product[SingleAction]
+    lazyBase match {
+      case Some(b) =>
+        import org.apache.spark.sql.functions.{coalesce, col, lit}
+        val tombs = b.tombsDS(spark).where(coalesce(col("deletionTimestamp"),
+          lit(Long.MaxValue)) >= tombCutoff)
+        b.toDS(spark).map(_.wrap)(enc).union(tombs.map(_.wrap)(enc)).toDF
+      case None =>
+        val liveTombs = tombstones.filter(
+          _.deletionTimestamp.forall(_ >= tombCutoff))
+        spark.createDataset(allFiles.map(_.wrap) ++ liveTombs.map(_.wrap))(enc).toDF
+    }
   }
 
   /** Cached distributed skipping state: one row per live file with the
@@ -1346,8 +1273,9 @@ object Snapshot {
         // manifest is metadata-scale (SidecarFile pointers included).
         // The `_last_checkpoint` hint lets classic checkpoints skip the
         // probe job; only an absent/stale pointer forces one.
+        val pointer = log.lastCheckpoint.filter(_.version == cp)
         val sidecars =
-          if (log.lastCheckpointIsV2(cp).contains(false)) Array.empty[SidecarFile]
+          if (pointer.exists(_.sidecarBuckets.isEmpty)) Array.empty[SidecarFile]
           else manifest.filter(col("sidecar").isNotNull)
             .select(col("sidecar.*")).as[SidecarFile].collect()
 
@@ -1360,7 +1288,7 @@ object Snapshot {
         // through the driver fold just because the pointer moved on.
         lazy val countedSize = manifest.count()
         if (sidecars.nonEmpty ||
-            log.lastCheckpointSize(cp).getOrElse(countedSize) > threshold) {
+            pointer.map(_.size).getOrElse(countedSize) > threshold) {
           // Distributed: executors decode per-kind pruned scans in
           // parallel; the driver receives ready arrays. The non-file
           // actions always come from the manifest (metadata-scale).
@@ -1379,7 +1307,7 @@ object Snapshot {
           val manifestPaths =
             if (sidecars.isEmpty) Seq(cpPath.toString)
             else sidecars.map(s => new Path(log.logPath, s.path).toString).toSeq
-          val lazyState = LazyFileState(manifestPaths, Map.empty, Set.empty)
+          val lazyState = LazyFileState(cp, manifestPaths, Map.empty, Set.empty)
           new Snapshot(log, cp, state.protocol, state.metadata, state.txns,
             lazyState.materialize(log.spark),
             lazyState.materializeTombs(log.spark), 0L, state.domains,

@@ -142,7 +142,7 @@ object RowTracking {
     val index = new GraftFileIndex(spark, log, snapshot, files)
     // DV-carrying files bound the reader-format map: collect them from
     // the distributed view (DV count scale, not file count scale).
-    val dvFiles: Seq[AddFile] = files match {
+    lazy val dvFiles: Seq[AddFile] = files match {
       case Some(fs) => fs.filter(_.dvPath.isDefined)
       case None => snapshot.allFilesDS
         .filter(col("dvPath").isNotNull).collect().toSeq
@@ -157,7 +157,7 @@ object RowTracking {
       partitionSchema = index.partitionSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
-      fileFormat = DeletionVectors.readerFormat(log, dvFiles)
+      fileFormat = DeletionVectors.readerFormat(log, snapshot.protocol, dvFiles)
         .getOrElse(new ParquetFileFormat),
       options = Map.empty)(spark)
     var df = SparkShims.ofRows(spark, LogicalRelation(relation))

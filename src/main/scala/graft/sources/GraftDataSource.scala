@@ -159,7 +159,8 @@ class GraftDataSource
       partitionSchema = index.partitionSchema,
       dataSchema = snapshot.metadata.dataSchema,
       bucketSpec = None,
-      fileFormat = graft.dv.DeletionVectors.readerFormat(log, snapshot.allFiles)
+      fileFormat = graft.dv.DeletionVectors
+        .readerFormat(log, snapshot.protocol, snapshot.allFiles)
         .getOrElse(new ParquetFileFormat),
       options = Map.empty)(spark)
   }

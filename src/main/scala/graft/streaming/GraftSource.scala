@@ -107,17 +107,13 @@ class GraftSource(
     * reservoirVersion — not the current table version — identifies the
     * snapshot being replayed.
     *
-    * Below [[snapshotDriverThreshold]] files the sorted list lives in a
-    * driver Vector. Above it the snapshot is built as a DISTRIBUTED
-    * sorted + indexed dataset (sort job + zipWithIndex, persisted), and
-    * iteration streams only the admitted index range to the driver via
+    * A driver-held snapshot's sorted list lives in a driver Vector. A
+    * checkpoint-backed snapshot is built as a DISTRIBUTED sorted +
+    * indexed dataset (sort job + zipWithIndex, persisted), and iteration
+    * streams only the admitted index range to the driver via
     * toLocalIterator — starting a stream on a 10M-file table never
     * materializes the file list (reference concept:
     * files/DeltaSourceSnapshot.scala:62-95 — re-designed). */
-  private def snapshotDriverThreshold: Long =
-    spark.conf.getOption("spark.graft.streaming.snapshotDriverThreshold")
-      .map(_.toLong).getOrElse(100000L)
-
   private val snapshotFilesCache = scala.collection.mutable.Map
     .empty[Long, Either[Vector[AddFile], org.apache.spark.sql.Dataset[(AddFile, Long)]]]
 
@@ -127,7 +123,7 @@ class GraftSource(
       val snap =
         if (version == snapshotAtInit.version) snapshotAtInit
         else log.getSnapshotAt(version)
-      if (snap.numFiles < snapshotDriverThreshold) {
+      if (!snap.checkpointBacked) {
         Left(snap.allFiles.filterNot(f => excluded(f.path))
           .sortBy(f => (f.modificationTime, f.path)).toVector)
       } else {
@@ -163,6 +159,10 @@ class GraftSource(
           }
     }
 
+  /** Largest index range of a checkpoint-backed snapshot that
+    * [[snapshotRange]] collects in one job. */
+  private val COLLECT_RANGE_MAX = 100000L
+
   /** Initial-snapshot files with fromExcl < index <= toIncl (CDF batch
     * assembly) — a bounded, admission-sized range. */
   private def snapshotRange(version: Long, fromExcl: Long, toIncl: Long): Seq[AddFile] =
@@ -181,7 +181,7 @@ class GraftSource(
         // job-scheduling storm on a many-partition snapshot.
         import scala.jdk.CollectionConverters._
         val filtered = ds.filter(col("_2") > fromExcl && col("_2") <= toIncl)
-        if (toIncl != Long.MaxValue && toIncl - fromExcl <= snapshotDriverThreshold)
+        if (toIncl != Long.MaxValue && toIncl - fromExcl <= COLLECT_RANGE_MAX)
           filtered.collect().toSeq.map(_._1)
         else filtered.toLocalIterator().asScala.map(_._1).toSeq
     }

@@ -315,7 +315,7 @@ class OptimisticTransaction(val log: GraftLog, val snapshot: Snapshot) {
         TableFeatures.activeFeatures(newMetadata.get))
     }
     newMetadata.foreach(prefix += _)
-    var finalActions: Seq[Action] = prefix.toSeq ++ actions
+    var finalActions: Seq[Action] = withDvFeature(prefix.toSeq ++ actions)
     // Row tracking: stamp fresh base row ids from the domain watermark.
     // Ids assign whenever the PROTOCOL supports the feature, not just when
     // the metadata switch is on — backfill commits run with feature
@@ -377,6 +377,26 @@ class OptimisticTransaction(val log: GraftLog, val snapshot: Snapshot) {
     }
     throw new GraftConcurrentModificationException(
       s"Commit failed after $maxRetries conflict-checked retries")
+  }
+
+  /** `actions` (CommitInfo first) with the protocol they leave the table
+    * at raised to list deletion vectors when one of their AddFiles
+    * carries a DV. Reads apply DVs only under that feature, so the commit
+    * that brings a table's first DV — DML, clone, restore or convert
+    * sync — brings the feature with it. */
+  private def withDvFeature(actions: Seq[Action]): Seq[Action] = {
+    val proto = actions.collect { case p: Protocol => p }.lastOption
+      .getOrElse(snapshot.protocol)
+    val carriesDv = actions.exists {
+      case a: AddFile => a.dvPath.isDefined
+      case _ => false
+    }
+    if (!carriesDv || graft.dv.DeletionVectors.supported(proto)) actions
+    else {
+      val raised = TableFeatures.requiredUpgrade(proto, metadata,
+        TableFeatures.deletionVectors).get
+      actions.head +: raised +: actions.tail.filterNot(_.isInstanceOf[Protocol])
+    }
   }
 
   private def isolationLevel: String =

@@ -985,6 +985,56 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(GraftTable.forPath(spark, dir).asOfVersion(1).count() === 20)
   }
 
+  test("_last_checkpoint has one codec: round trip, classic vs v2, malformed is absent") {
+    import graft.log.{Actions, FileNames, LastCheckpoint}
+    val classic = LastCheckpoint(12L, 345L)
+    val v2 = LastCheckpoint(20L, 678L, Some(16))
+    assert(Actions.lastCheckpointToJson(classic) === """{"version":12,"size":345}""")
+    assert(Actions.lastCheckpointToJson(v2) ===
+      """{"version":20,"size":678,"sidecarBuckets":16}""")
+    Seq(classic, v2).foreach { c =>
+      assert(Actions.lastCheckpointFromJson(Actions.lastCheckpointToJson(c)) === Some(c))
+    }
+    // hand-written pointers in the same field names still parse
+    assert(Actions.lastCheckpointFromJson("""{"version":1,"size":150002}""") ===
+      Some(LastCheckpoint(1L, 150002L)))
+    Seq("", "{", "not json", "[1,2]", "null", """{"version":"x","size":1}""",
+        """{"version":-1,"size":1}""").foreach { j =>
+      assert(Actions.lastCheckpointFromJson(j) === None, j)
+    }
+    // through the log: the pointer a checkpoint writes is the one read
+    val dir = tmpDir()
+    Graft.write(spark.range(5).toDF("id"), dir)
+    val log = GraftLog.forTable(spark, dir)
+    assert(log.lastCheckpoint === None)
+    log.checkpoint()
+    val written = log.lastCheckpoint
+    assert(written.map(_.version) === Some(0L))
+    assert(written.exists(_.sidecarBuckets.isEmpty))
+    assert(written.exists(_.size === 2 + log.snapshot.numFiles))
+    log.store.writeOverwrite(FileNames.lastCheckpointFile(log.logPath), "{truncated")
+    assert(log.lastCheckpoint === None)
+  }
+
+  test("a commit that brings a table its first DV files brings the DV feature") {
+    val dir = tmpDir()
+    Graft.write(spark.range(20).toDF("id"), dir,
+      configuration = Map("graft.enableDeletionVectors" -> "true"))
+    val t = GraftTable.forPath(spark, dir)
+    t.delete(col("id") < 5)
+    assert(t.log.update().allFiles.exists(_.dvPath.isDefined))
+    // DVs switched off after some were written: a clone's metadata no
+    // longer asks for them, but its files still carry them
+    t.upsertProperties(Map("graft.enableDeletionVectors" -> "false"))
+    val dest = tmpDir()
+    t.shallowCloneTo(dest)
+    val cloned = GraftLog.forTable(spark, dest).update()
+    assert(cloned.allFiles.exists(_.dvPath.isDefined))
+    assert(graft.dv.DeletionVectors.supported(cloned.protocol),
+      s"clone carries DV files under ${cloned.protocol}")
+    assert(Graft.read(spark, dest).count() === 15)
+  }
+
   test("feature gates install wherever a feature turns on") {
     import graft.log.TableFeatures
     // v2 checkpoints are reader-gating: a build that would fold the

@@ -12,8 +12,9 @@ import graft.ml.Similarity
   * broadcast of small join sides, metadata-only aggregates, and measured
   * ANN recall. A refactor that silently loses one of these passes every
   * row-level correctness check but dies at 100 TB — these tests pin the
-  * plan shape itself. One source audit rides along: no global mutable
-  * state on the engine's objects. */
+  * plan shape itself. Two source audits ride along: no global mutable
+  * state on the engine's objects, and the exact set of settings the
+  * engine reads. */
 class PlanAuditSuite extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -497,5 +498,28 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(!reporter.hasErrors, reporter.infos.mkString("\n"))
     assert(files.size > 50, s"only ${files.size} sources under $root")
     assert(hits.isEmpty, s"vars on top-level objects:\n${hits.mkString("\n")}")
+  }
+
+  test("the engine reads exactly the listed spark.graft.* settings") {
+    // Every setting is one more path to test and document; adding or
+    // removing one must show up in the diff, here.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root), s"no engine sources at ${root.toAbsolutePath}")
+    val key = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
+    val found = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => key.findAllMatchIn(Files.readString(f)).map(_.group(1)))
+      .toSet
+    assert(found === Set(
+      "spark.graft.convert.driverThreshold",
+      "spark.graft.distributedSkipping.threshold",
+      "spark.graft.dml.materializeSource",
+      "spark.graft.logStore.impl",
+      "spark.graft.optimizeWrite.binSizeBytes",
+      "spark.graft.redirect.skipCheck",
+      "spark.graft.stateReconstruction.driverThreshold",
+      "spark.graft.streaming.allowSourceColumnRenameAndDrop",
+      "spark.graft.vacuum.retentionCheck.enabled"))
   }
 }

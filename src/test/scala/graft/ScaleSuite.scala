@@ -267,13 +267,14 @@ class ScaleSuite extends AnyFunSuite {
       "advancing a lazy snapshot materialized the tombstone set")
     assert(log2.snapshot.getAddFile("part-0999999.parquet").isDefined)
 
-    // Checkpoint WRITE at 1M files: must assemble rows on the executors
-    // (previous checkpoint + tail), not serialize a driver Seq.
+    // Checkpoint WRITE at 1M files: the snapshot is checkpoint-backed, so
+    // its rows come from the base checkpoint parquet masked by the
+    // overlay, on the executors — the tombstones never reach the driver.
     val t3 = System.nanoTime()
     log2.checkpoint()
     val cpSecs = (System.nanoTime() - t3) / 1e9
-    assert(log2.lastCheckpointMode === "distributed",
-      "1M-file checkpoint used the driver-Seq write path")
+    assert(!log2.snapshot.tombsMaterialized,
+      "1M-file checkpoint pulled the tombstone set onto the driver")
     // classic checkpoints of large states write MULTI-PART (one parquet
     // part per ~100k actions, in parallel) — a single-file write would be
     // a straggler at 10M+ actions
@@ -547,36 +548,93 @@ class ScaleSuite extends AnyFunSuite {
   }
 
   test("driver and distributed checkpoint writes produce identical state") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cpw").toString
-    Graft.write(spark.range(100).toDF("id"), dir)
-    spark.sql(s"DELETE FROM graft.`$dir` WHERE id < 10")
-    Graft.write(spark.range(100, 150).toDF("id"), dir)
-    val log = GraftLog.forTable(spark, dir)
-    val v = log.snapshot.version
-    // driver-path checkpoint (default threshold far above this table)
-    log.checkpoint()
-    assert(log.lastCheckpointMode === "driver")
-    GraftLog.clearCache()
-    val viaDriver = GraftLog.forTable(spark, dir).update()
-    val driverFiles = viaDriver.allFiles.map(f => (f.path, f.size)).sorted
-    val driverTombs = viaDriver.tombstones.map(_.path).sorted
-    // distributed checkpoint over the same snapshot, forced by threshold
-    spark.conf.set(GraftLog.forTable(spark, dir).DISTRIBUTED_CHECKPOINT_CONF, "1")
-    try {
-      val log2 = GraftLog.forTable(spark, dir)
-      log2.checkpoint()
-      assert(log2.lastCheckpointMode === "distributed")
-      GraftLog.clearCache()
-      val viaDist = GraftLog.forTable(spark, dir).update()
-      assert(viaDist.version === v)
-      assert(viaDist.allFiles.map(f => (f.path, f.size)).sorted === driverFiles)
-      assert(viaDist.tombstones.map(_.path).sorted === driverTombs)
-      assert(Graft.read(spark, dir).agg(
-        org.apache.spark.sql.functions.sum(col("id"))).head.getLong(0) ===
-        (10L until 150L).sum)
-    } finally spark.conf.unset(
-      GraftLog.forTable(spark, dir).DISTRIBUTED_CHECKPOINT_CONF)
+    // The same state at a new version, checkpointed once from a
+    // driver-held snapshot (rows shipped from the driver maps) and once
+    // from a checkpoint-backed one (rows read from the base checkpoint
+    // parquet masked by the commit overlay, on the executors).
+    import org.apache.spark.sql.functions.{col, sum}
+    Seq("classic", "v2").foreach { policy =>
+      val dir = Files.createTempDirectory("graft-cpw").toString
+      Graft.write(spark.range(100).toDF("id"), dir,
+        configuration = Map("graft.checkpointPolicy" -> policy))
+      spark.sql(s"DELETE FROM graft.`$dir` WHERE id < 10")
+      val log = GraftLog.forTable(spark, dir)
+      val now = System.currentTimeMillis()
+      // inside the default retention when the base checkpoint is
+      // written, outside it once the tail shortens retention to 30 min
+      log.writeCommit(log.snapshot.version + 1, Seq(
+        CommitInfo(timestamp = now, operation = "NOOP"),
+        RemoveFile("aged.parquet", Some(now - 3600L * 1000))))
+      log.checkpoint()
+      val pointerAtBase = log.store.read(FileNames.lastCheckpointFile(log.logPath))
+      // the commit tail the checkpoint-backed snapshot folds as overlay
+      Graft.write(spark.range(100, 150).toDF("id"), dir)
+      spark.sql(s"DELETE FROM graft.`$dir` WHERE id >= 140")
+      GraftTable.forPath(spark, dir)
+        .upsertProperties(Map("graft.deletedFileRetentionHours" -> "0.5"))
+      log.writeCommit(log.update().version + 1, Seq(
+        CommitInfo(timestamp = now, operation = "NOOP"),
+        RemoveFile("ancient.parquet", Some(1L))))
+      val v = log.update().version
+      val cpPath = FileNames.checkpointFile(log.logPath, v)
+
+      def reloaded(): (Seq[(String, Long)], Seq[String], Long) = {
+        GraftLog.clearCache()
+        val s = GraftLog.forTable(spark, dir).update()
+        assert(s.version === v)
+        (s.allFiles.map(f => (f.path, f.size)).sorted,
+          s.tombstones.map(_.path).sorted,
+          Graft.read(spark, dir).agg(sum(col("id"))).head.getLong(0))
+      }
+      def coldBacked(): (GraftLog, Snapshot) = {
+        GraftLog.clearCache()
+        val l = GraftLog.forTable(spark, dir)
+        (l, l.update())
+      }
+
+      val driverHeld = log.snapshot
+      assert(!driverHeld.checkpointBacked)
+      log.checkpoint(driverHeld)
+      val viaDriver = reloaded()
+
+      // Back to the base checkpoint, then write version v again from a
+      // cold checkpoint-backed load.
+      log.store.deleteRecursive(cpPath)
+      log.store.writeOverwrite(FileNames.lastCheckpointFile(log.logPath),
+        pointerAtBase)
+      spark.conf.set(Snapshot.DRIVER_FOLD_THRESHOLD_CONF, "0")
+      try {
+        val (log2, backed) = coldBacked()
+        assert(backed.checkpointBacked && backed.version === v)
+        log2.checkpoint(backed)
+        assert(!backed.materialized && !backed.tombsMaterialized,
+          s"$policy: the checkpoint-backed write pulled state onto the driver")
+      } finally spark.conf.unset(Snapshot.DRIVER_FOLD_THRESHOLD_CONF)
+      val viaBacked = reloaded()
+      assert(viaBacked === viaDriver, s"$policy: the two writes disagree")
+      assert(viaDriver._3 === (10L until 140L).sum)
+      assert(viaDriver._2.nonEmpty, s"$policy: retained tombstones lost")
+      assert(!viaDriver._2.contains("ancient.parquet"))
+      // v2 reuses untouched sidecar buckets, where an expired tombstone
+      // lingers until its bucket rewrites
+      if (policy == "classic") assert(!viaDriver._2.contains("aged.parquet"))
+
+      // Same version: a snapshot backed by the checkpoint at its own
+      // version is already checkpointed, and is not rewritten.
+      def cpFiles(): Seq[(String, Long)] =
+        Option(new java.io.File(cpPath.toUri.getPath).listFiles).toSeq.flatten
+          .map(f => (f.getName, f.lastModified)).sorted
+      val filesBefore = cpFiles()
+      assert(filesBefore.nonEmpty)
+      spark.conf.set(Snapshot.DRIVER_FOLD_THRESHOLD_CONF, "0")
+      try {
+        val (log3, same) = coldBacked()
+        assert(same.checkpointBacked && same.version === v)
+        log3.checkpoint(same)
+      } finally spark.conf.unset(Snapshot.DRIVER_FOLD_THRESHOLD_CONF)
+      assert(cpFiles() === filesBefore, s"$policy: same-version checkpoint rewritten")
+      assert(reloaded() === viaDriver)
+    }
   }
 
   test("distributed and driver-fold state reconstruction agree") {
@@ -742,6 +800,12 @@ class ScaleSuite extends AnyFunSuite {
         .isEmpty)
       assert(!t.log.snapshot.materialized,
         "the DV gate materialized the 150k-file map on the driver")
+      // 4. a plain read plans without the file list: the table has no
+      // deletion-vector feature, so the DV reader format is never built
+      t.toDF.where(org.apache.spark.sql.functions.col("id") > 5L)
+        .queryExecution.optimizedPlan
+      assert(!t.log.snapshot.materialized,
+        "planning a plain read materialized the 150k-file map on the driver")
     } finally spark.conf.unset(Snapshot.DRIVER_FOLD_THRESHOLD_CONF)
   }
 
