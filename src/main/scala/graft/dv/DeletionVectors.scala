@@ -87,22 +87,16 @@ object DeletionVectors {
 
   // ---- read path ----------------------------------------------------------
 
-  /** Whether `p` lists the deletion-vector reader feature. Every commit
-    * that carries a DV file also carries the feature, so without it no
-    * file of the table has a DV. */
+  /** Whether `p` lists the deletion-vector reader feature. */
   def supported(p: Protocol): Boolean =
     p.readerFeatureNames.contains(TableFeatures.deletionVectors.name)
 
   /** The DV-splicing parquet format for `files`, or None when no file
-    * carries a DV (callers keep the plain columnar ParquetFileFormat).
-    * `files` is not evaluated when `protocol` does not support DVs, so a
-    * checkpoint-backed snapshot's file list stays off the driver. */
+    * carries a DV (callers keep the plain columnar ParquetFileFormat). */
   def readerFormat(
       log: GraftLog,
-      protocol: Protocol,
-      files: => Seq[AddFile]): Option[GraftParquetFileFormat] = {
-    val dvFiles =
-      if (supported(protocol)) files.filter(_.dvPath.isDefined) else Nil
+      files: Seq[AddFile]): Option[GraftParquetFileFormat] = {
+    val dvFiles = files.filter(_.dvPath.isDefined)
     if (dvFiles.isEmpty) None
     else Some(new GraftParquetFileFormat(
       log.dataPath.toString,

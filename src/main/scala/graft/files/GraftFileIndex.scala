@@ -164,7 +164,7 @@ object GraftFileIndex {
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     val format =
       if (applyDv) graft.dv.DeletionVectors
-        .readerFormat(log, snapshot.protocol, index.files)
+        .readerFormat(log, pinnedFiles.getOrElse(snapshot.dvFiles))
         .getOrElse(new ParquetFileFormat)
       else new ParquetFileFormat
     val relation = HadoopFsRelation(

@@ -240,9 +240,11 @@ object Actions {
     mapper.writeValueAsString(c)
 
   /** The pointer in `json`; None when it does not parse or names no
-    * version. */
+    * version (a missing field would otherwise bind as 0). */
   def lastCheckpointFromJson(json: String): Option[LastCheckpoint] =
-    try Option(mapper.readValue(json, classOf[LastCheckpoint]))
+    try Option(mapper.readTree(json))
+      .filter(t => t.path("version").canConvertToLong)
+      .map(mapper.treeToValue(_, classOf[LastCheckpoint]))
       .filter(_.version >= 0)
     catch { case _: java.io.IOException => None }
 

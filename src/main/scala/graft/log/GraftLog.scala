@@ -15,9 +15,9 @@ import graft.tx.OptimisticTransaction
  *
  * Scale notes: a snapshot's file state is either a driver-side map of
  * AddFiles (a 100 TB table at ~1 GB/file is ~1e5 entries — small) or,
- * past the state-reconstruction threshold and for every v2 checkpoint,
- * checkpoint-backed: the checkpoint parquet plus a driver-held overlay of
- * later commits. Checkpoint writes and stream starts run where that state
+ * past the state-reconstruction threshold (classic and v2 checkpoints
+ * alike), checkpoint-backed: the checkpoint parquet plus a driver-held
+ * overlay of later commits. Checkpoint writes and stream starts run where that state
  * lives — from the driver map, or over the checkpoint parquet on the
  * executors — with no file-count setting of their own. Snapshot updates
  * are incremental: only commit JSONs newer than the cached snapshot are
@@ -710,7 +710,7 @@ class GraftLog private (
     // Lazy snapshots count tombstones with a distributed agg, never
     // pulling them onto the driver.
     val liveTombCount =
-      if (snap.checkpointBacked && !snap.tombsMaterialized)
+      if (!snap.tombsMaterialized)
         snap.tombstonesDS.where(coalesce(col("deletionTimestamp"),
           lit(Long.MaxValue)) >= tombCutoff).count()
       else snap.tombstones.count(_.deletionTimestamp.forall(_ >= tombCutoff))
@@ -1052,11 +1052,13 @@ class Snapshot(
     * driver-held one. */
   private[graft] def checkpointBacked: Boolean = lazyBase.isDefined
 
-  @volatile private[graft] var materialized = lazyBase.isEmpty
+  /** Whether the file map is on the driver: always for a driver-held
+    * snapshot, once forced for a checkpoint-backed one. */
+  @volatile private[graft] var materialized = !checkpointBacked
   private[log] lazy val filesMap: Map[String, AddFile] = {
     val m = filesMap0; materialized = true; m
   }
-  @volatile private[graft] var tombsMaterialized = lazyBase.isEmpty
+  @volatile private[graft] var tombsMaterialized = !checkpointBacked
   lazy val tombstones: Seq[RemoveFile] = {
     val t = tombstones0; tombsMaterialized = true; t
   }
@@ -1087,7 +1089,7 @@ class Snapshot(
     * that cost must stay TRANSIENT: later queries keep planning off the
     * checkpoint instead of a permanently driver-resident file map. */
   def allFilesCollected: Seq[AddFile] =
-    if (!materialized && lazyBase.isDefined) allFilesDS.collect().toSeq
+    if (!materialized) allFilesDS.collect().toSeq
     else allFiles
 
   // Aggregates of a lazy snapshot come from ONE distributed pass over the
@@ -1099,9 +1101,9 @@ class Snapshot(
     (r.getLong(0), r.getLong(1))
   }
   def numFiles: Long =
-    if (!materialized && lazyBase.isDefined) lazyStats._1 else filesMap.size
+    if (!materialized) lazyStats._1 else filesMap.size
   lazy val sizeInBytes: Long =
-    if (!materialized && lazyBase.isDefined) lazyStats._2
+    if (!materialized) lazyStats._2
     else allFiles.iterator.map(_.size).sum
 
   /** Distributed view for stats-skipping / VACUUM-scale operations. For a
@@ -1112,6 +1114,17 @@ class Snapshot(
     case _ =>
       spark.createDataset(allFiles)(org.apache.spark.sql.Encoders.product[AddFile])
   }
+
+  /** The live files that carry a deletion vector. Read from the driver
+    * map when it is held; otherwise collected from [[allFilesDS]], at DV
+    * count scale, so a read of a checkpoint-backed snapshot plans without
+    * loading every file. Reads ask this whatever the protocol says, since
+    * older writers could leave DV files under a protocol without the
+    * feature. */
+  @transient lazy val dvFiles: Seq[AddFile] =
+    if (materialized) allFiles.filter(_.dvPath.isDefined)
+    else allFilesDS.filter(
+      org.apache.spark.sql.functions.col("dvPath").isNotNull).collect().toSeq
 
   /** The file-action rows a checkpoint of this snapshot holds — every
     * live AddFile plus the tombstones deleted at or after `tombCutoff` —
@@ -1172,7 +1185,7 @@ class Snapshot(
     * read-only refreshes of a huge table never materialize the base. */
   private[log] def advance(tail: Seq[(Long, Path)]): Snapshot = {
     var state = NonFileState(protocol, metadata, setTransactions, domains)
-    val stayLazy = lazyBase.isDefined && !materialized && !tombsMaterialized
+    val stayLazy = !materialized && !tombsMaterialized
     var files: Map[String, AddFile] = if (stayLazy) Map.empty else filesMap
     var tailAdds = lazyBase.map(_.tailAdds).getOrElse(Map.empty)
     var tailRemoved = lazyBase.map(_.tailRemovedPaths).getOrElse(Set.empty)
@@ -1282,43 +1295,44 @@ object Snapshot {
         val threshold = log.spark.conf
           .getOption(DRIVER_FOLD_THRESHOLD_CONF).map(_.toLong)
           .getOrElse(DRIVER_FOLD_THRESHOLD_DEFAULT)
+        val sidecarPaths =
+          sidecars.map(s => new Path(log.logPath, s.path).toString).toSeq
         // With no (or a stale) `_last_checkpoint` size hint — e.g. time
         // travel to an OLD checkpointed version — one distributed count
         // decides the venue; a 1M-action checkpoint must not stream
         // through the driver fold just because the pointer moved on.
-        lazy val countedSize = manifest.count()
-        if (sidecars.nonEmpty ||
-            pointer.map(_.size).getOrElse(countedSize) > threshold) {
+        lazy val countedSize =
+          if (sidecars.isEmpty) manifest.count()
+          else log.spark.read.schema(schema).parquet(sidecarPaths: _*).count()
+        if (pointer.map(_.size).getOrElse(countedSize) > threshold) {
           // Distributed: executors decode per-kind pruned scans in
           // parallel; the driver receives ready arrays. The non-file
           // actions always come from the manifest (metadata-scale).
           val state = manifest.filter(col("add").isNull && col("remove").isNull)
             .collect().foldLeft(NonFileState.empty)((st, a) => st.fold(a.unwrap))
-          val fileActions =
-            if (sidecars.isEmpty) manifest
-            else log.spark.read.schema(schema)
-              .parquet(sidecars.map(s =>
-                new Path(log.logPath, s.path).toString).toIndexedSeq: _*)
-              .as[SingleAction]
           // Live adds AND tombstones stay IN the checkpoint parquet: the
           // snapshot holds a LazyFileState pointer and materializes the
           // driver maps only if a whole-state caller forces them —
           // planning/skipping/VACUUM run over the executor-side scans.
           val manifestPaths =
-            if (sidecars.isEmpty) Seq(cpPath.toString)
-            else sidecars.map(s => new Path(log.logPath, s.path).toString).toSeq
+            if (sidecars.isEmpty) Seq(cpPath.toString) else sidecarPaths
           val lazyState = LazyFileState(cp, manifestPaths, Map.empty, Set.empty)
           new Snapshot(log, cp, state.protocol, state.metadata, state.txns,
             lazyState.materialize(log.spark),
             lazyState.materializeTombs(log.spark), 0L, state.domains,
             Some(lazyState))
         } else {
-          // Small classic checkpoint: ONE streamed pass folds every
-          // action kind (no extra jobs on the cold-load path).
+          // Small checkpoint: ONE pass folds every action kind — streamed
+          // from a classic checkpoint, collected in one job from a v2
+          // manifest and its sidecars (no extra jobs on the cold-load path).
           var state = NonFileState.empty
           val files = scala.collection.mutable.HashMap.empty[String, AddFile]
           val tombs = scala.collection.mutable.HashMap.empty[String, RemoveFile]
-          val it = manifest.toLocalIterator()
+          val it =
+            if (sidecars.isEmpty) manifest.toLocalIterator()
+            else manifest.union(log.spark.read.schema(schema)
+              .parquet(sidecarPaths: _*).as[SingleAction])
+              .collectAsList().iterator()
           while (it.hasNext) {
             it.next().unwrap match {
               case a: AddFile => files.put(a.path, a)

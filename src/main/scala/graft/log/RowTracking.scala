@@ -140,13 +140,6 @@ object RowTracking {
 
     val m = snapshot.metadata
     val index = new GraftFileIndex(spark, log, snapshot, files)
-    // DV-carrying files bound the reader-format map: collect them from
-    // the distributed view (DV count scale, not file count scale).
-    lazy val dvFiles: Seq[AddFile] = files match {
-      case Some(fs) => fs.filter(_.dvPath.isDefined)
-      case None => snapshot.allFilesDS
-        .filter(col("dvPath").isNotNull).collect().toSeq
-    }
     // Extended read schema: files written before materialization (or
     // never rewritten) null-fill the extra columns.
     val dataSchema = StructType(
@@ -157,7 +150,8 @@ object RowTracking {
       partitionSchema = index.partitionSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
-      fileFormat = DeletionVectors.readerFormat(log, snapshot.protocol, dvFiles)
+      fileFormat = DeletionVectors
+        .readerFormat(log, files.getOrElse(snapshot.dvFiles))
         .getOrElse(new ParquetFileFormat),
       options = Map.empty)(spark)
     var df = SparkShims.ofRows(spark, LogicalRelation(relation))

@@ -160,7 +160,7 @@ class GraftDataSource
       dataSchema = snapshot.metadata.dataSchema,
       bucketSpec = None,
       fileFormat = graft.dv.DeletionVectors
-        .readerFormat(log, snapshot.protocol, snapshot.allFiles)
+        .readerFormat(log, snapshot.dvFiles)
         .getOrElse(new ParquetFileFormat),
       options = Map.empty)(spark)
   }

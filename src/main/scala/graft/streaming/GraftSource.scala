@@ -107,8 +107,10 @@ class GraftSource(
     * reservoirVersion — not the current table version — identifies the
     * snapshot being replayed.
     *
-    * A driver-held snapshot's sorted list lives in a driver Vector. A
-    * checkpoint-backed snapshot is built as a DISTRIBUTED sorted +
+    * A snapshot whose file maps are on the driver (driver-held, or
+    * checkpoint-backed and already materialized) keeps its sorted list
+    * in a driver Vector. Any other checkpoint-backed snapshot is built
+    * as a DISTRIBUTED sorted +
     * indexed dataset (sort job + zipWithIndex, persisted), and iteration
     * streams only the admitted index range to the driver via
     * toLocalIterator — starting a stream on a 10M-file table never
@@ -123,7 +125,7 @@ class GraftSource(
       val snap =
         if (version == snapshotAtInit.version) snapshotAtInit
         else log.getSnapshotAt(version)
-      if (!snap.checkpointBacked) {
+      if (snap.materialized) {
         Left(snap.allFiles.filterNot(f => excluded(f.path))
           .sortBy(f => (f.modificationTime, f.path)).toVector)
       } else {

@@ -999,7 +999,8 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(Actions.lastCheckpointFromJson("""{"version":1,"size":150002}""") ===
       Some(LastCheckpoint(1L, 150002L)))
     Seq("", "{", "not json", "[1,2]", "null", """{"version":"x","size":1}""",
-        """{"version":-1,"size":1}""").foreach { j =>
+        """{"version":-1,"size":1}""", """{"size":1}""",
+        """{"size":1,"sidecarBuckets":16}""").foreach { j =>
       assert(Actions.lastCheckpointFromJson(j) === None, j)
     }
     // through the log: the pointer a checkpoint writes is the one read
@@ -1033,6 +1034,45 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.dv.DeletionVectors.supported(cloned.protocol),
       s"clone carries DV files under ${cloned.protocol}")
     assert(Graft.read(spark, dest).count() === 15)
+  }
+
+  test("DV files under a protocol without the DV feature still apply on read") {
+    // Tables written before every DV commit carried the feature: a shallow
+    // clone taken after DVs were switched off, a convert sync that brought
+    // the first DVs. Reads apply their DVs whatever the protocol says.
+    import graft.log.{CommitInfo, Snapshot}
+    val dir = tmpDir()
+    Graft.write(spark.range(20).toDF("id"), dir,
+      configuration = Map("graft.enableDeletionVectors" -> "true"))
+    val t = GraftTable.forPath(spark, dir)
+    t.delete(col("id") < 5)
+    val snap = t.log.update()
+    val dvFiles = snap.allFiles.filter(_.dvPath.isDefined)
+    assert(dvFiles.nonEmpty)
+    val noDv = (fs: Option[Seq[String]]) => fs.map(_.filterNot(_ == "deletionVectors"))
+    val bare = snap.protocol.copy(readerFeatures = noDv(snap.protocol.readerFeatures),
+      writerFeatures = noDv(snap.protocol.writerFeatures))
+    t.log.writeCommit(snap.version + 1, Seq(
+      CommitInfo(timestamp = 1L, operation = "NOOP"), bare,
+      snap.metadata.copy(configuration =
+        snap.metadata.configuration - "graft.enableDeletionVectors")) ++ dvFiles)
+    val driverHeld = t.log.update()
+    assert(!graft.dv.DeletionVectors.supported(driverHeld.protocol))
+    assert(driverHeld.allFiles.exists(_.dvPath.isDefined))
+    def ids(): Seq[Long] =
+      Graft.read(spark, dir).collect().map(_.getLong(0)).toSeq.sorted
+    assert(ids() === (5L until 20L))
+    // the same table cold-loaded over its checkpoint
+    t.log.checkpoint()
+    GraftLog.clearCache()
+    spark.conf.set(Snapshot.DRIVER_FOLD_THRESHOLD_CONF, "0")
+    try {
+      val backed = GraftLog.forTable(spark, dir).update()
+      assert(backed.checkpointBacked)
+      Graft.read(spark, dir).queryExecution.optimizedPlan
+      assert(!backed.materialized, "read planning loaded every file onto the driver")
+      assert(ids() === (5L until 20L))
+    } finally spark.conf.unset(Snapshot.DRIVER_FOLD_THRESHOLD_CONF)
   }
 
   test("feature gates install wherever a feature turns on") {

@@ -800,8 +800,9 @@ class ScaleSuite extends AnyFunSuite {
         .isEmpty)
       assert(!t.log.snapshot.materialized,
         "the DV gate materialized the 150k-file map on the driver")
-      // 4. a plain read plans without the file list: the table has no
-      // deletion-vector feature, so the DV reader format is never built
+      // 4. a plain read plans without the file list: the DV reader
+      // format is built from the DV-carrying files alone, collected by a
+      // distributed filter
       t.toDF.where(org.apache.spark.sql.functions.col("id") > 5L)
         .queryExecution.optimizedPlan
       assert(!t.log.snapshot.materialized,
