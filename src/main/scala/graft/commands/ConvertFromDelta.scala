@@ -877,12 +877,10 @@ object ConvertFromDeltaCommand {
       val small: Seq[SingleAction] = Seq(proto.wrap, finalMeta.wrap) ++
         txnActions.map(_.wrap) ++ rtDomain.map(_.wrap)
       val parts = math.max(1, (n / 100000).toInt)
-      spark.createDataset(small).toDF
+      log.writeCheckpointDistributed(0L, spark.createDataset(small).toDF
         .unionByName(finalDS.map(_.wrap)(
           org.apache.spark.sql.Encoders.product[SingleAction]).toDF)
-        .repartition(parts)
-        .write.mode("overwrite")
-        .parquet(FileNames.checkpointFile(log.logPath, 0L).toString)
+        .repartition(parts))
       log.store.writeOverwrite(FileNames.lastCheckpointFile(log.logPath),
         Actions.lastCheckpointToJson(LastCheckpoint(0L, small.size + n)))
       log.store.writeOverwrite(FileNames.checksumFile(log.logPath, 0L),

@@ -1,0 +1,142 @@
+package graft.log
+
+import java.io.OutputStream
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.types.StructType
+
+/**
+ * Checkpoint parquet (rows of [[SingleAction]]) read and written
+ * in-process on the driver: Spark's own parquet row support, but no query
+ * plan and no job (reference concept: the kernel's parquet handler, which
+ * does checkpoint I/O without a query engine — re-designed over Spark's
+ * ParquetWriteSupport and parquet reader).
+ *
+ * A write is one parquet FILE put through [[LogStore.writeOverwrite]], so
+ * it appears whole under its name or not at all. A read takes checkpoint
+ * entries in either layout: such a file, or a directory of part files
+ * written by Spark (the distributed writer, older binaries).
+ */
+private[graft] object CheckpointCodec {
+  private lazy val encoder = ExpressionEncoder[SingleAction]()
+  private lazy val bound = encoder.resolveAndBind()
+
+  /** The schema checkpoints are read with: every column nullable, as
+    * Spark reads files, so a column an older writer lacked reads as null.
+    * Writes store the encoder's own schema, as a Spark write does. */
+  lazy val schema: StructType = graft.schema.SchemaUtils.toNullable(encoder.schema)
+
+  /** Write `rows` as one parquet file at `path`, configured as a Spark
+    * write of them is (compression, timestamp type, footer schema). */
+  def write(spark: SparkSession, store: LogStore, path: Path,
+      rows: Iterator[SingleAction]): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, encoder.schema)
+    val conf = job.getConfiguration
+    val toRow = encoder.createSerializer()
+    store.writeOverwrite(path) { out =>
+      val writer = new RowWriter(new StreamFile(out)).withConf(conf)
+        .withCompressionCodec(
+          CompressionCodecName.fromConf(conf.get(ParquetOutputFormat.COMPRESSION)))
+        .build()
+      try rows.foreach(r => writer.write(toRow(r)))
+      finally writer.close()
+    }
+  }
+
+  /** Every row of the checkpoint entries at `paths`, in order. */
+  def read(spark: SparkSession, store: LogStore,
+      paths: Seq[Path]): Seq[SingleAction] = {
+    val fromRow = bound.createDeserializer()
+    val out = Vector.newBuilder[SingleAction]
+    scan(spark, files(store, paths), schema) { r => out += fromRow(r); true }
+    out.result()
+  }
+
+  /** Whether any row of the checkpoint entry at `path` carries a Metadata
+    * action. Reads only that column, and stops at the first one. */
+  def holdsMetadata(spark: SparkSession, store: LogStore, path: Path): Boolean = {
+    val meta = schema("metaData")
+    val metaOnly = StructType(Seq(meta.copy(dataType =
+      StructType(Seq(meta.dataType.asInstanceOf[StructType]("id"))))))
+    var found = false
+    scan(spark, files(store, Seq(path)), metaOnly) { r =>
+      found = !r.isNullAt(0); !found
+    }
+    found
+  }
+
+  /** The visible parquet files of the entries at `paths`: an entry that
+    * is a file, else the part files of the directory. Hidden names
+    * (`_SUCCESS`, `_temporary`, `.crc`) are skipped, as Spark skips them. */
+  private def files(store: LogStore, paths: Seq[Path]): Seq[FileStatus] =
+    paths.flatMap { path =>
+      val fs = store.fs(path)
+      val st = fs.getFileStatus(path)
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(path).toSeq
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName)
+    }
+
+  /** Feed the rows of `files`, projected to `required`, to `f` until it
+    * returns false, with Spark's parquet reader called in-process (rows,
+    * not batches). Columns a file lacks read as null. */
+  private def scan(spark: SparkSession, files: Seq[FileStatus],
+      required: StructType)(f: InternalRow => Boolean): Unit = {
+    if (files.isEmpty) return
+    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, StructType(Nil), required, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    val it = files.iterator
+    var more = true
+    while (more && it.hasNext) {
+      val st = it.next()
+      val rows = readFile(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
+        st.getModificationTime, st.getLen, Map.empty))
+      try while (more && rows.hasNext) more = f(rows.next())
+      finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+  }
+
+  private class RowWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    override protected def self(): RowWriter = this
+    override protected def getWriteSupport(
+        conf: org.apache.hadoop.conf.Configuration) = new ParquetWriteSupport
+  }
+
+  /** A parquet output file over a stream the caller owns and closes. */
+  private class StreamFile(out: OutputStream) extends OutputFile {
+    private val stream = new PositionOutputStream {
+      private var pos = 0L
+      override def getPos: Long = pos
+      override def write(b: Int): Unit = { out.write(b); pos += 1 }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        out.write(b, off, len); pos += len
+      }
+      override def flush(): Unit = out.flush()
+      override def close(): Unit = out.flush()
+    }
+    override def create(blockSizeHint: Long): PositionOutputStream = stream
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = stream
+    override def supportsBlockSize(): Boolean = false
+    override def defaultBlockSize(): Long = 0L
+  }
+}

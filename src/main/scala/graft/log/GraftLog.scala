@@ -3,7 +3,7 @@ package graft.log
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.tx.OptimisticTransaction
 
@@ -17,11 +17,13 @@ import graft.tx.OptimisticTransaction
  * AddFiles (a 100 TB table at ~1 GB/file is ~1e5 entries — small) or,
  * past the state-reconstruction threshold (classic and v2 checkpoints
  * alike), checkpoint-backed: the checkpoint parquet plus a driver-held
- * overlay of later commits. Checkpoint writes and stream starts run where that state
- * lives — from the driver map, or over the checkpoint parquet on the
- * executors — with no file-count setting of their own. Snapshot updates
- * are incremental: only commit JSONs newer than the cached snapshot are
- * parsed.
+ * overlay of later commits. Checkpoint writes and stream starts run where
+ * that state lives, with no file-count setting of their own: a driver-held
+ * snapshot checkpoints through [[CheckpointCodec]] in-process, as one
+ * parquet file; a checkpoint-backed one over its checkpoint parquet on the
+ * executors, as a directory of part files. A checkpoint name appears only
+ * when its entry is complete. Snapshot updates are incremental: only
+ * commit JSONs newer than the cached snapshot are parsed.
  */
 class GraftLog private (
     @transient private val creatorSpark: SparkSession,
@@ -100,9 +102,7 @@ class GraftLog private (
     }
     val latest = deltas.map(_._1).max
     if (cached != null && cached.version == latest) return cached
-    val checkpoints = listing.flatMap(s =>
-      FileNames.checkpointVersion(s.getPath.getName))
-    val cp = checkpoints.filter(_ <= latest).maxOption
+    val cp = usableCheckpoint(listing, latest)
     val tail = deltas.filter(d => cp.forall(d._1 > _)).sortBy(_._1)
     currentSnapshot = Snapshot.build(this, cp, tail, latest)
     validateChecksum(currentSnapshot)
@@ -156,10 +156,28 @@ class GraftLog private (
       .filter(_._1 <= version).sortBy(_._1)
     require(deltas.nonEmpty && deltas.last._1 == version,
       s"Version $version not found in $logPath")
-    val cp = listing.flatMap(s => FileNames.checkpointVersion(s.getPath.getName))
-      .filter(_ <= version).maxOption
+    val cp = usableCheckpoint(listing, version)
     Snapshot.build(this, cp, deltas.filter(d => cp.forall(d._1 > _)), version)
   }
+
+  /** The checkpoint a load at `version` starts from: the highest listed
+    * one at or below it whose rows hold a Metadata action. A name with no
+    * Metadata behind it — the `_temporary`-only directory of a writer that
+    * died before its job committed — is passed over for the next lower
+    * checkpoint, or the JSON replay. Log cleanup picks its boundary by the
+    * same rule. */
+  private def usableCheckpoint(listing: Seq[org.apache.hadoop.fs.FileStatus],
+      version: Long): Option[Long] =
+    listing.flatMap(s => FileNames.checkpointVersion(s.getPath.getName))
+      .filter(_ <= version).sorted.reverseIterator.find { v =>
+        val usable =
+          try CheckpointCodec.holdsMetadata(spark, store,
+            FileNames.checkpointFile(logPath, v))
+          catch { case _: java.io.FileNotFoundException => false }
+        if (!usable) GraftLog.postCommitLog.warn(
+          s"checkpoint $v of $dataPath holds no metadata; loading past it")
+        usable
+      }
 
   /** Above this many commits, timestamp->version resolution binary-
     * searches the log instead of reading every commit's CommitInfo. */
@@ -679,19 +697,22 @@ class GraftLog private (
   private[graft] def sidecarBucket(path: String, k: Int): Int =
     GraftLog.sidecarBucketOf(path, k)
 
-  /** Write snapshot state as a Parquet checkpoint + `_last_checkpoint`.
-    * The file rows come from the snapshot ([[Snapshot.checkpointRows]]),
-    * so they are assembled where its file state lives: a driver-held
-    * snapshot ships its maps, a checkpoint-backed one is read from its
-    * checkpoint parquet on the executors. A snapshot backed by the
-    * checkpoint at its own version is already checkpointed; rewriting it
-    * would read and overwrite the same files in one job. */
+  /** Write snapshot state as a Parquet checkpoint + `_last_checkpoint`,
+    * where the snapshot's file state lives. A driver-held snapshot's maps
+    * go through [[CheckpointCodec]] in-process, with no Spark job: the
+    * checkpoint is one parquet FILE. A checkpoint-backed snapshot's rows
+    * are read from its checkpoint parquet, masked by its overlay, and
+    * written on the executors ([[writeCheckpointDistributed]]): the
+    * checkpoint is a directory of part files. Either way the checkpoint
+    * name appears only once the entry is complete. A v2 manifest is
+    * metadata-scale and always goes through the codec. A snapshot backed
+    * by the checkpoint at its own version is already checkpointed;
+    * rewriting it would read and overwrite the same files. */
   def checkpoint(snap: Snapshot = snapshot): Unit = {
     if (snap.lazyBase.exists(_.version == snap.version)) return
     val session = spark
     import session.implicits._
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cpPath = FileNames.checkpointFile(logPath, snap.version)
     val small: Seq[SingleAction] =
       Seq(snap.protocol.wrap, snap.metadata.wrap) ++
       snap.setTransactions.map { case (app, v) => SetTransaction(app, v).wrap } ++
@@ -715,12 +736,17 @@ class GraftLog private (
           lit(Long.MaxValue)) >= tombCutoff).count()
       else snap.tombstones.count(_.deletionTimestamp.forall(_ >= tombCutoff))
     val fileCount = snap.numFiles + liveTombCount
-    val fileRowsDF = snap.checkpointRows(tombCutoff)
+    val total = small.size + fileCount
+    // The file rows: executor-side for a checkpoint-backed snapshot, the
+    // driver maps otherwise.
+    val backedRows = snap.lazyBase.map(_.checkpointRows(session, tombCutoff))
+    def driverRows: Iterator[SingleAction] =
+      snap.allFiles.iterator.map(_.wrap) ++ snap.tombstones.iterator
+        .filter(_.deletionTimestamp.forall(_ >= tombCutoff)).map(_.wrap)
     // Parallelism: a checkpoint of N files is tiny metadata; one file per
     // ~100k actions keeps both write and cold-read costs bounded.
     val parts = math.max(1, (fileCount / 100000).toInt)
-    val total = small.size + fileCount
-    if (checkpointPolicy(snap) == "v2") {
+    val pointer = if (checkpointPolicy(snap) == "v2") {
       val k = sidecarBuckets(snap)
       // Buckets untouched since the previous v2 checkpoint (same bucket
       // count) keep their existing sidecar files; only churned buckets
@@ -735,32 +761,44 @@ class GraftLog private (
         else changedSidecarBuckets(prev.get, snap.version, k)
       val toWrite: Set[Int] =
         (0 until k).filter(b => changed.contains(b) || !reusable.contains(b)).toSet
-      // Static helper, not the instance method: a closure over `this`
-      // would drag the whole cached Snapshot into the task binary.
-      val kLocal = k
-      val bucketOf = org.apache.spark.sql.functions.udf(
-        (p: String) => GraftLog.sidecarBucketOf(p, kLocal))
+      val scDir = FileNames.sidecarDir(logPath, snap.version)
+      def sidecar(st: org.apache.hadoop.fs.FileStatus, b: Int): SingleAction =
+        SidecarFile(s"_sidecars/${scDir.getName}/bucket=$b/${st.getPath.getName}",
+          st.getLen, st.getModificationTime).wrap
       val written: Seq[SingleAction] =
         if (toWrite.isEmpty) Nil
-        else {
-          val scDir = FileNames.sidecarDir(logPath, snap.version)
-          fileRowsDF
-            .withColumn("bucket",
-              bucketOf(coalesce(col("add.path"), col("remove.path"))))
-            .where(col("bucket").isin(toWrite.toSeq: _*))
-            .repartition(math.max(parts, toWrite.size min 32), col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite")
-            .parquet(scDir.toString)
-          val fs = store.fs(scDir)
-          toWrite.toSeq.flatMap { b =>
-            val bDir = new Path(scDir, s"bucket=$b")
-            if (!fs.exists(bDir)) Nil
-            else fs.listStatus(bDir).toSeq
-              .filter(_.getPath.getName.endsWith(".parquet"))
-              .map(st => SidecarFile(
-                s"_sidecars/${scDir.getName}/bucket=$b/${st.getPath.getName}",
-                st.getLen, st.getModificationTime).wrap)
-          }
+        else backedRows match {
+          case Some(rows) =>
+            // Static helper, not the instance method: a closure over `this`
+            // would drag the whole cached Snapshot into the task binary.
+            val kLocal = k
+            val bucketOf = org.apache.spark.sql.functions.udf(
+              (p: String) => GraftLog.sidecarBucketOf(p, kLocal))
+            rows
+              .withColumn("bucket",
+                bucketOf(coalesce(col("add.path"), col("remove.path"))))
+              .where(col("bucket").isin(toWrite.toSeq: _*))
+              .repartition(math.max(parts, toWrite.size min 32), col("bucket"))
+              .write.partitionBy("bucket").mode("overwrite")
+              .parquet(scDir.toString)
+            val fs = store.fs(scDir)
+            toWrite.toSeq.flatMap { b =>
+              val bDir = new Path(scDir, s"bucket=$b")
+              if (!fs.exists(bDir)) Nil
+              else fs.listStatus(bDir).toSeq
+                .filter(_.getPath.getName.endsWith(".parquet"))
+                .map(sidecar(_, b))
+            }
+          case None =>
+            // One sidecar file per changed bucket that holds rows.
+            driverRows.toSeq.groupBy(r =>
+                sidecarBucket(Option(r.add).map(_.path).getOrElse(r.remove.path), k))
+              .filter { case (b, _) => toWrite.contains(b) }
+              .toSeq.sortBy(_._1).map { case (b, rows) =>
+                val p = new Path(scDir, s"bucket=$b/part-00000.parquet")
+                CheckpointCodec.write(session, store, p, rows.iterator)
+                sidecar(store.fs(p).getFileStatus(p), b)
+              }
         }
       // An unchanged reusable bucket kept its rows (churn would have put
       // it in `changed`), so its previous sidecar carries over as-is.
@@ -768,38 +806,65 @@ class GraftLog private (
         case (b, rows) if !changed.contains(b) => rows
       }.flatten.toSeq
       val sidecars = written ++ reused
-      val manifest = small ++
-        Seq(CheckpointMetadata(snap.version, sidecars.size.toLong).wrap) ++
-        sidecars
-      session.createDataset(manifest).repartition(1)
-        .write.mode("overwrite").parquet(cpPath.toString)
-      store.writeOverwrite(FileNames.lastCheckpointFile(logPath),
-        Actions.lastCheckpointToJson(LastCheckpoint(snap.version, total, Some(k))))
+      writeCheckpointFile(snap.version, small.iterator ++
+        Iterator(CheckpointMetadata(snap.version, sidecars.size.toLong).wrap) ++
+        sidecars.iterator)
+      LastCheckpoint(snap.version, total, Some(k))
     } else {
-      session.createDataset(small).toDF.unionByName(fileRowsDF)
-        .repartition(parts)
-        .write.mode("overwrite").parquet(cpPath.toString)
-      store.writeOverwrite(FileNames.lastCheckpointFile(logPath),
-        Actions.lastCheckpointToJson(LastCheckpoint(snap.version, total)))
+      backedRows match {
+        case Some(rows) => writeCheckpointDistributed(snap.version,
+          session.createDataset(small).toDF.unionByName(rows).repartition(parts))
+        case None => writeCheckpointFile(snap.version, small.iterator ++ driverRows)
+      }
+      LastCheckpoint(snap.version, total)
     }
+    store.writeOverwrite(FileNames.lastCheckpointFile(logPath),
+      Actions.lastCheckpointToJson(pointer))
+  }
+
+  /** The checkpoint at `version` as one parquet file, written in-process.
+    * A directory under the name (the distributed layout) cannot be
+    * replaced atomically by a file, so it goes first. */
+  private def writeCheckpointFile(version: Long,
+      rows: Iterator[SingleAction]): Unit = {
+    val cpPath = FileNames.checkpointFile(logPath, version)
+    if (store.exists(cpPath) && store.fs(cpPath).getFileStatus(cpPath).isDirectory)
+      store.deleteRecursive(cpPath)
+    CheckpointCodec.write(spark, store, cpPath, rows)
+  }
+
+  /** The checkpoint at `version` as the part files of `rows`, written on
+    * the executors into a hidden staging directory of the log that moves
+    * onto the checkpoint name after the job commits, replacing an entry of
+    * either layout there. A job that fails or dies leaves nothing under
+    * the name — only the staging directory, which log cleanup expires. */
+  private[graft] def writeCheckpointDistributed(version: Long,
+      rows: DataFrame): Unit = {
+    val cpPath = FileNames.checkpointFile(logPath, version)
+    val staging = new Path(logPath,
+      s"${GraftLog.stagingPrefix}${java.util.UUID.randomUUID}")
+    try {
+      rows.write.parquet(staging.toString)
+      store.deleteRecursive(cpPath)
+      if (!store.fs(staging).rename(staging, cpPath))
+        throw new java.io.IOException(s"could not move $staging onto $cpPath")
+    } finally store.deleteRecursive(staging)
   }
 
   /** SidecarFile rows of the v2 checkpoint at `version`, keyed by bucket
-    * id. */
+    * id; none when that checkpoint is gone (every bucket then rewrites). */
   private def previousV2Sidecars(version: Long): Map[Int, Seq[SingleAction]] = {
-    val session = spark
-    import session.implicits._
     val bucketRe = ".*/bucket=(\\d+)/.*".r
-    session.read.schema(session.emptyDataset[SingleAction].schema)
-      .parquet(FileNames.checkpointFile(logPath, version).toString)
-      .as[SingleAction].collect()
-      .filter(_.sidecar != null)
+    val rows =
+      try CheckpointCodec.read(spark, store,
+        Seq(FileNames.checkpointFile(logPath, version)))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    rows.filter(_.sidecar != null)
       .groupBy(_.sidecar.path match {
         case bucketRe(b) => b.toInt
         case _ => -1
       })
-      .collect { case (b, rows) if b >= 0 => b -> rows.toSeq }
-      .toMap
+      .collect { case (b, rs) if b >= 0 => b -> rs }
   }
 
   /** Buckets whose paths were added/removed by any commit in
@@ -837,8 +902,7 @@ class GraftLog private (
     * feature — re-designed.) */
   def cleanUpExpiredLogs(retentionMillis: Long): Int = {
     val listing = store.list(logPath)
-    val cp = listing.flatMap(s => FileNames.checkpointVersion(s.getPath.getName))
-      .maxOption.getOrElse(return 0)
+    val cp = usableCheckpoint(listing, Long.MaxValue).getOrElse(return 0)
     val cutoff = System.currentTimeMillis() - retentionMillis
     val snap = update()
     val classicPolicy = checkpointPolicy(snap) != "v2"
@@ -846,8 +910,8 @@ class GraftLog private (
       .get("graft.requireCheckpointProtectionBeforeVersion").map(_.toLong)
     // (version, path, expired, isCheckpoint) for every version-carrying
     // log file that is at all deletable: commits/checksums below the
-    // latest checkpoint, plus (classic policy) superseded checkpoint
-    // files. Checkpoints are Spark-written DIRECTORIES — they delete
+    // latest checkpoint, plus (classic policy) superseded checkpoints.
+    // A checkpoint is a file or a directory of part files — it deletes
     // recursively, and LAST, so a failure mid-sweep cannot strand a
     // commit prefix whose checkpoint is already gone.
     val entries = listing.flatMap { s =>
@@ -866,11 +930,15 @@ class GraftLog private (
     val belowSweepOk = boundary.forall(b => cp >= b) && below.forall(_._3)
     var n = 0
     (above.filter(_._3) ++ (if (belowSweepOk) below else Seq.empty))
-      .sortBy(_._4) // commits/checksums first, checkpoint dirs last
+      .sortBy(_._4) // commits/checksums first, checkpoints last
       .foreach { case (_, p, _, isCp) =>
         if (isCp) store.deleteRecursive(p) else store.delete(p)
         n += 1
       }
+    // Staging directories of distributed checkpoint writes that died.
+    listing.filter(s => s.getPath.getName.startsWith(GraftLog.stagingPrefix) &&
+        s.getModificationTime < cutoff)
+      .foreach { s => store.deleteRecursive(s.getPath); n += 1 }
     n
   }
 }
@@ -878,6 +946,10 @@ class GraftLog private (
 object GraftLog {
   private val cache = new ConcurrentHashMap[String, GraftLog]()
   private val postCommitLog = org.slf4j.LoggerFactory.getLogger(classOf[GraftLog])
+
+  /** Name prefix of the hidden staging directories of distributed
+    * checkpoint writes. */
+  private val stagingPrefix = ".cp-staging-"
 
   /** User-supplied time-travel timestamp -> epoch millis. Accepts
     * 'yyyy-MM-dd[ HH:mm:ss[.f...]]' — a date-only literal means midnight,
@@ -1012,6 +1084,18 @@ case class LazyFileState(
     (base -- tailUntombed ++ tailTombs).values.toSeq
   }
 
+  /** The file-action rows a checkpoint of this state holds — every live
+    * AddFile plus the tombstones deleted at or after `tombCutoff` — in the
+    * full SingleAction schema, read from the checkpoint parquet masked by
+    * the overlay, on the executors. */
+  def checkpointRows(spark: SparkSession, tombCutoff: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val enc = org.apache.spark.sql.Encoders.product[SingleAction]
+    val tombs = tombsDS(spark).where(coalesce(col("deletionTimestamp"),
+      lit(Long.MaxValue)) >= tombCutoff)
+    toDS(spark).map(_.wrap)(enc).union(tombs.map(_.wrap)(enc)).toDF
+  }
+
   /** Tombstones as a Dataset (VACUUM / checkpoint-scale paths). */
   def tombsDS(spark: SparkSession): Dataset[RemoveFile] = {
     val enc = org.apache.spark.sql.Encoders.product[RemoveFile]
@@ -1125,27 +1209,6 @@ class Snapshot(
     if (materialized) allFiles.filter(_.dvPath.isDefined)
     else allFilesDS.filter(
       org.apache.spark.sql.functions.col("dvPath").isNotNull).collect().toSeq
-
-  /** The file-action rows a checkpoint of this snapshot holds — every
-    * live AddFile plus the tombstones deleted at or after `tombCutoff` —
-    * in the full SingleAction schema. A checkpoint-backed snapshot reads
-    * them from its checkpoint parquet masked by its overlay, on the
-    * executors, even after a caller materialized its maps; a driver-held
-    * one ships its maps. */
-  private[log] def checkpointRows(tombCutoff: Long): DataFrame = {
-    val enc = Encoders.product[SingleAction]
-    lazyBase match {
-      case Some(b) =>
-        import org.apache.spark.sql.functions.{coalesce, col, lit}
-        val tombs = b.tombsDS(spark).where(coalesce(col("deletionTimestamp"),
-          lit(Long.MaxValue)) >= tombCutoff)
-        b.toDS(spark).map(_.wrap)(enc).union(tombs.map(_.wrap)(enc)).toDF
-      case None =>
-        val liveTombs = tombstones.filter(
-          _.deletionTimestamp.forall(_ >= tombCutoff))
-        spark.createDataset(allFiles.map(_.wrap) ++ liveTombs.map(_.wrap))(enc).toDF
-    }
-  }
 
   /** Cached distributed skipping state: one row per live file with the
     * stats JSON pre-parsed, persisted once per (immutable) snapshot so
@@ -1263,14 +1326,14 @@ object Snapshot {
 
   /** Cold build: optional Parquet checkpoint + JSON deltas folded on top.
     *
-    * Small checkpoints stream partition-by-partition to the driver (no
-    * whole-checkpoint collect). Large ones reconstruct DISTRIBUTED: graft
-    * checkpoints are state dumps (one row per live file — the reconcile
-    * the reference replays with repartition+sort, Snapshot.scala:598-655,
-    * already happened at checkpoint time), so executors decode the
-    * parquet in parallel and the driver receives ready AddFile arrays —
-    * one job, no single-threaded action stream, peak driver memory
-    * bounded by the LIVE file state it must hold for planning anyway. */
+    * Small checkpoints fold on the driver, read in-process by
+    * [[CheckpointCodec]] with no Spark job. Large ones reconstruct
+    * DISTRIBUTED: graft checkpoints are state dumps (one row per live file
+    * — the reconcile the reference replays with repartition+sort,
+    * Snapshot.scala:598-655, already happened at checkpoint time), so the
+    * snapshot stays checkpoint-backed and executors decode the parquet in
+    * parallel — peak driver memory bounded by the LIVE file state it must
+    * hold for planning anyway. */
   def build(log: GraftLog, checkpointVersion: Option[Long],
       deltas: Seq[(Long, Path)], version: Long): Snapshot = {
     val base = checkpointVersion match {
@@ -1278,32 +1341,36 @@ object Snapshot {
         val session = log.spark
         import session.implicits._
         import org.apache.spark.sql.functions.col
-        val schema = session.emptyDataset[SingleAction].schema
+        val schema = CheckpointCodec.schema
         val cpPath = FileNames.checkpointFile(log.logPath, cp)
-        val manifest = log.spark.read.schema(schema)
-          .parquet(cpPath.toString).as[SingleAction]
+        def readDS(paths: Seq[Path]) =
+          session.read.schema(schema).parquet(paths.map(_.toString): _*)
+            .as[SingleAction]
+        lazy val manifest = readDS(Seq(cpPath))
+        lazy val manifestRows = CheckpointCodec.read(session, log.store, Seq(cpPath))
         // V2 checkpoints: file actions live in sidecar parquet; the
-        // manifest is metadata-scale (SidecarFile pointers included).
-        // The `_last_checkpoint` hint lets classic checkpoints skip the
-        // probe job; only an absent/stale pointer forces one.
+        // manifest is metadata-scale (SidecarFile pointers included) and
+        // is read in-process. The `_last_checkpoint` pointer tells a
+        // classic checkpoint from a v2 one; only an absent/stale pointer
+        // probes, with a job, a checkpoint of unknown size.
         val pointer = log.lastCheckpoint.filter(_.version == cp)
-        val sidecars =
-          if (pointer.exists(_.sidecarBuckets.isEmpty)) Array.empty[SidecarFile]
-          else manifest.filter(col("sidecar").isNotNull)
-            .select(col("sidecar.*")).as[SidecarFile].collect()
+        val sidecars: Seq[SidecarFile] = pointer match {
+          case Some(p) if p.sidecarBuckets.isEmpty => Nil
+          case Some(_) => manifestRows.flatMap(r => Option(r.sidecar))
+          case None => manifest.filter(col("sidecar").isNotNull)
+            .select(col("sidecar.*")).as[SidecarFile].collect().toSeq
+        }
 
         val threshold = log.spark.conf
           .getOption(DRIVER_FOLD_THRESHOLD_CONF).map(_.toLong)
           .getOrElse(DRIVER_FOLD_THRESHOLD_DEFAULT)
-        val sidecarPaths =
-          sidecars.map(s => new Path(log.logPath, s.path).toString).toSeq
+        val sidecarPaths = sidecars.map(s => new Path(log.logPath, s.path))
         // With no (or a stale) `_last_checkpoint` size hint — e.g. time
         // travel to an OLD checkpointed version — one distributed count
         // decides the venue; a 1M-action checkpoint must not stream
         // through the driver fold just because the pointer moved on.
         lazy val countedSize =
-          if (sidecars.isEmpty) manifest.count()
-          else log.spark.read.schema(schema).parquet(sidecarPaths: _*).count()
+          if (sidecars.isEmpty) manifest.count() else readDS(sidecarPaths).count()
         if (pointer.map(_.size).getOrElse(countedSize) > threshold) {
           // Distributed: executors decode per-kind pruned scans in
           // parallel; the driver receives ready arrays. The non-file
@@ -1314,27 +1381,23 @@ object Snapshot {
           // snapshot holds a LazyFileState pointer and materializes the
           // driver maps only if a whole-state caller forces them —
           // planning/skipping/VACUUM run over the executor-side scans.
-          val manifestPaths =
-            if (sidecars.isEmpty) Seq(cpPath.toString) else sidecarPaths
+          val manifestPaths = (if (sidecars.isEmpty) Seq(cpPath) else sidecarPaths)
+            .map(_.toString)
           val lazyState = LazyFileState(cp, manifestPaths, Map.empty, Set.empty)
           new Snapshot(log, cp, state.protocol, state.metadata, state.txns,
             lazyState.materialize(log.spark),
             lazyState.materializeTombs(log.spark), 0L, state.domains,
             Some(lazyState))
         } else {
-          // Small checkpoint: ONE pass folds every action kind — streamed
-          // from a classic checkpoint, collected in one job from a v2
-          // manifest and its sidecars (no extra jobs on the cold-load path).
+          // Small checkpoint: ONE in-process pass folds every action kind
+          // of the manifest and its sidecars.
           var state = NonFileState.empty
           val files = scala.collection.mutable.HashMap.empty[String, AddFile]
           val tombs = scala.collection.mutable.HashMap.empty[String, RemoveFile]
-          val it =
-            if (sidecars.isEmpty) manifest.toLocalIterator()
-            else manifest.union(log.spark.read.schema(schema)
-              .parquet(sidecarPaths: _*).as[SingleAction])
-              .collectAsList().iterator()
-          while (it.hasNext) {
-            it.next().unwrap match {
+          val rows = manifestRows.iterator ++
+            CheckpointCodec.read(session, log.store, sidecarPaths).iterator
+          rows.foreach {
+            _.unwrap match {
               case a: AddFile => files.put(a.path, a)
               case r: RemoveFile => tombs.put(r.path, r)
               case other => state = state.fold(other)

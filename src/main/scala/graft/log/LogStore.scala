@@ -41,12 +41,16 @@ class LogStore(hadoopConf: Configuration) extends Serializable {
   def writeOverwrite(path: Path, content: String): Unit =
     writeOverwrite(path, Iterator.single(content))
 
-  /** Streaming overwrite with ATOMIC VISIBILITY: chunks stream to a temp
-    * sibling, which then moves onto the final name — a reader never sees
-    * a prefix. The streamed analogue of [[writeOverwrite(Path,String)]]
-    * for multi-million-line objects. */
+  /** Streaming overwrite of text chunks, for multi-million-line objects. */
   def writeOverwrite(path: Path, chunks: Iterator[String]): Unit =
-    materialize(path, overwrite = true)(writeChunks(chunks))
+    writeOverwrite(path)(writeChunks(chunks))
+
+  /** Overwrite with ATOMIC VISIBILITY: `body` streams its bytes to a temp
+    * sibling, which then moves onto the final name — a reader sees the old
+    * object or the whole new one, never a prefix (checkpoint parquet goes
+    * through here too). Every overwrite funnels into this primitive. */
+  def writeOverwrite(path: Path)(body: java.io.OutputStream => Unit): Unit =
+    materialize(path, overwrite = true)(body)
 
   /** Stream-copy `src` onto `dst` (overwrite, atomic visibility) without
     * ever materializing the content in driver memory. */

@@ -692,19 +692,56 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("log cleanup deletes superseded checkpoint DIRECTORIES recursively") {
+    // Both checkpoint layouts are superseded and removed: the v10 FILE a
+    // driver-held snapshot writes, and the v11 DIRECTORY of part files
+    // written from a checkpoint-backed snapshot, which must delete
+    // recursively, not throw.
     val dir = tmpDir()
-    // checkpoints at v10 and v20; the v10 checkpoint is a Spark-written
-    // parquet directory that must delete recursively, not throw
-    (0 until 22).foreach(_ => Graft.write(spark.range(3).toDF("id"), dir))
-    val log = GraftLog.forTable(spark, dir)
-    val cpDir = new java.io.File(s"$dir/_graft_log",
-      f"${10L}%020d.checkpoint.parquet")
-    assert(cpDir.isDirectory, s"expected checkpoint dir at $cpDir")
-    val removed = log.cleanUpExpiredLogs(retentionMillis = 0L)
+    def cp(v: Long) = new java.io.File(s"$dir/_graft_log", f"$v%020d.checkpoint.parquet")
+    (0 until 12).foreach(_ => Graft.write(spark.range(3).toDF("id"), dir))
+    assert(cp(10L).isFile, s"expected a checkpoint file at ${cp(10L)}")
+    GraftLog.clearCache()
+    spark.conf.set(graft.log.Snapshot.DRIVER_FOLD_THRESHOLD_CONF, "0")
+    try {
+      val backed = GraftLog.forTable(spark, dir).update()
+      assert(backed.checkpointBacked && backed.version === 11L)
+      GraftLog.forTable(spark, dir).checkpoint(backed)
+    } finally spark.conf.unset(graft.log.Snapshot.DRIVER_FOLD_THRESHOLD_CONF)
+    assert(cp(11L).isDirectory, s"expected a checkpoint dir at ${cp(11L)}")
+    GraftLog.clearCache()
+    (12 until 22).foreach(_ => Graft.write(spark.range(3).toDF("id"), dir))
+    assert(cp(20L).isFile)
+    val removed = GraftLog.forTable(spark, dir).cleanUpExpiredLogs(retentionMillis = 0L)
     assert(removed > 0)
-    assert(!cpDir.exists, "superseded checkpoint directory survived cleanup")
+    assert(!cp(10L).exists, "superseded checkpoint file survived cleanup")
+    assert(!cp(11L).exists, "superseded checkpoint directory survived cleanup")
     GraftLog.clearCache()
     assert(Graft.read(spark, dir).count() === 66)
+  }
+
+  test("a checkpoint directory left by a crashed writer is loaded past") {
+    // A distributed writer that dies before its job commits leaves the
+    // checkpoint name holding only `_temporary/`. Loads and log cleanup
+    // both pass over it for the checkpoint below.
+    import graft.log.FileNames
+    val dir = tmpDir()
+    (0 until 12).foreach(i =>
+      Graft.write(spark.range(i * 10L, i * 10L + 10).toDF("id"), dir))
+    val log = GraftLog.forTable(spark, dir)
+    val crashed = FileNames.checkpointFile(log.logPath, 11L)
+    assert(!log.store.exists(crashed))
+    log.store.mkdirs(new org.apache.hadoop.fs.Path(crashed, "_temporary/0"))
+    GraftLog.clearCache()
+    assert(Graft.read(spark, dir).count() === 120)
+    Graft.write(spark.range(120, 130).toDF("id"), dir)
+    // the boundary is the v10 checkpoint: commit 10 and the v10
+    // checkpoint stay, or the next cold load would have nothing to fold
+    GraftLog.forTable(spark, dir).cleanUpExpiredLogs(retentionMillis = 0L)
+    assert(!log.store.exists(FileNames.deltaFile(log.logPath, 9L)))
+    assert(log.store.exists(FileNames.deltaFile(log.logPath, 10L)))
+    GraftLog.clearCache()
+    assert(Graft.read(spark, dir).as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().sorted.toSeq === (0L until 130L))
   }
 
   test("show partitions and truncate") {
@@ -1474,6 +1511,37 @@ class CoreSuite extends AnyFunSuite with BeforeAndAfterAll {
         graft.log.FileNames.checksumFile(log.logPath, snap.version)))
       assert(crc.numFiles === snap.numFiles)
       assert(Graft.read(spark, dir).count() === 40)
+    }
+  }
+
+  test("a failed checkpoint write leaves no entry and heals at the next interval") {
+    import graft.log.FileNames
+    FaultyLogStore.installed(spark) {
+      val dir = tmpDir()
+      def batch(i: Int) = spark.range(i * 10L, i * 10L + 10).toDF("id")
+      (0 until 10).foreach(i => Graft.write(batch(i), dir))
+      val log = GraftLog.forTable(spark, dir)
+      val cp10 = FileNames.checkpointFile(log.logPath, 10L)
+      val v = FaultyLogStore.failing(_.getName == cp10.getName) {
+        val txn = log.startTransaction()
+        txn.commit(txn.writeFiles(batch(10)), "WRITE")
+      }
+      assert(v === 10L, "a failed checkpoint failed its durable commit")
+      assert(!log.store.exists(cp10), "a failed checkpoint write left an entry")
+      def ids(): Seq[Long] = {
+        GraftLog.clearCache()
+        Graft.read(spark, dir).as[Long](org.apache.spark.sql.Encoders.scalaLong)
+          .collect().sorted.toSeq
+      }
+      assert(ids() === (0L until 110L))
+      (11 until 21).foreach(i => Graft.write(batch(i), dir))
+      val log2 = GraftLog.forTable(spark, dir)
+      assert(log2.store.exists(FileNames.checkpointFile(log2.logPath, 20L)))
+      // with every commit below it gone, a cold load can only start from
+      // the v20 checkpoint
+      log2.cleanUpExpiredLogs(retentionMillis = 0L)
+      assert(!log2.store.exists(FileNames.deltaFile(log2.logPath, 0L)))
+      assert(ids() === (0L until 210L))
     }
   }
 }

@@ -16,9 +16,10 @@ class FaultyLogStore(conf: Configuration) extends LogStore(conf) {
     super.write(path, chunks)
   }
 
-  override def writeOverwrite(path: Path, chunks: Iterator[String]): Unit = {
+  override def writeOverwrite(path: Path)(
+      body: java.io.OutputStream => Unit): Unit = {
     FaultyLogStore.check(path)
-    super.writeOverwrite(path, chunks)
+    super.writeOverwrite(path)(body)
   }
 }
 

@@ -410,11 +410,40 @@ class PlanAuditSuite extends AnyFunSuite {
     }
   }
 
+  /** How many Spark jobs `body` starts. A listener tags each job by a
+    * local property; the listener bus delivers in order, so once a
+    * sentinel job started after `body` is seen, every job of `body` has
+    * been seen too. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.audit")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.audit", "body")
+      body
+      sc.setLocalProperty("graft.audit", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("sentinel"), "listener never saw the sentinel job")
+      jobs.asScala.count(_ == "body")
+    } finally {
+      sc.setLocalProperty("graft.audit", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("small-list stats skipping runs no Spark job and compiles no code") {
     // Every read and DML scan skips files through this path: a plan per
     // call, or generated code baked with each query's literals, is paid
     // on every op. Two calls with fresh literals must add neither.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
       GreaterThanOrEqual, LessThanOrEqual, Literal}
     import org.apache.spark.metrics.source.CodegenMetrics
@@ -430,31 +459,48 @@ class PlanAuditSuite extends AnyFunSuite {
       .size
     assert(snap.allFiles.size === 4)
     assert(kept(0L) === 1) // warm-up: class loading only
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.audit")))
-          .getOrElse(""))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val jobs = jobsDuring { assert(kept(150L) === 1 && kept(290L) === 2) }
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "stats skipping compiled generated code")
+    assert(jobs === 0, "stats skipping ran a Spark job")
+  }
+
+  test("a commit that checkpoints a driver-held table runs no Spark job") {
+    // The checkpoint rows are already on the driver: shipping them
+    // through a Spark write put two jobs on the commit path of every
+    // checkpointing op.
+    Seq("classic", "v2").foreach { policy =>
+      val dir = tmpDir()
+      Graft.write(spark.range(10).toDF("id"), dir, configuration = Map(
+        "graft.checkpointPolicy" -> policy, "graft.checkpointInterval" -> "2"))
+      Graft.write(spark.range(10, 20).toDF("id"), dir)
+      val log = graft.log.GraftLog.forTable(spark, dir)
+      assert(!log.update().checkpointBacked)
+      val txn = log.startTransaction()
+      val adds = txn.writeFiles(spark.range(20, 30).toDF("id"))
+      var v = -1L
+      val jobs = jobsDuring { v = txn.commit(adds, "WRITE") }
+      assert(v === 2L)
+      assert(log.store.exists(graft.log.FileNames.checkpointFile(log.logPath, 2L)),
+        s"$policy: no checkpoint written")
+      assert(jobs === 0, s"$policy: the checkpointing commit ran $jobs Spark jobs")
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.audit", "skip")
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      assert(kept(150L) === 1 && kept(290L) === 2)
-      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
-        "stats skipping compiled generated code")
-      // The listener bus delivers in order: once the sentinel job is
-      // seen, every job the skipping calls started has been seen too.
-      sc.setLocalProperty("graft.audit", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains("sentinel"), "listener never saw the sentinel job")
-      assert(!jobs.contains("skip"), "stats skipping ran a Spark job")
-    } finally {
-      sc.setLocalProperty("graft.audit", null)
-      sc.removeSparkListener(listener)
+  }
+
+  test("a cold load of a below-threshold checkpoint runs no Spark job") {
+    Seq("classic", "v2").foreach { policy =>
+      val dir = tmpDir()
+      (0 until 3).foreach(i =>
+        Graft.write(spark.range(i * 10L, i * 10L + 10).toDF("id"), dir,
+          configuration = if (i > 0) Map.empty else Map(
+            "graft.checkpointPolicy" -> policy, "graft.checkpointInterval" -> "2")))
+      graft.log.GraftLog.clearCache()
+      var snap: graft.log.Snapshot = null
+      val jobs = jobsDuring { snap = graft.log.GraftLog.forTable(spark, dir).update() }
+      assert(snap.version === 2L && !snap.checkpointBacked)
+      assert(jobs === 0, s"$policy: the cold load ran $jobs Spark jobs")
+      assert(Graft.read(spark, dir).count() === 30)
     }
   }
 

@@ -621,9 +621,11 @@ class ScaleSuite extends AnyFunSuite {
 
       // Same version: a snapshot backed by the checkpoint at its own
       // version is already checkpointed, and is not rewritten.
-      def cpFiles(): Seq[(String, Long)] =
-        Option(new java.io.File(cpPath.toUri.getPath).listFiles).toSeq.flatten
+      def cpFiles(): Seq[(String, Long)] = {
+        val entry = new java.io.File(cpPath.toUri.getPath)
+        (if (entry.isDirectory) entry.listFiles.toSeq else Seq(entry).filter(_.exists))
           .map(f => (f.getName, f.lastModified)).sorted
+      }
       val filesBefore = cpFiles()
       assert(filesBefore.nonEmpty)
       spark.conf.set(Snapshot.DRIVER_FOLD_THRESHOLD_CONF, "0")
