@@ -85,8 +85,7 @@ class GraftTable private[graft] (
   def insertReplaceUsing(source: DataFrame, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "REPLACE USING requires at least one column")
     InsertReplaceCommand.run(this, source,
-      cols.map(c => col(s"t.`$c`") === col(s"s.`$c`")).reduce(_ && _),
-      pruneKeys = cols)
+      cols.map(c => col(s"t.`$c`") === col(s"s.`$c`")).reduce(_ && _))
   }
 
   // ---- Java/py4j-friendly overloads (the Python API binds these; py4j

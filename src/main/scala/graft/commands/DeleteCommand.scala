@@ -2,6 +2,9 @@ package graft.commands
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression,
+  GreaterThanOrEqual, LessThanOrEqual, Literal, PredicateHelper, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.sql.functions._
 
@@ -10,9 +13,14 @@ import graft.log._
 import graft.tx.OptimisticTransaction
 
 /** Shared plumbing for row-level DML rewrites. */
-object Dml {
+object Dml extends PredicateHelper {
+  /** A scanned row's file identity: the URI Spark's file source reports
+    * for the file the row came from. Every DML that finds touched files
+    * through a scan groups by this column. */
+  def fileUri: Column = col("_metadata.file_path")
+
   /** Resolve the table-relative AddFiles that actually contain matching
-    * rows, by scanning candidates with `input_file_name()`. */
+    * rows, by scanning candidates grouped by [[fileUri]]. */
   def findTouchedFiles(
       spark: SparkSession,
       log: GraftLog,
@@ -33,22 +41,71 @@ object Dml {
     if (candidates.isEmpty) return (Nil, 0L)
     val df = GraftFileIndex.dataFrame(spark, log, txn.snapshot, Some(candidates))
     val perFile = df.filter(condition)
-      .groupBy(input_file_name().as("f")).count().collect()
-    (resolveTouched(log, candidates, perFile.map(_.getString(0))),
+      .groupBy(fileUri.as("f")).count().collect()
+    (resolveTouched(log, candidates, perFile.map(_.getString(0)).toIndexedSeq),
       perFile.map(_.getLong(1)).sum)
   }
 
-  /** THE one mapping from `input_file_name()` URIs back to the AddFiles
-    * that produced them (normalized absolute paths both sides) — shared
-    * by every command that detects touched files through a scan. */
+  /** THE one mapping from [[fileUri]] values back to the AddFiles that
+    * produced them (decoded absolute paths both sides), one per URI, in
+    * order — shared by every command that detects touched files through
+    * a scan. A URI that is no candidate's is an error, not a skip: its
+    * changes would otherwise be lost. */
   def resolveTouched(
       log: GraftLog,
       candidates: Seq[AddFile],
       fileUris: Seq[String]): Seq[AddFile] = {
     val byPath = candidates.map(f =>
       new Path(new Path(log.dataPath, f.path).toUri.getPath).toString -> f).toMap
-    fileUris.flatMap { uri =>
-      byPath.get(new Path(new java.net.URI(uri).getPath).toString)
+    fileUris.map { uri =>
+      byPath.getOrElse(new Path(new java.net.URI(uri).getPath).toString,
+        throw new IllegalStateException(s"scanned file $uri is not a candidate"))
+    }
+  }
+
+  /**
+   * Exact data filters that `target JOIN source ON condition` puts on the
+   * target: every target row that can match satisfies them, so a file
+   * whose stats refute them holds no match. They are the condition's
+   * deterministic target-only conjuncts, plus `t.col BETWEEN lo AND hi`
+   * for each conjunct `t.col = <source expression>` on a column stats
+   * skipping compares, with lo and hi from one aggregate over the source.
+   * `=` rejects nulls, so a source whose key is all null (or which is
+   * empty) matches nothing, and that key's filter is `false`. Other
+   * conjuncts (`OR` across sides, `<=>`, non-equi) filter nothing.
+   * `target` only lends its schema, through the analyzed join.
+   */
+  def joinFilters(
+      spark: SparkSession,
+      target: DataFrame,
+      source: DataFrame,
+      condition: Column): Seq[Expression] = {
+    val join = target.join(source, condition, "inner").queryExecution.analyzed
+      .collectFirst { case j: Join => j }
+    join.toSeq.flatMap { j =>
+      def onlyFrom(side: LogicalPlan, e: Expression) = e.deterministic &&
+        !SubqueryExpression.hasSubquery(e) && e.references.subsetOf(side.outputSet)
+      val conjuncts = j.condition.toSeq.flatMap(splitConjunctivePredicates)
+      val targetOnly = conjuncts.filter(onlyFrom(j.left, _))
+      def key(a: Attribute, e: Expression) = onlyFrom(j.left, a) &&
+        graft.stats.StatsSkipping.statsType(a.dataType) &&
+        e.references.nonEmpty && onlyFrom(j.right, e)
+      val keys: Seq[(Attribute, Expression)] = conjuncts.collect {
+        case EqualTo(a: Attribute, e) if key(a, e) => a -> e
+        case EqualTo(e, a: Attribute) if key(a, e) => a -> e
+      }
+      val ranges = if (keys.isEmpty) Nil else {
+        val bounds = SparkShims.ofRows(spark, j.right).select(keys.flatMap { case (_, e) =>
+          Seq(min(SparkShims.column(e)), max(SparkShims.column(e)))
+        }: _*).head()
+        keys.zipWithIndex.map { case ((a, e), i) =>
+          if (bounds.isNullAt(2 * i)) Literal.FalseLiteral
+          else And(
+            GreaterThanOrEqual(a, Literal.create(bounds.get(2 * i), e.dataType)),
+            LessThanOrEqual(a, Literal.create(bounds.get(2 * i + 1), e.dataType)))
+        }
+      }
+      targetOnly ++ ranges
     }
   }
 

@@ -36,14 +36,13 @@ object InsertReplaceCommand {
       source: DataFrame,
       condition: Column,
       targetAlias: String = "t",
-      sourceAlias: String = "s",
-      pruneKeys: Seq[String] = Nil): Map[String, String] = {
+      sourceAlias: String = "s"): Map[String, String] = {
     // Up to 4 passes read the source (key-range agg, match join, survivor
     // anti-join + insert write, CDF union) — the shared decision pins
     // non-deterministic sources for correctness; `all` lets an expensive
     // multi-join source compute once instead of 4x.
     MaterializeSource.withPinned(source, passes = 4) { pinned =>
-      runInternal(table, pinned, condition, targetAlias, sourceAlias, pruneKeys)
+      runInternal(table, pinned, condition, targetAlias, sourceAlias)
     }
   }
 
@@ -52,8 +51,7 @@ object InsertReplaceCommand {
       source: DataFrame,
       condition: Column,
       targetAlias: String,
-      sourceAlias: String,
-      pruneKeys: Seq[String]): Map[String, String] = {
+      sourceAlias: String): Map[String, String] = {
     val spark = table.spark
     val log = table.log
     log.withNewTransaction { txn =>
@@ -63,48 +61,16 @@ object InsertReplaceCommand {
           s"write-compatible with the table's ${m.schema.simpleString}")
       val now = System.currentTimeMillis()
       val cdf = Cdc.isEnabled(m)
-      // REPLACE USING's equi-keys admit stats-space candidate pruning: a
-      // target file whose per-key min/max miss the SOURCE's key range
-      // cannot contain a match, so a small daily batch touches only the
-      // bracketed files — replaceWhere economics on a join-derived
-      // predicate. One tiny agg over the source derives the ranges; the
-      // predicates also register as the conflict read set (appends
-      // outside the range cannot produce matches, so they need not
-      // conflict). Non-equi REPLACE ON conditions read the whole table.
-      val prunable = pruneKeys.filter { k =>
-        m.schema.fields.find(_.name.equalsIgnoreCase(k))
-          .exists(f => f.dataType match {
-            case _: org.apache.spark.sql.types.NumericType |
-                 _: org.apache.spark.sql.types.StringType |
-                 _: org.apache.spark.sql.types.DateType |
-                 _: org.apache.spark.sql.types.TimestampType => true
-            case _ => false
-          })
-      }
-      // The replaced set is data-dependent on the source: without usable
-      // key ranges this is conservatively a whole-table read for conflict
-      // detection (filterFiles() with no predicates registers exactly
-      // that).
-      val candidates =
-        if (prunable.isEmpty) txn.filterFiles()
-        else {
-          val aggs = prunable.flatMap(k => Seq(
-            org.apache.spark.sql.functions.min(col(s"`$k`")),
-            org.apache.spark.sql.functions.max(col(s"`$k`"))))
-          val row = source.agg(aggs.head, aggs.tail: _*).head
-          // a null min/max means the source is empty or that key is
-          // all-null — either way NO target row can equal it
-          if (prunable.indices.exists(i => row.isNullAt(2 * i))) Nil
-          else {
-            val ranges = prunable.zipWithIndex.map { case (k, i) =>
-              org.apache.spark.sql.graftshim.SparkShims.expression(
-                col(s"`$k`") >= lit(row.get(2 * i)) &&
-                  col(s"`$k`") <= lit(row.get(2 * i + 1)))
-            }
-            txn.filterFiles(Nil, ranges)
-          }
-        }
+      // Candidate pruning: a target file whose stats refute the
+      // condition's exact data filters (its target-only conjuncts, and each
+      // equi-join key bounded by the source's range) cannot contain a
+      // match, so a small daily batch touches only the bracketed files —
+      // replaceWhere economics on a join-derived predicate. The filters
+      // also register as the conflict read set: appends outside the
+      // range cannot produce matches, so they need not conflict.
       val src = source.alias(sourceAlias)
+      val candidates = txn.filterFiles(Nil, Dml.joinFilters(spark,
+        Dml.scanFiles(spark, log, txn, Nil).alias(targetAlias), src, condition))
       val useDv = graft.dv.DeletionVectors.isEnabled(m)
 
       val (removes, rewriteAdds, deleteCdcRows, deletedCount) =
@@ -128,7 +94,7 @@ object InsertReplaceCommand {
           // rewrite path: only files that actually contain matches
           val FILE = "__graft_file"
           val targetScan = Dml.scanFiles(spark, log, txn, candidates)
-            .withColumn(FILE, input_file_name())
+            .withColumn(FILE, Dml.fileUri)
           val touchedPaths = targetScan.alias(targetAlias)
             .join(src, condition, "left_semi")
             .select(col(FILE)).distinct().collect().map(_.getString(0))

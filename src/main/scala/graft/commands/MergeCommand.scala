@@ -83,15 +83,32 @@ class MergeBuilder(
 /**
  * MERGE execution as the classic two-phase join plan:
  *
- * Phase 1 (findTouchedFiles): inner-join source with the target scan
- * carrying `input_file_name()`; the distinct file set is what gets
- * rewritten, and a groupBy over a target row id detects ambiguous
- * multi-matches. Phase 2 (writeAllChanges): outer-join the touched files
- * with the source and emit, per row, the first applicable clause's
- * projection (update/delete/insert/copy) via a single CASE WHEN chain —
- * Catalyst plans the join (broadcast or shuffle) and codegen runs the
- * projection. Insert-only merges take a left-anti-join fast path that
- * rewrites no target files.
+ * Skipping: the ON clause's exact data filters (its target-only
+ * conjuncts, and each `t.col = <source expr>` bounded by the source's
+ * min and max of that expression, from one aggregate) select the
+ * candidate files, and are the read set conflict detection checks.
+ * A NOT MATCHED BY SOURCE clause reads every file.
+ *
+ * Phase 1 (find touched files): inner-join the source with the candidate
+ * scan, each target row carrying its identity (`_metadata.file_path`,
+ * `_metadata.row_index`). A rollup per file gives the files with matches,
+ * the exact update/delete counts, and the multi-match guard; under
+ * deletion vectors with no NOT MATCHED BY SOURCE clause it also returns
+ * one bitmap per file of the matched rows some clause applies to, which
+ * become the merge's deletion vectors once the guard passes.
+ *
+ * Phase 2 (write all changes): join the touched files with the source
+ * and emit, per row, the first applicable clause's projection
+ * (update/delete/insert/copy) via a single CASE WHEN chain — Catalyst
+ * plans the join (broadcast or shuffle) and codegen runs the projection.
+ * With phase-1 bitmaps and no change data feed only changed rows are
+ * written, so the join keeps matched pairs and source rows (inner, or
+ * source-preserving when rows may be inserted). Otherwise it is outer on
+ * the target side, and under deletion vectors the changed rows' identity
+ * is collected from it into bitmaps.
+ *
+ * Insert-only merges take a left-anti-join fast path over the candidates
+ * that rewrites no target files.
  * (Reference concept: merge/ClassicMergeExecutor.scala:72-471 +
  * InsertOnlyMergeExecutor.scala:53 — re-designed.)
  */
@@ -110,12 +127,12 @@ object MergeCommand {
       targetAlias: String,
       sourceAlias: String,
       schemaEvolution: Boolean = false): Map[String, String] = {
-    // A non-deterministic source re-executed between phase 1
-    // (findTouchedFiles) and phase 2 (writeAllChanges) would produce
-    // divergent match sets — silently corrupting the merge. The shared
-    // decision pins those for correctness; `all` additionally pins an
-    // expensive deterministic source across the two phases.
-    MaterializeSource.withPinned(source, passes = 2) { pinned =>
+    // A non-deterministic source re-executed between the key-range
+    // aggregate, phase 1 (find touched files) and phase 2 (write all
+    // changes) would produce divergent match sets — silently corrupting
+    // the merge. The shared decision pins those for correctness; `all`
+    // additionally pins an expensive deterministic source across passes.
+    MaterializeSource.withPinned(source, passes = 3) { pinned =>
       runInternal(table, pinned, condition, clauses,
         targetAlias, sourceAlias, schemaEvolution)
     }
@@ -167,10 +184,18 @@ object MergeCommand {
         case c: NotMatchedBySourceDelete => c
       }
 
+      val src = source.alias(sourceAlias)
+      // Skipping: every target row that can match satisfies the ON
+      // clause's exact data filters, so files whose stats refute them are
+      // neither read nor recorded in the read set. A NOT MATCHED BY
+      // SOURCE clause acts on every unmatched row: it reads the table.
       val candidates =
         if (nmbsClauses.nonEmpty) { txn.readWholeTable(); txn.snapshot.allFiles }
-        else txn.filterFiles()
-      val src = source.alias(sourceAlias)
+        else txn.filterFiles(Nil, Dml.joinFilters(spark,
+          pad(Dml.scanFiles(spark, log, txn, Nil)).alias(targetAlias), src, condition))
+      val skipping = Map(
+        "numTargetFilesBeforeSkipping" -> txn.snapshot.numFiles.toString,
+        "numTargetFilesAfterSkipping" -> candidates.size.toString)
 
       // ---- Insert-only fast path: no target files are rewritten.
       if (matchedClauses.isEmpty && nmbsClauses.isEmpty) {
@@ -182,7 +207,7 @@ object MergeCommand {
           Cdc.writeChangeFiles(spark, log,
             rows.withColumn(Cdc.CHANGE_TYPE, lit("insert")))
         } else Nil
-        val metrics = Map(
+        val metrics = skipping ++ Map(
           "numTargetFilesAdded" -> adds.size.toString,
           "numTargetRowsUpdated" -> "0", "numTargetRowsDeleted" -> "0") ++
           Dml.statsRowCount(adds).map("numTargetRowsInserted" -> _.toString)
@@ -190,24 +215,30 @@ object MergeCommand {
         return metrics
       }
 
+      // Target rows carry their identity: the file they came from and
+      // their index in it, which is also a deletion vector's domain.
+      def scanWithIds(files: Seq[AddFile]): DataFrame =
+        pad(Dml.scanFiles(spark, log, txn, files)
+          .withColumn(FILE, Dml.fileUri)
+          .withColumn(RID, col("_metadata.row_index")))
+      def clauseCond(c: MergeClause): Column =
+        c.condition.map(coalesce(_, lit(false))).getOrElse(lit(true))
+      val useDv = graft.dv.DeletionVectors.isEnabled(m)
+      // Under DVs with no NOT MATCHED BY SOURCE clause, the rows a merge
+      // retires are exactly the matched rows some clause applies to, so
+      // phase 1 collects them as one bitmap per file.
+      val dvFromMatch = useDv && nmbsClauses.isEmpty
+
       // ---- Phase 1: find touched files + multi-match guard.
-      val targetScan = pad(Dml.scanFiles(spark, log, txn, candidates))
-        .withColumn(FILE, input_file_name())
-        .withColumn(RID, monotonically_increasing_id())
-      val joinedInner = targetScan.alias(targetAlias).join(src, condition, "inner")
+      val joinedInner = scanWithIds(candidates).alias(targetAlias)
+        .join(src, condition, "inner")
       // First-applicable-clause op per matched row, evaluated on the SAME
       // phase-1 aggregation — exact numTargetRowsUpdated/Deleted for free.
-      val matchedOp: Column = {
-        var acc: Column = lit("none")
-        matchedClauses.zipWithIndex.reverse.foreach { case (c, _) =>
-          val cc = c.condition.map(coalesce(_, lit(false))).getOrElse(lit(true))
-          val tag = c match {
-            case _: MatchedUpdate => "mu"
-            case _: MatchedDelete => "del"
-          }
-          acc = when(cc, lit(tag)).otherwise(acc)
-        }
-        acc
+      val matchedOp: Column = matchedClauses.foldRight(lit("none")) { (c, acc) =>
+        when(clauseCond(c), lit(c match {
+          case _: MatchedUpdate => "mu"
+          case _: MatchedDelete => "del"
+        })).otherwise(acc)
       }
       // Per-file aggregation: join-row count vs distinct target rows
       // detects multi-matches; per-target-row distinct op counts give the
@@ -225,14 +256,19 @@ object MergeCommand {
           max(when(matchedOp === "mu", 1).otherwise(0)).as("hasMu"),
           max(when(matchedOp === "del", 1).otherwise(0)).as("hasDel"),
           count(when(matchedOp =!= "none", lit(1))).as("gcnt"))
+      val perFile = Seq(
+        sum(col("cnt")).as("n"), count(lit(1)).as("d"),
+        sum(col("hasMu")).as("mu"), sum(col("hasDel")).as("del"),
+        max(when(col("gcnt") > 0, 1).otherwise(0)).as("anyApplied"),
+        sum(col("gcnt")).as("gn"),
+        sum(when(col("gcnt") > 0, lit(1)).otherwise(lit(0))).as("gd")) ++
+        (if (dvFromMatch) Seq(graft.dv.RowIndexBitmap.column(
+          when(col("gcnt") > 0, col(RID))).as("bm")) else Nil)
       val fileAndMatches = perTargetRow
-        .groupBy(col(FILE)).agg(
-          sum(col("cnt")).as("n"), count(lit(1)).as("d"),
-          sum(col("hasMu")).as("mu"), sum(col("hasDel")).as("del"),
-          max(when(col("gcnt") > 0, 1).otherwise(0)).as("anyApplied"),
-          sum(col("gcnt")).as("gn"),
-          sum(when(col("gcnt") > 0, lit(1)).otherwise(lit(0))).as("gd"))
+        .groupBy(col(FILE)).agg(perFile.head, perFile.tail: _*)
         .collect()
+      val matchedFiles = Dml.resolveTouched(log, candidates,
+        fileAndMatches.map(_.getString(0)).toIndexedSeq)
       val matchedUpdated = fileAndMatches.map(_.getLong(3)).sum
       val matchedDeleted = fileAndMatches.map(_.getLong(4)).sum
       // Duplicate matches are unambiguous ONLY when the sole matched
@@ -265,45 +301,43 @@ object MergeCommand {
       // fail every clause keeps its rows and needs no rewrite (reference
       // concept: ClassicMergeExecutor.scala:105-110 matchedPredicate
       // pruning — re-designed).
-      val touchedPaths = fileAndMatches
-        .filter(r => !matchedOnly || r.getInt(5) == 1)
-        .map(_.getString(0)).toSet
-      val touched = Dml.resolveTouched(log, candidates, touchedPaths.toSeq)
+      val touched = fileAndMatches.toSeq.zip(matchedFiles).collect {
+        case (r, f) if !matchedOnly || r.getInt(5) == 1 => f
+      }
       // Files needing rewrite: touched (matched rows) plus, when
       // NOT-MATCHED-BY-SOURCE clauses exist, every candidate file.
       val rewriteFiles = if (nmbsClauses.nonEmpty) candidates else touched
 
-      // ---- Phase 2: write all changes from one outer join. Under
-      // deletion vectors the scan carries row identity (__f/__i) so
-      // changed target rows can be marked in bitmaps instead of
-      // rewriting their files.
-      val useDv = graft.dv.DeletionVectors.isEnabled(m)
-      val joinType =
-        if (insertClauses.nonEmpty) "full_outer" else "left_outer"
-      // Row identity rides the rewrite scan so a legal duplicate match
-      // (single unconditional DELETE) can collapse its per-pair CDF
-      // delete rows back to one per target row.
-      val rewriteScan = pad(
-        if (useDv) {
-          // DV-filtered scan (in-reader bitmap splice) with row identity.
-          graft.files.GraftFileIndex.dataFrame(
-              spark, log, txn.snapshot, Some(rewriteFiles))
-            .withColumn("__f", graft.dv.DeletionVectors.normFileCol(
-              col("_metadata.file_path")))
-            .withColumn("__i", col("_metadata.row_index"))
-        } else Dml.scanFiles(spark, log, txn, rewriteFiles))
-        .withColumn(RID, monotonically_increasing_id())
-      val srcMarked = source.withColumn(SRC, lit(true)).alias(sourceAlias)
+      // ---- Phase 2: write all changes from one join. Under DVs with
+      // phase-1 bitmaps a copied row is a no-op, so without CDF the join
+      // keeps only matched pairs and source rows: inner when every clause
+      // is a matched one, source-preserving when rows may be inserted.
+      // Otherwise it is outer on the target side, so copies (rewrite),
+      // NOT MATCHED BY SOURCE rows and CDF pre-images reach the output.
+      val joinType = (dvFromMatch && !cdf, insertClauses.nonEmpty) match {
+        case (true, true) => "right_outer"
+        case (true, false) => "inner"
+        case (false, true) => "full_outer"
+        case (false, false) => "left_outer"
+      }
+      // The source-preserving join is a sort-merge join, as the full outer
+      // join it replaces is: broadcasting the touched files instead would
+      // write one file per source partition, not files sized by the
+      // shuffle's coalesced partitions.
+      val srcMarked = {
+        val marked = source.withColumn(SRC, lit(true))
+        (if (joinType == "right_outer") marked.hint("merge") else marked)
+          .alias(sourceAlias)
+      }
       // Matched-only: a pair failing every clause condition is a no-op;
       // fold the clause disjunction into the join condition so such target
       // rows fall out of the join as unmatched and are copied exactly once
       // even when the raw condition matches them to several source rows.
       val rewriteCondition =
         if (matchedOnly && matchedClauses.forall(_.condition.isDefined))
-          condition && matchedClauses
-            .map(c => coalesce(c.condition.get, lit(false))).reduce(_ || _)
+          condition && matchedClauses.map(clauseCond).reduce(_ || _)
         else condition
-      val joined = rewriteScan.withColumn("__tgt_exists", lit(true))
+      val joined = scanWithIds(rewriteFiles).withColumn("__tgt_exists", lit(true))
         .alias(targetAlias)
         .join(srcMarked, rewriteCondition, joinType)
 
@@ -312,22 +346,18 @@ object MergeCommand {
       val isSourceOnly = col("__tgt_exists").isNull && col(SRC).isNotNull
 
       // Row operation: first applicable clause wins.
-      var op: Column = lit("copy")
       var cases = Seq.empty[(Column, String)]
       matchedClauses.zipWithIndex.foreach { case (c, i) =>
-        val cc = isMatched && c.condition.map(coalesce(_, lit(false))).getOrElse(lit(true))
-        cases :+= (cc, c match {
+        cases :+= (isMatched && clauseCond(c), c match {
           case _: MatchedUpdate => s"mu$i"
           case _: MatchedDelete => "del"
         })
       }
       insertClauses.zipWithIndex.foreach { case (c, i) =>
-        val cc = isSourceOnly && c.condition.map(coalesce(_, lit(false))).getOrElse(lit(true))
-        cases :+= (cc, s"ins$i")
+        cases :+= (isSourceOnly && clauseCond(c), s"ins$i")
       }
       nmbsClauses.zipWithIndex.foreach { case (c, i) =>
-        val cc = isTargetOnly && c.condition.map(coalesce(_, lit(false))).getOrElse(lit(true))
-        cases :+= (cc, c match {
+        cases :+= (isTargetOnly && clauseCond(c), c match {
           case _: NotMatchedBySourceUpdate => s"nu$i"
           case _: NotMatchedBySourceDelete => "del"
         })
@@ -354,27 +384,24 @@ object MergeCommand {
       }
       def outCol(name: String): Column = {
         val tcol = col(s"$targetAlias.$name")
-        var c: Column = tcol
-        def overlay(tag: String, set: Map[String, Column], default: Column): Column = {
-          val v = set.collectFirst { case (k, x) if k.equalsIgnoreCase(name) => x }
+        def overlay(set: Map[String, Column], default: Column): Column =
+          set.collectFirst { case (k, x) if k.equalsIgnoreCase(name) => x }
             .getOrElse(default)
-          v
-        }
         var result = tcol
         matchedClauses.zipWithIndex.foreach {
           case (cu: MatchedUpdate, i) =>
-            result = when(col(OP) === s"mu$i",
-              overlay(s"mu$i", clauseSet(cu), tcol)).otherwise(result)
+            result = when(col(OP) === s"mu$i", overlay(clauseSet(cu), tcol))
+              .otherwise(result)
           case _ =>
         }
         insertClauses.zipWithIndex.foreach { case (ci, i) =>
-          result = when(col(OP) === s"ins$i",
-            overlay(s"ins$i", clauseSet(ci), lit(null))).otherwise(result)
+          result = when(col(OP) === s"ins$i", overlay(clauseSet(ci), lit(null)))
+            .otherwise(result)
         }
         nmbsClauses.zipWithIndex.foreach {
           case (cu: NotMatchedBySourceUpdate, i) =>
-            result = when(col(OP) === s"nu$i",
-              overlay(s"nu$i", clauseSet(cu), tcol)).otherwise(result)
+            result = when(col(OP) === s"nu$i", overlay(clauseSet(cu), tcol))
+              .otherwise(result)
           case _ =>
         }
         result.cast(schema(name).dataType).as(name)
@@ -402,7 +429,7 @@ object MergeCommand {
         // target row, not per pair (reference concept:
         // DeduplicateCDFDeletes — re-designed via the scan row id).
         val delPairs = changeRows.filter(col(OP) === "del")
-        val del = (if (hasMultipleMatches) delPairs.dropDuplicates(RID)
+        val del = (if (hasMultipleMatches) delPairs.dropDuplicates(FILE, RID)
                    else delPairs)
           .select(schema.fieldNames.map(n => col(s"$targetAlias.$n").as(n)).toIndexedSeq: _*)
           .withColumn(Cdc.CHANGE_TYPE, lit("delete"))
@@ -416,11 +443,15 @@ object MergeCommand {
       if (useDv) {
         // Mark old versions of updated/deleted target rows in bitmaps;
         // untouched candidate files are left completely alone.
-        val dvTargets = withOp
-          .filter(col(OP) =!= "copy" && col(OP) =!= "drop" && col("__f").isNotNull)
-          .select(col("__f"), col("__i"))
-        val (removes, dvAdds, nChanged) = graft.dv.DeletionVectors
-          .writeDeletionVectors(spark, log, rewriteFiles, dvTargets)
+        val (removes, dvAdds, nChanged) =
+          if (dvFromMatch) graft.dv.DeletionVectors.writeBitmaps(spark, log,
+            fileAndMatches.toSeq.zip(matchedFiles).map { case (r, f) =>
+              f -> graft.dv.Bitmap64.fromDeltaPortable(r.getAs[Array[Byte]]("bm"))
+            })
+          else graft.dv.DeletionVectors.writeDeletionVectors(spark, log, rewriteFiles,
+            withOp.filter(col(OP) =!= "copy" && col(OP) =!= "drop" && col(FILE).isNotNull)
+              .select(graft.dv.DeletionVectors.normFileCol(col(FILE)).as("__f"),
+                col(RID).as("__i")))
         // With no NOT-MATCHED-BY-SOURCE clauses, every written row is an
         // update or an insert, so inserted = written - updated (footer
         // stats; deleted rows are bitmap-marked, never written).
@@ -431,7 +462,7 @@ object MergeCommand {
               Dml.statsRowCount(adds).map(a =>
                 "numTargetRowsInserted" -> (a - matchedUpdated).toString)
           } else Map.empty
-        val metrics = Map(
+        val metrics = skipping ++ Map(
           "numDeletionVectors" -> dvAdds.size.toString,
           "numChangedTargetRows" -> nChanged.toString,
           "numTargetFilesAdded" -> adds.size.toString) ++ rowMetrics
@@ -451,7 +482,7 @@ object MergeCommand {
                 yield "numTargetRowsInserted" ->
                   (a - b + matchedDeleted).toString)
           } else Map.empty
-        val metrics = Map(
+        val metrics = skipping ++ Map(
           "numTargetFilesRemoved" -> removes.size.toString,
           "numTargetFilesAdded" -> adds.size.toString) ++ rowMetrics
         txn.commit(removes ++ adds ++ cdcActions, "MERGE", operationMetrics = metrics)

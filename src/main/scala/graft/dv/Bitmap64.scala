@@ -20,7 +20,8 @@ import org.roaringbitmap.RoaringBitmap
  * its own `_dv/` sidecars, so the framing needs no cross-format compat.
  */
 final class Bitmap64 private (
-    private val buckets: java.util.TreeMap[Integer, RoaringBitmap]) {
+    private val buckets: java.util.TreeMap[Integer, RoaringBitmap])
+    extends Serializable {
 
   def this() = this(new java.util.TreeMap[Integer, RoaringBitmap]())
 
@@ -71,6 +72,11 @@ final class Bitmap64 private (
     size
   }
 
+  /** Java serialization (an aggregation buffer crossing a shuffle)
+    * goes through the portable bytes. */
+  private def writeReplace(): AnyRef =
+    new Bitmap64.Portable(Bitmap64.toDeltaPortable(this))
+
   def serialize(out: DataOutputStream): Unit = {
     out.writeInt(Bitmap64.MAGIC)
     out.writeInt(buckets.size())
@@ -85,6 +91,10 @@ final class Bitmap64 private (
 
 object Bitmap64 {
   private[dv] val MAGIC = 0x47B6D001 // "graft bitmap64 v1"
+
+  private class Portable(bytes: Array[Byte]) extends Serializable {
+    private def readResolve(): AnyRef = fromDeltaPortable(bytes)
+  }
 
   /** Magics of Delta's two 64-bit bitmap serializations (public spec:
     * PROTOCOL.md "Deletion Vector Format" documents the portable form;

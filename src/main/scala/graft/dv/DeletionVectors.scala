@@ -33,9 +33,12 @@ object DeletionVectors {
     m.configuration.getOrElse("graft.enableDeletionVectors", "false").toBoolean
 
   /** Normalize a file URI/path to a bare absolute path, matching
-    * `new Path(root, rel).toUri.getPath` on the driver side. */
+    * `new Path(root, rel).toUri.getPath` on the driver side. A `+` in a
+    * URI is a plus, which `url_decode` (form decoding) would read as a
+    * space, so it is escaped first. */
   def normFileCol(c: Column): Column =
-    regexp_replace(url_decode(c), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+    regexp_replace(url_decode(regexp_replace(c, "\\+", "%2B")),
+      "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
   def fileKey(log: GraftLog, f: AddFile): String = {
     val p = new Path(f.path)
@@ -123,14 +126,14 @@ object DeletionVectors {
     bm
   }
 
-  // ---- write path (DELETE) ------------------------------------------------
+  // ---- write path ---------------------------------------------------------
 
   /**
    * Write merged deletion vectors for `matched` (rows of a DV-filtered
    * scan of `touched` carrying __f/__i). Bitmaps are built per file on
-   * the executors (rows arrive clustered by __f), merged with any
-   * existing DV, and committed as RemoveFile + AddFile-with-DV — no data
-   * file is written.
+   * the executors (rows arrive clustered by __f) and go through
+   * [[writeMerged]] there; the result commits as RemoveFile +
+   * AddFile-with-DV — no data file is written.
    */
   def writeDeletionVectors(
       spark: SparkSession,
@@ -155,12 +158,8 @@ object DeletionVectors {
         var current: String = null
         var bm: Bitmap64 = null
         def flush(): Unit = if (current != null) {
-          oldDvBc.value.get(current).foreach { oldRel =>
-            bm.or(readBitmap(new Path(new Path(root), oldRel), conf))
-          }
-          val rel = s"$DIR/dv-${UUID.randomUUID}.bin"
-          writeBitmap(new Path(new Path(root), rel), conf, bm)
-          out += ((current, rel, bm.cardinality))
+          val (rel, card) = writeMerged(root, conf, oldDvBc.value.get(current), bm)
+          out += ((current, rel, card))
         }
         it.foreach { case (f, i) =>
           if (f != current) { flush(); current = f; bm = new Bitmap64() }
@@ -169,16 +168,71 @@ object DeletionVectors {
         flush()
         out.iterator
       }.collect()
+    dvActions(written.toSeq.map { case (key, rel, card) => (byKey(key), rel, card) })
+  }
 
+  /** Write bitmaps already built per file (MERGE's match pass returns
+    * them), each through [[writeMerged]] on the driver, and commit them
+    * as [[writeDeletionVectors]] does. Empty bitmaps write nothing. */
+  def writeBitmaps(
+      spark: SparkSession,
+      log: GraftLog,
+      bitmaps: Seq[(AddFile, Bitmap64)]): (Seq[graft.log.RemoveFile], Seq[AddFile], Long) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = log.dataPath.toString
+    dvActions(bitmaps.collect { case (f, bm) if bm.cardinality > 0 =>
+      val (rel, card) = writeMerged(root, conf, f.dvPath, bm)
+      (f, rel, card)
+    })
+  }
+
+  /** THE merge-with-old-DV-and-write step: OR the file's existing DV (at
+    * `oldRel`, if any) into `bm`, write it as a new sidecar, and return
+    * its relative path and cardinality. */
+  private def writeMerged(root: String, conf: Configuration,
+      oldRel: Option[String], bm: Bitmap64): (String, Long) = {
+    oldRel.foreach(r => bm.or(readBitmap(new Path(new Path(root), r), conf)))
+    val rel = s"$DIR/dv-${UUID.randomUUID}.bin"
+    writeBitmap(new Path(new Path(root), rel), conf, bm)
+    (rel, bm.cardinality)
+  }
+
+  /** Commit actions for written DVs: each file's remove and its re-add
+    * carrying the new DV, plus the count of rows newly deleted. */
+  private def dvActions(written: Seq[(AddFile, String, Long)])
+      : (Seq[graft.log.RemoveFile], Seq[AddFile], Long) = {
     val now = System.currentTimeMillis()
-    val removes = written.toSeq.map { case (key, _, _) => byKey(key).remove(now) }
-    val adds = written.toSeq.map { case (key, rel, card) =>
-      byKey(key).copy(dvPath = Some(rel), dvCardinality = Some(card),
+    val removes = written.map { case (f, _, _) => f.remove(now) }
+    val adds = written.map { case (f, rel, card) =>
+      f.copy(dvPath = Some(rel), dvCardinality = Some(card),
         modificationTime = now, dataChange = true)
     }
-    val newlyDeleted = written.map { case (key, _, card) =>
-      card - byKey(key).dvCardinality.getOrElse(0L)
+    val newlyDeleted = written.map { case (f, _, card) =>
+      card - f.dvCardinality.getOrElse(0L)
     }.sum
     (removes, adds, newlyDeleted)
   }
+}
+
+/** Aggregate of row indexes into one bitmap, returned in Delta's portable
+  * serialization ([[Bitmap64.fromDeltaPortable]] reads it back). Null
+  * inputs are skipped, so `when(cond, rowIndex)` collects the rows where
+  * `cond` holds. Partial bitmaps stay objects within a task. */
+private[graft] object RowIndexBitmap
+    extends org.apache.spark.sql.expressions.Aggregator[java.lang.Long, Bitmap64, Array[Byte]] {
+  def zero: Bitmap64 = new Bitmap64()
+  def reduce(b: Bitmap64, i: java.lang.Long): Bitmap64 = {
+    if (i != null) b.add(i)
+    b
+  }
+  def merge(a: Bitmap64, b: Bitmap64): Bitmap64 = { a.or(b); a }
+  def finish(b: Bitmap64): Array[Byte] = Bitmap64.toDeltaPortable(b)
+  def bufferEncoder: org.apache.spark.sql.Encoder[Bitmap64] =
+    org.apache.spark.sql.Encoders.javaSerialization[Bitmap64]
+  def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
+    org.apache.spark.sql.Encoders.BINARY
+
+  /** The aggregate as a column function. */
+  def column(rowIndex: Column): Column =
+    udaf(this, org.apache.spark.sql.Encoders.LONG)(rowIndex)
 }

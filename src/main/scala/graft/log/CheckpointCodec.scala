@@ -2,9 +2,12 @@ package graft.log
 
 import java.io.OutputStream
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.Job
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.paths.SparkPath
@@ -54,26 +57,47 @@ private[graft] object CheckpointCodec {
     }
   }
 
-  /** Every row of the checkpoint entries at `paths`, in order. */
-  def read(spark: SparkSession, store: LogStore,
-      paths: Seq[Path]): Seq[SingleAction] = {
-    val fromRow = bound.createDeserializer()
-    val out = Vector.newBuilder[SingleAction]
-    scan(spark, files(store, paths), schema) { r => out += fromRow(r); true }
-    out.result()
+  /** A reader of checkpoint entries: every call returns all rows of the
+    * entries at its paths, in order. Spark's parquet reader is built on
+    * first use and then reused — each build broadcasts the Hadoop
+    * configuration, so a load or a write reads through one reader. */
+  def reader(spark: SparkSession, store: LogStore): Seq[Path] => Seq[SingleAction] = {
+    lazy val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, StructType(Nil), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    lazy val fromRow = bound.createDeserializer()
+    paths => {
+      val out = Vector.newBuilder[SingleAction]
+      files(store, paths).foreach { st =>
+        val rows = readFile(PartitionedFile(InternalRow.empty,
+          SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
+          st.getModificationTime, st.getLen, Map.empty))
+        try rows.foreach(r => out += fromRow(r))
+        finally rows match {
+          case c: java.io.Closeable => c.close()
+          case _ =>
+        }
+      }
+      out.result()
+    }
   }
 
   /** Whether any row of the checkpoint entry at `path` carries a Metadata
-    * action. Reads only that column, and stops at the first one. */
+    * action, answered from the parquet footers' null counts of
+    * `metaData.id`: no rows are read and no reader is built. A column
+    * chunk without a null count counts as holding one. */
   def holdsMetadata(spark: SparkSession, store: LogStore, path: Path): Boolean = {
-    val meta = schema("metaData")
-    val metaOnly = StructType(Seq(meta.copy(dataType =
-      StructType(Seq(meta.dataType.asInstanceOf[StructType]("id"))))))
-    var found = false
-    scan(spark, files(store, Seq(path)), metaOnly) { r =>
-      found = !r.isNullAt(0); !found
+    val conf = spark.sessionState.newHadoopConf()
+    files(store, Seq(path)).exists { st =>
+      val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try footer.getFooter.getBlocks.asScala.exists(_.getColumns.asScala.exists { c =>
+        val stats = c.getStatistics
+        c.getPath.toDotString == "metaData.id" &&
+          (stats == null || !stats.isNumNullsSet || stats.getNumNulls < c.getValueCount)
+      })
+      finally footer.close()
     }
-    found
   }
 
   /** The visible parquet files of the entries at `paths`: an entry that
@@ -89,31 +113,6 @@ private[graft] object CheckpointCodec {
           !s.getPath.getName.startsWith("."))
         .sortBy(_.getPath.getName)
     }
-
-  /** Feed the rows of `files`, projected to `required`, to `f` until it
-    * returns false, with Spark's parquet reader called in-process (rows,
-    * not batches). Columns a file lacks read as null. */
-  private def scan(spark: SparkSession, files: Seq[FileStatus],
-      required: StructType)(f: InternalRow => Boolean): Unit = {
-    if (files.isEmpty) return
-    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark, schema, StructType(Nil), required, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
-    val it = files.iterator
-    var more = true
-    while (more && it.hasNext) {
-      val st = it.next()
-      val rows = readFile(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
-        st.getModificationTime, st.getLen, Map.empty))
-      try while (more && rows.hasNext) more = f(rows.next())
-      finally rows match {
-        case c: java.io.Closeable => c.close()
-        case _ =>
-      }
-    }
-  }
 
   private class RowWriter(file: OutputFile)
       extends ParquetWriter.Builder[InternalRow, RowWriter](file) {

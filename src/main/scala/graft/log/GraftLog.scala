@@ -856,7 +856,7 @@ class GraftLog private (
   private def previousV2Sidecars(version: Long): Map[Int, Seq[SingleAction]] = {
     val bucketRe = ".*/bucket=(\\d+)/.*".r
     val rows =
-      try CheckpointCodec.read(spark, store,
+      try CheckpointCodec.reader(spark, store)(
         Seq(FileNames.checkpointFile(logPath, version)))
       catch { case _: java.io.FileNotFoundException => Nil }
     rows.filter(_.sidecar != null)
@@ -1347,7 +1347,9 @@ object Snapshot {
           session.read.schema(schema).parquet(paths.map(_.toString): _*)
             .as[SingleAction]
         lazy val manifest = readDS(Seq(cpPath))
-        lazy val manifestRows = CheckpointCodec.read(session, log.store, Seq(cpPath))
+        // One reader for the manifest and its sidecars.
+        val read = CheckpointCodec.reader(session, log.store)
+        lazy val manifestRows = read(Seq(cpPath))
         // V2 checkpoints: file actions live in sidecar parquet; the
         // manifest is metadata-scale (SidecarFile pointers included) and
         // is read in-process. The `_last_checkpoint` pointer tells a
@@ -1395,7 +1397,7 @@ object Snapshot {
           val files = scala.collection.mutable.HashMap.empty[String, AddFile]
           val tombs = scala.collection.mutable.HashMap.empty[String, RemoveFile]
           val rows = manifestRows.iterator ++
-            CheckpointCodec.read(session, log.store, sidecarPaths).iterator
+            read(sidecarPaths).iterator
           rows.foreach {
             _.unwrap match {
               case a: AddFile => files.put(a.path, a)

@@ -159,13 +159,15 @@ object StatsSkipping {
 
   private def orTrue(e: Expression): Expression = Coalesce(Seq(e, Literal.TrueLiteral))
 
-  /** Literal types that min/max stats are collected for. */
-  private def statsLiteral(l: Literal): Boolean = l.value != null && (l.dataType match {
+  /** Types whose min/max stats skipping compares against literals. */
+  def statsType(dt: DataType): Boolean = dt match {
     case _: IntegerType | _: LongType | _: ShortType | _: ByteType |
          _: DoubleType | _: FloatType | _: StringType | _: BooleanType |
          _: DateType | _: TimestampType => true
     case _ => false
-  })
+  }
+
+  private def statsLiteral(l: Literal): Boolean = l.value != null && statsType(l.dataType)
 
   /** Stats min/max are byte-ordered (parquet footer order). A string
     * column under a non-default collation (e.g. UTF8_LCASE) orders
@@ -220,6 +222,7 @@ object StatsSkipping {
         }
       case Or(l, r) =>
         for (a <- go(l); b <- go(r)) yield Or(orTrue(a), orTrue(b))
+      case Literal(false, BooleanType) => Some(Literal.FalseLiteral)
       case EqualTo(a, l: Literal) => within(a, l)
       case EqualTo(l: Literal, a) => within(a, l)
       case LessThan(a, l: Literal) => cmp(a, l, "minValues")(LessThan)

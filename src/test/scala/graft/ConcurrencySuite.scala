@@ -304,4 +304,47 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     val v0 = log.update().version
     assert(a.commit(Seq(addFileFor(log, "R")), "APPEND") === v0 + 3)
   }
+
+  /** A DV table of four files clustered on `id` (0-9, 10-19, 20-29,
+    * 30-39), MERGEd with source keys 12-13 while, just before the MERGE
+    * writes its commit, a winner appends `appended`; returns the MERGE's
+    * metrics and the table's ids after it. */
+  private def mergeRacingAppend(appended: Seq[Long]): (Map[String, String], Seq[Long]) = {
+    import spark.implicits._
+    FaultyLogStore.installed(spark) {
+      val dir = tmpDir()
+      (0 until 4).foreach(i =>
+        Graft.write(spark.range(i * 10L, i * 10L + 10).toDF("id").coalesce(1), dir,
+          configuration = if (i > 0) Map.empty
+            else Map("graft.enableDeletionVectors" -> "true")))
+      val mergeVersion = GraftLog.forTable(spark, dir).update().version + 1
+      var fired = false
+      val metrics = FaultyLogStore.beforeEachWrite { p =>
+        if (!fired && FileNames.deltaVersion(p.getName).contains(mergeVersion)) {
+          fired = true
+          Graft.write(appended.toDF("id").coalesce(1), dir, mode = "append")
+        }
+      } {
+        GraftTable.forPath(spark, dir).merge(Seq(12L, 13L).toDF("id"), expr("t.id = s.id"))
+          .whenMatched().delete()
+          .execute()
+      }
+      assert(fired, "the winner never committed")
+      (metrics, Graft.read(spark, dir).as[Long].collect().sorted.toSeq)
+    }
+  }
+
+  test("MERGE: a concurrent append outside the source's key range does not abort it") {
+    // The MERGE reads only what its source can match (ids 12-13); an
+    // append of ids 100-101 cannot hold a match, so the MERGE retries
+    // onto the next version instead of aborting.
+    val (metrics, ids) = mergeRacingAppend(Seq(100L, 101L))
+    assert(metrics("numTargetFilesBeforeSkipping") === "4")
+    assert(metrics("numTargetFilesAfterSkipping") === "1")
+    assert(ids === ((0L until 40L).filterNot(Set(12L, 13L)) ++ Seq(100L, 101L)))
+  }
+
+  test("MERGE: a concurrent append inside the source's key range aborts it") {
+    intercept[ConcurrentAppendException] { mergeRacingAppend(Seq(12L)) }
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -309,5 +310,129 @@ class DmlMatrixSuite extends AnyFunSuite {
     val got = Graft.read(spark, path).select("id", "v")
       .as[(Long, Double)].collect().toMap
     assert(got(2L) === 2.0 && got(102L) === 0.0)
+  }
+
+  // ---- MERGE skipping: the cases that must not prune, or must prune
+  // exactly. Every table starts as four files clustered on `id` (0-9,
+  // 10-19, 20-29, 30-39) with v = id; each case checks how many files the
+  // merge kept and the rows it left against a model.
+
+  private def clustered(conf: Map[String, String], dir: String = tmp()): String = {
+    (0 until 4).foreach(i => Graft.write(spark.range(i * 10L, i * 10L + 10)
+      .select(col("id"), col("id").cast("double").as("v")).coalesce(1), dir,
+      configuration = if (i > 0) Map.empty else conf))
+    dir
+  }
+
+  private def base: Map[Long, Double] = (0L until 40L).map(i => i -> i.toDouble).toMap
+
+  /** Table rows keyed by `key`, a null key read as -1. */
+  private def rowsOf(path: String, key: String = "id"): Map[Long, Double] = {
+    import spark.implicits._
+    Graft.read(spark, path).select(coalesce(col(key), lit(-1L)), col("v"))
+      .as[(Long, Double)].collect().toMap
+  }
+
+  /** Source rows (id, v); a None id is a null key. */
+  private def source(rows: (Option[Long], Double)*): DataFrame = {
+    import spark.implicits._
+    rows.map { case (i, v) => (i.map(Long.box).orNull, v) }
+      .toDF("id", "v")
+  }
+
+  /** Upsert: matched rows take the source's v, unmatched source rows are
+    * inserted; returns the files before and after skipping. */
+  private def upsert(path: String, src: DataFrame, cond: String,
+      nmbsDelete: Option[String] = None): (Int, Int) = {
+    val b = GraftTable.forPath(spark, path).merge(src, expr(cond))
+      .whenMatched().update(Map("v" -> col("s.v")))
+      .whenNotMatched().insertAll()
+    val m = nmbsDelete.map(c => b.whenNotMatchedBySource(expr(c)).delete())
+      .getOrElse(b).execute()
+    (m("numTargetFilesBeforeSkipping").toInt, m("numTargetFilesAfterSkipping").toInt)
+  }
+
+  private val keys1213 = Seq(Some(12L) -> -1.0, Some(13L) -> -2.0)
+  private val upserted1213 = base ++ Map(12L -> -1.0, 13L -> -2.0)
+
+  for (dv <- Seq(false, true)) {
+    val conf = if (dv) Map("graft.enableDeletionVectors" -> "true") else Map.empty[String, String]
+
+    test(s"merge skipping: an equi-join key prunes to the source's key range (dv=$dv)") {
+      val path = clustered(conf)
+      assert(upsert(path, source(keys1213 :+ (Some(25L) -> -3.0): _*), "t.id = s.id") === (4, 2))
+      assert(rowsOf(path) === upserted1213 + (25L -> -3.0))
+    }
+
+    test(s"merge skipping: a NOT MATCHED BY SOURCE clause reads every file (dv=$dv)") {
+      val path = clustered(conf)
+      assert(upsert(path, source(keys1213: _*), "t.id = s.id",
+        nmbsDelete = Some("t.id = 35")) === (4, 4))
+      assert(rowsOf(path) === upserted1213 - 35L)
+    }
+
+    test(s"merge skipping: OR, non-equi and <=> conditions prune nothing (dv=$dv)") {
+      Seq("t.id = s.id OR t.v = s.v", "t.id <= s.id AND t.id >= s.id",
+          "t.id <=> s.id").foreach { cond =>
+        val path = clustered(conf)
+        assert(upsert(path, source(keys1213: _*), cond) === (4, 4), cond)
+        assert(rowsOf(path) === upserted1213, cond)
+      }
+    }
+
+    test(s"merge skipping: null source keys match nothing and bound nothing (dv=$dv)") {
+      val some = clustered(conf)
+      assert(upsert(some, source(None -> -5.0, Some(12L) -> -1.0), "t.id = s.id") === (4, 1))
+      assert(rowsOf(some) === base ++ Map(12L -> -1.0, -1L -> -5.0))
+      // every key null: no file can hold a match, and the row inserts
+      val none = clustered(conf)
+      assert(upsert(none, source(None -> -5.0), "t.id = s.id") === (4, 0))
+      assert(rowsOf(none) === base + (-1L -> -5.0))
+    }
+
+    test(s"merge skipping: an empty source reads no file (dv=$dv)") {
+      val path = clustered(conf)
+      assert(upsert(path, source(), "t.id = s.id") === (4, 0))
+      assert(rowsOf(path) === base)
+    }
+
+    test(s"merge skipping: a source-side expression key bounds by its values (dv=$dv)") {
+      val path = clustered(conf)
+      // s.id + 1 spans 12..13: one file, although s.id itself is 11..12
+      assert(upsert(path, source(Some(11L) -> -1.0, Some(12L) -> -2.0),
+        "t.id = s.id + 1") === (4, 1))
+      assert(rowsOf(path) === upserted1213)
+    }
+
+    test(s"merge skipping: a column-mapped target prunes by its logical name (dv=$dv)") {
+      import spark.implicits._
+      val path = clustered(conf + ("graft.columnMapping.mode" -> "name"))
+      GraftTable.forPath(spark, path).renameColumn("id", "key")
+      val src = Seq((12L, -1.0), (13L, -2.0)).toDF("key", "v")
+      assert(upsert(path, src, "t.key = s.key") === (4, 1))
+      assert(rowsOf(path, "key") === upserted1213)
+    }
+
+    test(s"merge skipping: a file without stats is kept (dv=$dv)") {
+      val path = clustered(conf)
+      val txn = GraftLog.forTable(spark, path).startTransaction()
+      val adds = txn.writeFiles(spark.range(100, 110)
+        .select(col("id"), col("id").cast("double").as("v")).coalesce(1))
+      txn.commit(adds.map(_.copy(stats = null)), "WRITE")
+      assert(upsert(path, source(keys1213: _*), "t.id = s.id") === (5, 2))
+      assert(rowsOf(path) === upserted1213 ++ (100L until 110L).map(i => i -> i.toDouble))
+    }
+
+    test(s"merge skipping: a table path with a space and a plus (dv=$dv)") {
+      val path = clustered(conf, Files.createDirectories(
+        java.nio.file.Paths.get(tmp(), "a b+c")).toString)
+      assert(upsert(path, source(keys1213: _*), "t.id = s.id") === (4, 1))
+      assert(rowsOf(path) === upserted1213)
+      if (dv) assert(GraftLog.forTable(spark, path).update().allFiles
+        .exists(_.dvPath.isDefined), "the upsert wrote no deletion vector")
+      // DELETE finds its rows' files under the same path
+      GraftTable.forPath(spark, path).delete(col("id") === 25L)
+      assert(rowsOf(path) === upserted1213 - 25L)
+    }
   }
 }

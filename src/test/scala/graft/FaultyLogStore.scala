@@ -9,7 +9,9 @@ import graft.log.LogStore
 /** Fault-injection store, plugged in through `spark.graft.logStore.impl`:
   * inside a [[FaultyLogStore.failing]] block every log write, put-if-absent
   * or overwrite, whose path matches the block's predicate throws — the
-  * shape of a transient filesystem error. */
+  * shape of a transient filesystem error. Inside a
+  * [[FaultyLogStore.beforeEachWrite]] block a callback runs before each
+  * write, e.g. to commit a concurrent winner just ahead of it. */
 class FaultyLogStore(conf: Configuration) extends LogStore(conf) {
   override def write(path: Path, chunks: Iterator[String]): Unit = {
     FaultyLogStore.check(path)
@@ -25,10 +27,13 @@ class FaultyLogStore(conf: Configuration) extends LogStore(conf) {
 
 object FaultyLogStore {
   @volatile private var failWhen: Path => Boolean = _ => false
+  @volatile private var beforeWrite: Path => Unit = _ => ()
 
-  private def check(path: Path): Unit =
+  private def check(path: Path): Unit = {
+    beforeWrite(path)
     if (failWhen(path))
       throw new java.io.IOException(s"injected store failure: $path")
+  }
 
   /** Run `body` with this store behind every table it opens first. */
   def installed[T](spark: SparkSession)(body: => T): T = {
@@ -40,5 +45,11 @@ object FaultyLogStore {
   def failing[T](pred: Path => Boolean)(body: => T): T = {
     failWhen = pred
     try body finally failWhen = _ => false
+  }
+
+  /** Run `body` with `hook` called before every write the store makes. */
+  def beforeEachWrite[T](hook: Path => Unit)(body: => T): T = {
+    beforeWrite = hook
+    try body finally beforeWrite = _ => ()
   }
 }

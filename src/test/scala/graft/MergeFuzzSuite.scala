@@ -12,8 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
  * random order) applied to random target/source overlaps, checked
  * against an independent Scala model of the reference semantics —
  * first-applicable-clause per row, clause-condition evaluation over
- * (t, s), unmatched rows untouched. Source ids are distinct so no run
- * trips the multi-match ambiguity guard (DmlMatrixSuite pins those).
+ * (t, s), unmatched rows untouched. Each seed runs over a one-file
+ * and a four-file clustered target, with and without deletion vectors,
+ * and also checks which files skipping kept and how many rows the
+ * deletion vectors retired. Source ids are distinct so no run trips the
+ * multi-match ambiguity guard (DmlMatrixSuite pins those).
  */
 class MergeFuzzSuite extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -51,10 +54,7 @@ class MergeFuzzSuite extends AnyFunSuite {
   for (iter <- 0 until 8) test(s"randomized MERGE vs model (seed ${7100 + iter})") {
     import spark.implicits._
     val r = new scala.util.Random(7100 + iter)
-    val dir = tmp()
     val target = (0L until 40L).map(i => i -> Row2(i * 3, i % 10)).toMap
-    Graft.write(target.toSeq.map { case (i, x) => (i, x.v, x.w) }
-      .toDF("id", "v", "w"), dir)
     val srcMap = r.shuffle((20L until 60L).toVector).take(25)
       .map(i => i -> Row2(i * 7 + 1, i % 5)).toMap
 
@@ -78,31 +78,10 @@ class MergeFuzzSuite extends AnyFunSuite {
     }
     val clauses = matched ++ inserts ++ nmbs
 
-    // drive the builder
-    var b = GraftTable.forPath(spark, dir).merge(
-      srcMap.toSeq.map { case (i, x) => (i, x.v, x.w) }.toDF("id", "v", "w"),
-      expr("t.id = s.id"))
-    clauses.foreach {
-      case MU(c, all) =>
-        val m = c.map(x => b.whenMatched(expr(x.sql))).getOrElse(b.whenMatched())
-        b = if (all) m.updateAll()
-            else m.update(Map("v" -> expr("s.v + 1000"), "w" -> expr("t.w + 1")))
-      case MD(c) =>
-        b = c.map(x => b.whenMatched(expr(x.sql))).getOrElse(b.whenMatched()).delete()
-      case NI(c) =>
-        b = c.map(x => b.whenNotMatched(expr(x.sql))).getOrElse(b.whenNotMatched()).insertAll()
-      case ND(c) =>
-        b = c.map(x => b.whenNotMatchedBySource(expr(x.sql)))
-          .getOrElse(b.whenNotMatchedBySource()).delete()
-      case NU(c) =>
-        b = c.map(x => b.whenNotMatchedBySource(expr(x.sql)))
-          .getOrElse(b.whenNotMatchedBySource())
-          .update(Map("w" -> expr("t.w + 100")))
-    }
-    b.execute()
-
-    // independent model: first applicable clause per row
+    // independent model: first applicable clause per row; `retired`
+    // holds the target rows the merge replaces or deletes
     val expected = scala.collection.mutable.Map.empty[Long, Row2]
+    val retired = scala.collection.mutable.Set.empty[Long]
     target.foreach { case (id, t) =>
       srcMap.get(id) match {
         case Some(s) =>
@@ -112,8 +91,9 @@ class MergeFuzzSuite extends AnyFunSuite {
             case _ => false
           } match {
             case Some(MU(_, all)) =>
+              retired += id
               expected(id) = if (all) s else Row2(s.v + 1000, t.w + 1)
-            case Some(MD(_)) => // deleted
+            case Some(MD(_)) => retired += id
             case _ => expected(id) = t
           }
         case None =>
@@ -122,8 +102,10 @@ class MergeFuzzSuite extends AnyFunSuite {
             case NU(c) => c.forall(_.eval(Some(t), None))
             case _ => false
           } match {
-            case Some(ND(_)) => // deleted
-            case Some(NU(_)) => expected(id) = Row2(t.v, t.w + 100)
+            case Some(ND(_)) => retired += id
+            case Some(NU(_)) =>
+              retired += id
+              expected(id) = Row2(t.v, t.w + 100)
             case _ => expected(id) = t
           }
       }
@@ -138,10 +120,57 @@ class MergeFuzzSuite extends AnyFunSuite {
       }
     }
 
-    val got = Graft.read(spark, dir).select($"id", $"v", $"w")
-      .as[(Long, Long, Long)].collect()
-      .map { case (i, v, w) => i -> Row2(v, w) }.toMap
-    assert(got === expected.toMap,
-      s"seed ${7100 + iter} clauses=$clauses")
+    // The same merge over each target layout, with and without deletion
+    // vectors: one file, or four files clustered on id (0-9 .. 30-39), of
+    // which skipping keeps those that meet the source's id range.
+    for (files <- Seq(1, 4); dv <- Seq(false, true)) {
+      val layout = s"seed ${7100 + iter} files=$files dv=$dv clauses=$clauses"
+      val dir = tmp()
+      val perFile = 40 / files
+      (0 until files).foreach { f =>
+        Graft.write(target.toSeq.filter(_._1 / perFile == f)
+          .map { case (i, x) => (i, x.v, x.w) }.toDF("id", "v", "w").coalesce(1), dir,
+          configuration = if (f > 0 || !dv) Map.empty
+            else Map("graft.enableDeletionVectors" -> "true"))
+      }
+
+      // drive the builder
+      var b = GraftTable.forPath(spark, dir).merge(
+        srcMap.toSeq.map { case (i, x) => (i, x.v, x.w) }.toDF("id", "v", "w"),
+        expr("t.id = s.id"))
+      clauses.foreach {
+        case MU(c, all) =>
+          val m = c.map(x => b.whenMatched(expr(x.sql))).getOrElse(b.whenMatched())
+          b = if (all) m.updateAll()
+              else m.update(Map("v" -> expr("s.v + 1000"), "w" -> expr("t.w + 1")))
+        case MD(c) =>
+          b = c.map(x => b.whenMatched(expr(x.sql))).getOrElse(b.whenMatched()).delete()
+        case NI(c) =>
+          b = c.map(x => b.whenNotMatched(expr(x.sql))).getOrElse(b.whenNotMatched()).insertAll()
+        case ND(c) =>
+          b = c.map(x => b.whenNotMatchedBySource(expr(x.sql)))
+            .getOrElse(b.whenNotMatchedBySource()).delete()
+        case NU(c) =>
+          b = c.map(x => b.whenNotMatchedBySource(expr(x.sql)))
+            .getOrElse(b.whenNotMatchedBySource())
+            .update(Map("w" -> expr("t.w + 100")))
+      }
+      val metrics = b.execute()
+
+      val got = Graft.read(spark, dir).select($"id", $"v", $"w")
+        .as[(Long, Long, Long)].collect()
+        .map { case (i, v, w) => i -> Row2(v, w) }.toMap
+      assert(got === expected.toMap, layout)
+      // skipping keeps exactly the files whose id range meets the
+      // source's (all of them under a NOT MATCHED BY SOURCE clause)
+      val (lo, hi) = (srcMap.keys.min, srcMap.keys.max)
+      val kept = (0 until files).count(f =>
+        nmbs.nonEmpty || (f * perFile <= hi && (f + 1) * perFile - 1 >= lo))
+      assert(metrics("numTargetFilesBeforeSkipping") === files.toString, layout)
+      assert(metrics("numTargetFilesAfterSkipping") === kept.toString, layout)
+      // under DVs every retired row is marked, and only those
+      if (dv && (matched.nonEmpty || nmbs.nonEmpty))
+        assert(metrics("numChangedTargetRows") === retired.size.toString, layout)
+    }
   }
 }

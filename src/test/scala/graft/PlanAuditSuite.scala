@@ -304,6 +304,66 @@ class PlanAuditSuite extends AnyFunSuite {
       s"merge planned an Expand:\n${expanded.headOption.getOrElse("")}")
   }
 
+  test("a DV upsert MERGE joins target and source once after phase 1, " +
+      "scanning only files that meet the source's key range") {
+    // Phase 1's rollup returns the deletion vectors, so no later query
+    // re-runs the join to recover the matched rows, and skipping keeps
+    // every target scan to the files whose id range meets the source's.
+    // A user optimizer rule sees every optimized plan; the write's
+    // session is a clone, so a fresh parent conf makes it inherit the rule.
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = tmpDir()
+    val log = graft.log.GraftLog.forTable(spark, dir)
+    val rangeOf = (0 until 6).map { i =>
+      val before = log.update().allFiles.map(_.path).toSet
+      Graft.write(spark.range(i * 100L, i * 100L + 100).selectExpr("id", "id % 7 as v")
+        .coalesce(1), dir, configuration = if (i > 0) Map.empty
+          else Map("graft.enableDeletionVectors" -> "true"))
+      val added = log.update().allFiles.map(_.path).toSet -- before
+      assert(added.size === 1)
+      added.head -> (i * 100L, i * 100L + 99)
+    }.toMap
+    val (lo, hi) = (250L, 349L)
+    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val record = new Rule[LogicalPlan] {
+      def apply(p: LogicalPlan): LogicalPlan = { plans.synchronized(plans += p); p }
+    }
+    val saved = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = saved :+ record
+    spark.conf.set("spark.planaudit.marker", java.util.UUID.randomUUID.toString)
+    try {
+      GraftTable.forPath(spark, dir)
+        .merge(spark.range(lo, hi + 1).selectExpr("id", "-1L as v"), expr("t.id = s.id"))
+        .whenMatched().updateAll()
+        .whenNotMatched().insertAll()
+        .execute()
+    } finally {
+      spark.experimental.extraOptimizations = saved
+      spark.conf.unset("spark.planaudit.marker")
+    }
+    def targetScans(p: LogicalPlan): Seq[graft.files.GraftFileIndex] = p.collect {
+      case LogicalRelation(HadoopFsRelation(i: graft.files.GraftFileIndex, _, _, _, _, _),
+        _, _, _, _) => i
+    }
+    val captured = plans.synchronized(plans.toList)
+    val joins = captured.filter(_.exists {
+      case j: Join => targetScans(j).nonEmpty
+      case _ => false
+    })
+    assert(joins.nonEmpty && joins.head.exists(_.isInstanceOf[Aggregate]),
+      s"the first target join is not phase 1's rollup:\n${joins.headOption.getOrElse("")}")
+    assert(joins.size === 2,
+      s"expected phase 1 and one more target join, got ${joins.size}:\n${joins.mkString("\n")}")
+    val scanned = captured.flatMap(targetScans).flatMap(_.pinnedFiles.getOrElse(Nil))
+    assert(scanned.nonEmpty, "no pinned target scan captured")
+    scanned.foreach { f =>
+      val (fLo, fHi) = rangeOf(f.path)
+      assert(fLo <= hi && fHi >= lo, s"scanned ${f.path} ($fLo-$fHi) outside $lo-$hi")
+    }
+  }
+
   private def planOf(q: String): String =
     SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
@@ -501,6 +561,31 @@ class PlanAuditSuite extends AnyFunSuite {
       assert(snap.version === 2L && !snap.checkpointBacked)
       assert(jobs === 0, s"$policy: the cold load ran $jobs Spark jobs")
       assert(Graft.read(spark, dir).count() === 30)
+    }
+  }
+
+  test("a cold load of a below-threshold checkpoint builds one parquet reader") {
+    // Building Spark's parquet reader broadcasts the Hadoop
+    // configuration. A load reads the manifest and its sidecars through
+    // one reader, and probes for metadata from the footers, so at most
+    // one broadcast falls between two probe broadcasts around it.
+    Seq("classic", "v2").foreach { policy =>
+      val dir = tmpDir()
+      (0 until 3).foreach(i =>
+        Graft.write(spark.range(i * 10L, i * 10L + 10).toDF("id"), dir,
+          configuration = if (i > 0) Map.empty else Map(
+            "graft.checkpointPolicy" -> policy, "graft.checkpointInterval" -> "2")))
+      graft.log.GraftLog.clearCache()
+      val sc = spark.sparkContext
+      val before = sc.broadcast(0)
+      val log = graft.log.GraftLog.forTable(spark, dir)
+      val snap = log.update()
+      val after = sc.broadcast(0)
+      Seq(before, after).foreach(_.destroy())
+      assert(snap.version === 2L && !snap.checkpointBacked)
+      assert(log.store.exists(graft.log.FileNames.checkpointFile(log.logPath, 2L)))
+      val broadcasts = after.id - before.id - 1
+      assert(broadcasts <= 1, s"$policy: the cold load made $broadcasts broadcasts")
     }
   }
 
