@@ -710,11 +710,6 @@ class GraftTable private[graft] (
    * of a batch file aborts just that batch (re-add would resurrect the
    * file) and the next sweep re-selects from a fresh snapshot.
    */
-  /** Deterministic-interleaving test hook: runs inside each backfill
-    * batch transaction, before its commit. */
-  private[graft] var onBackfillBatch: graft.tx.OptimisticTransaction => Unit =
-    _ => ()
-
   def backfillRowTracking(maxFilesPerCommit: Int = 100000): Unit = {
     require(maxFilesPerCommit > 0, "maxFilesPerCommit must be positive")
     // A leftover suspension flag (an interrupted dropFeature) would make
@@ -745,7 +740,6 @@ class GraftTable private[graft] (
           graft.log.RowTracking.ensureNumRecords(spark, log, batch)
         try {
           log.withNewTransaction { txn =>
-            onBackfillBatch(txn)
             txn.commit(withCounts.map(_.copy(dataChange = false)),
               "ROW TRACKING BACKFILL", Map("batchId" -> batchId.toString))
           }

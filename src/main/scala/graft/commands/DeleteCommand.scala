@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression,
   GreaterThanOrEqual, LessThanOrEqual, Literal, PredicateHelper, SubqueryExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.graftshim.SparkShims
 import org.apache.spark.sql.functions._
 
@@ -69,7 +70,9 @@ object Dml extends PredicateHelper {
    * whose stats refute them holds no match. They are the condition's
    * deterministic target-only conjuncts, plus `t.col BETWEEN lo AND hi`
    * for each conjunct `t.col = <source expression>` on a column stats
-   * skipping compares, with lo and hi from one aggregate over the source.
+   * skipping compares, with lo and hi the key's bounds over the source:
+   * evaluated on the driver when the source is a local relation, whose
+   * rows are already there, and otherwise taken by one aggregate.
    * `=` rejects nulls, so a source whose key is all null (or which is
    * empty) matches nothing, and that key's filter is `false`. Other
    * conjuncts (`OR` across sides, `<=>`, non-equi) filter nothing.
@@ -94,18 +97,47 @@ object Dml extends PredicateHelper {
         case EqualTo(a: Attribute, e) if key(a, e) => a -> e
         case EqualTo(e, a: Attribute) if key(a, e) => a -> e
       }
-      val ranges = if (keys.isEmpty) Nil else {
-        val bounds = SparkShims.ofRows(spark, j.right).select(keys.flatMap { case (_, e) =>
-          Seq(min(SparkShims.column(e)), max(SparkShims.column(e)))
-        }: _*).head()
-        keys.zipWithIndex.map { case ((a, e), i) =>
-          if (bounds.isNullAt(2 * i)) Literal.FalseLiteral
-          else And(
-            GreaterThanOrEqual(a, Literal.create(bounds.get(2 * i), e.dataType)),
-            LessThanOrEqual(a, Literal.create(bounds.get(2 * i + 1), e.dataType)))
-        }
+      val ranges = keys.zip(bounds(spark, j.right, keys.map(_._2))).map {
+        case ((a, _), Some((lo, hi))) =>
+          And(GreaterThanOrEqual(a, lo), LessThanOrEqual(a, hi))
+        case (_, None) => Literal.FalseLiteral
       }
       targetOnly ++ ranges
+    }
+  }
+
+  /** The least and greatest non-null value of each of `exprs` over the
+    * rows of `source`, or None where there is none. When the optimizer
+    * folds the projection of `exprs` over `source` into a local relation
+    * (it does so on the driver, after rewriting expressions such as
+    * `nvl` or `to_date`, and only when every one can be evaluated
+    * there), the bounds come from its rows, ordered as Spark's `min` and
+    * `max` order (NaN greatest); otherwise one aggregate takes them. */
+  private def bounds(
+      spark: SparkSession,
+      source: LogicalPlan,
+      exprs: Seq[Expression]): Seq[Option[(Literal, Literal)]] = {
+    if (exprs.isEmpty) return Nil
+    val keys = SparkShims.ofRows(spark, source).select(exprs.zipWithIndex.map {
+      case (e, i) => SparkShims.column(e).as(s"k$i")
+    }: _*)
+    keys.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        exprs.zipWithIndex.map { case (e, i) =>
+          val ord = TypeUtils.getInterpretedOrdering(e.dataType)
+          val values = l.data.filterNot(_.isNullAt(i)).map(_.get(i, e.dataType))
+          if (values.isEmpty) None
+          else Some(Literal(values.min(ord), e.dataType) -> Literal(values.max(ord), e.dataType))
+        }
+      case _ =>
+        val row = keys.select(exprs.indices.flatMap { i =>
+          Seq(min(col(s"k$i")), max(col(s"k$i")))
+        }: _*).head()
+        exprs.zipWithIndex.map { case (e, i) =>
+          if (row.isNullAt(2 * i)) None
+          else Some(Literal.create(row.get(2 * i), e.dataType) ->
+            Literal.create(row.get(2 * i + 1), e.dataType))
+        }
     }
   }
 

@@ -85,17 +85,20 @@ class MergeBuilder(
  *
  * Skipping: the ON clause's exact data filters (its target-only
  * conjuncts, and each `t.col = <source expr>` bounded by the source's
- * min and max of that expression, from one aggregate) select the
- * candidate files, and are the read set conflict detection checks.
- * A NOT MATCHED BY SOURCE clause reads every file.
+ * min and max of that expression) select the candidate files, and are
+ * the read set conflict detection checks. The bounds of a local source
+ * are evaluated on the driver, where its rows are; any other source
+ * runs one aggregate. A NOT MATCHED BY SOURCE clause reads every file.
  *
  * Phase 1 (find touched files): inner-join the source with the candidate
  * scan, each target row carrying its identity (`_metadata.file_path`,
- * `_metadata.row_index`). A rollup per file gives the files with matches,
- * the exact update/delete counts, and the multi-match guard; under
- * deletion vectors with no NOT MATCHED BY SOURCE clause it also returns
- * one bitmap per file of the matched rows some clause applies to, which
- * become the merge's deletion vectors once the guard passes.
+ * `_metadata.row_index`). One aggregate per file, one shuffle, gives
+ * the files with matches, pair counts per clause op, and a bitmap of the
+ * matched rows (in a matched-only merge, those some clause applies to).
+ * More pairs than that bitmap's cardinality is a multi-match; past that
+ * guard pair counts are the exact update/delete counts. Under deletion
+ * vectors with no NOT MATCHED BY SOURCE clause, the bitmaps of the rows
+ * some clause applies to are the merge's deletion vectors.
  *
  * Phase 2 (write all changes): join the touched files with the source
  * and emit, per row, the first applicable clause's projection
@@ -105,7 +108,9 @@ class MergeBuilder(
  * written, so the join keeps matched pairs and source rows (inner, or
  * source-preserving when rows may be inserted). Otherwise it is outer on
  * the target side, and under deletion vectors the changed rows' identity
- * is collected from it into bitmaps.
+ * is collected from it into bitmaps. Under deletion vectors a copied row
+ * is never written, so the join carries only the target columns the
+ * clauses read.
  *
  * Insert-only merges take a left-anti-join fast path over the candidates
  * that rewrites no target files.
@@ -113,6 +118,14 @@ class MergeBuilder(
  * InsertOnlyMergeExecutor.scala:53 — re-designed.)
  */
 object MergeCommand {
+
+  /** Phase 1's rollup of one file with matches: its matched pairs that
+    * the multi-match guard weighs, that update, that delete and that some
+    * clause applies to; the index set of the rows the guard weighs; and,
+    * where phase 1 takes it, the index set of its clause-applied rows. */
+  private case class FileMatches(file: AddFile, pairs: Long, updates: Long,
+      deletes: Long, applied: Long, rows: graft.dv.Bitmap64,
+      appliedRows: Option[graft.dv.Bitmap64])
 
   private val OP = "__graft_op"
   private val FILE = "__graft_file"
@@ -240,37 +253,6 @@ object MergeCommand {
           case _: MatchedDelete => "del"
         })).otherwise(acc)
       }
-      // Per-file aggregation: join-row count vs distinct target rows
-      // detects multi-matches; per-target-row distinct op counts give the
-      // exact update/delete metrics even when duplicates are legal.
-      // Two-level rollup instead of multi-countDistinct: four distinct
-      // aggregates in one groupBy would plan as a 5-way Expand of the
-      // whole phase-1 join output (every joined row shuffled five times —
-      // the dominant cost of a large merge). Pre-aggregating per
-      // (FILE, RID) makes every distinct count a plain sum of 0/1 flags:
-      // one map-side-combined shuffle at row grain, then a tiny rollup
-      // over one row per matched target row.
-      val perTargetRow = joinedInner
-        .groupBy(col(FILE), col(RID))
-        .agg(count(lit(1)).as("cnt"),
-          max(when(matchedOp === "mu", 1).otherwise(0)).as("hasMu"),
-          max(when(matchedOp === "del", 1).otherwise(0)).as("hasDel"),
-          count(when(matchedOp =!= "none", lit(1))).as("gcnt"))
-      val perFile = Seq(
-        sum(col("cnt")).as("n"), count(lit(1)).as("d"),
-        sum(col("hasMu")).as("mu"), sum(col("hasDel")).as("del"),
-        max(when(col("gcnt") > 0, 1).otherwise(0)).as("anyApplied"),
-        sum(col("gcnt")).as("gn"),
-        sum(when(col("gcnt") > 0, lit(1)).otherwise(lit(0))).as("gd")) ++
-        (if (dvFromMatch) Seq(graft.dv.RowIndexBitmap.column(
-          when(col("gcnt") > 0, col(RID))).as("bm")) else Nil)
-      val fileAndMatches = perTargetRow
-        .groupBy(col(FILE)).agg(perFile.head, perFile.tail: _*)
-        .collect()
-      val matchedFiles = Dml.resolveTouched(log, candidates,
-        fileAndMatches.map(_.getString(0)).toIndexedSeq)
-      val matchedUpdated = fileAndMatches.map(_.getLong(3)).sum
-      val matchedDeleted = fileAndMatches.map(_.getLong(4)).sum
       // Duplicate matches are unambiguous ONLY when the sole matched
       // clause is an unconditional DELETE: every matched row pair deletes,
       // so the duplicates change nothing (reference concept:
@@ -286,9 +268,38 @@ object MergeCommand {
       val matchedOnly = insertClauses.isEmpty && nmbsClauses.isEmpty
       val isOnlyOneUnconditionalDelete =
         matchedClauses == Seq(MatchedDelete(None))
-      val hasMultipleMatches =
-        if (matchedOnly) fileAndMatches.exists(r => r.getLong(6) > r.getLong(7))
-        else fileAndMatches.exists(r => r.getLong(1) > r.getLong(2))
+      val applied = matchedOp =!= "none"
+      val guardedRid = if (matchedOnly) when(applied, col(RID)) else col(RID)
+      // Per-file rollup in one aggregate: the pairs the guard weighs, the
+      // pairs per op and clause-applied, and a bitmap of the guarded rows'
+      // indexes. A bitmap's cardinality is the number of distinct rows it
+      // holds, so more pairs than that is a multi-match — no distinct
+      // aggregate, which would plan as an Expand of the whole join output,
+      // and no second shuffle. Under DVs the clause-applied rows' bitmap is
+      // the deletion vector; in a matched-only merge those are the guarded
+      // rows, otherwise a second bitmap takes them.
+      val appliedBitmap = dvFromMatch && !matchedOnly
+      val aggs = Seq(
+        count(guardedRid).as("n"),
+        count(when(matchedOp === "mu", lit(1))).as("mu"),
+        count(when(matchedOp === "del", lit(1))).as("del"),
+        count(when(applied, lit(1))).as("gn"),
+        graft.dv.RowIndexBitmap.column(guardedRid).as("rows")) ++
+        (if (appliedBitmap) Seq(graft.dv.RowIndexBitmap.column(when(applied, col(RID))).as("bm"))
+         else Nil)
+      val fileAndMatches = joinedInner.groupBy(col(FILE)).agg(aggs.head, aggs.tail: _*)
+        .collect()
+      val matches = fileAndMatches.toSeq.zip(Dml.resolveTouched(log, candidates,
+          fileAndMatches.map(_.getString(0)).toIndexedSeq)).map { case (r, f) =>
+        def bitmap(name: String) =
+          graft.dv.Bitmap64.fromDeltaPortable(r.getAs[Array[Byte]](name))
+        val rows = bitmap("rows")
+        FileMatches(f, pairs = r.getLong(1), updates = r.getLong(2),
+          deletes = r.getLong(3), applied = r.getLong(4), rows = rows,
+          appliedRows = if (appliedBitmap) Some(bitmap("bm"))
+            else if (matchedOnly) Some(rows) else None)
+      }
+      val hasMultipleMatches = matches.exists(f => f.pairs > f.rows.cardinality)
       if (hasMultipleMatches && !isOnlyOneUnconditionalDelete) {
         throw new IllegalStateException(
           "MERGE failed: a target row matched multiple source rows — " +
@@ -296,14 +307,19 @@ object MergeCommand {
             "allowed when the sole WHEN MATCHED clause is an " +
             "unconditional DELETE)")
       }
+      // Past the guard a row has at most one applied pair, so the pair
+      // counts are row counts — except under a lone unconditional DELETE,
+      // whose duplicates each delete the same row once.
+      val matchedUpdated = matches.map(_.updates).sum
+      val matchedDeleted =
+        if (isOnlyOneUnconditionalDelete) matches.map(_.rows.cardinality).sum
+        else matches.map(_.deletes).sum
       // Matched-only merges rewrite only files where some row actually
       // satisfies a matched clause condition; a file whose matches all
       // fail every clause keeps its rows and needs no rewrite (reference
       // concept: ClassicMergeExecutor.scala:105-110 matchedPredicate
       // pruning — re-designed).
-      val touched = fileAndMatches.toSeq.zip(matchedFiles).collect {
-        case (r, f) if !matchedOnly || r.getInt(5) == 1 => f
-      }
+      val touched = matches.collect { case f if !matchedOnly || f.applied > 0 => f.file }
       // Files needing rewrite: touched (matched rows) plus, when
       // NOT-MATCHED-BY-SOURCE clauses exist, every candidate file.
       val rewriteFiles = if (nmbsClauses.nonEmpty) candidates else touched
@@ -387,7 +403,10 @@ object MergeCommand {
         def overlay(set: Map[String, Column], default: Column): Column =
           set.collectFirst { case (k, x) if k.equalsIgnoreCase(name) => x }
             .getOrElse(default)
-        var result = tcol
+        // Under DVs a copied row is never written, so the final default is
+        // null: the join then carries only the target columns some clause
+        // reads, not every column of the table.
+        var result = if (useDv) lit(null) else tcol
         matchedClauses.zipWithIndex.foreach {
           case (cu: MatchedUpdate, i) =>
             result = when(col(OP) === s"mu$i", overlay(clauseSet(cu), tcol))
@@ -445,9 +464,7 @@ object MergeCommand {
         // untouched candidate files are left completely alone.
         val (removes, dvAdds, nChanged) =
           if (dvFromMatch) graft.dv.DeletionVectors.writeBitmaps(spark, log,
-            fileAndMatches.toSeq.zip(matchedFiles).map { case (r, f) =>
-              f -> graft.dv.Bitmap64.fromDeltaPortable(r.getAs[Array[Byte]]("bm"))
-            })
+            matches.map(f => f.file -> f.appliedRows.get))
           else graft.dv.DeletionVectors.writeDeletionVectors(spark, log, rewriteFiles,
             withOp.filter(col(OP) =!= "copy" && col(OP) =!= "drop" && col(FILE).isNotNull)
               .select(graft.dv.DeletionVectors.normFileCol(col(FILE)).as("__f"),

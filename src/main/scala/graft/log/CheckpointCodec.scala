@@ -32,7 +32,14 @@ import org.apache.spark.sql.types.StructType
  */
 private[graft] object CheckpointCodec {
   private lazy val encoder = ExpressionEncoder[SingleAction]()
-  private lazy val bound = encoder.resolveAndBind()
+  /** The row codec, built once per thread: building one generates its
+    * projection's code, and each holds buffers it reuses row to row. */
+  private val toRow =
+    ThreadLocal.withInitial[ExpressionEncoder.Serializer[SingleAction]](
+      () => encoder.createSerializer())
+  private val fromRow =
+    ThreadLocal.withInitial[ExpressionEncoder.Deserializer[SingleAction]](
+      () => encoder.resolveAndBind().createDeserializer())
 
   /** The schema checkpoints are read with: every column nullable, as
     * Spark reads files, so a column an older writer lacked reads as null.
@@ -46,13 +53,13 @@ private[graft] object CheckpointCodec {
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     new ParquetFileFormat().prepareWrite(spark, job, Map.empty, encoder.schema)
     val conf = job.getConfiguration
-    val toRow = encoder.createSerializer()
+    val serialize = toRow.get
     store.writeOverwrite(path) { out =>
       val writer = new RowWriter(new StreamFile(out)).withConf(conf)
         .withCompressionCodec(
           CompressionCodecName.fromConf(conf.get(ParquetOutputFormat.COMPRESSION)))
         .build()
-      try rows.foreach(r => writer.write(toRow(r)))
+      try rows.foreach(r => writer.write(serialize(r)))
       finally writer.close()
     }
   }
@@ -66,14 +73,14 @@ private[graft] object CheckpointCodec {
       spark, schema, StructType(Nil), schema, Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       spark.sessionState.newHadoopConf())
-    lazy val fromRow = bound.createDeserializer()
     paths => {
+      val deserialize = fromRow.get
       val out = Vector.newBuilder[SingleAction]
       files(store, paths).foreach { st =>
         val rows = readFile(PartitionedFile(InternalRow.empty,
           SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty,
           st.getModificationTime, st.getLen, Map.empty))
-        try rows.foreach(r => out += fromRow(r))
+        try rows.foreach(r => out += deserialize(r))
         finally rows match {
           case c: java.io.Closeable => c.close()
           case _ =>

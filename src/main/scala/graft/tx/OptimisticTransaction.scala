@@ -38,16 +38,6 @@ class ConcurrentTransactionException(msg: String)
  */
 class OptimisticTransaction(val log: GraftLog, val snapshot: Snapshot) {
 
-  /** Deterministic-interleaving test hook: invoked with the attempt
-    * version immediately before each physical commit attempt (including
-    * retries). A test injects a winning commit here to provoke each
-    * conflict class at an exact phase boundary — the reference's
-    * phase-locking observer concept
-    * (fuzzer/PhaseLockingTransactionExecutionObserver.scala), re-designed
-    * as a single-threaded callback: same determinism, no barriers or
-    * sleeps. Production leaves it a no-op. */
-  private[graft] var onCommitAttempt: Long => Unit = _ => ()
-
   /** Set by [[graft.commands.ConvertFromDelta]] (initial import AND sync):
     * this commit's file actions originate from the table's own Delta log,
     * not from this engine's writer. Typed replacement for the former
@@ -340,7 +330,6 @@ class OptimisticTransaction(val log: GraftLog, val snapshot: Snapshot) {
         val attempt =
           if (rowTracking) RowTracking.stampCommitVersion(finalActions, attemptVersion)
           else finalActions
-        onCommitAttempt(attemptVersion)
         // trustedCounts: this path's removes always reference live files
         // and its adds never silently replace one, so the checksum
         // aggregates fold incrementally — O(commit), not O(table). The

@@ -11,13 +11,15 @@ import graft.tx._
 
 /**
  * Deterministic conflict interleavings: each test pins transaction A,
- * then uses A's `onCommitAttempt` hook to inject a winning commit at the
- * exact moment A is about to write its commit file — so every
- * Concurrent*Exception class is provoked at a precise phase boundary,
- * single-threaded, with no sleeps and no timing dependence.
+ * then has the log store inject a winning commit at the exact moment A
+ * is about to write its commit file — so every Concurrent*Exception
+ * class is provoked at a precise phase boundary, single-threaded, with
+ * no sleeps and no timing dependence. Every table of the suite is opened
+ * through [[FaultyLogStore]], whose callback before each commit file
+ * write runs the winner.
  * (Reference concept: fuzzer/PhaseLockingTransactionExecutionObserver.scala
  * + concurrency/TransactionExecutionTestMixin.scala — re-designed as a
- * pre-attempt callback instead of thread barriers.)
+ * pre-write callback instead of thread barriers.)
  */
 class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
@@ -26,6 +28,9 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(): String = Files.createTempDirectory("graft-conc").toString
 
   override def afterAll(): Unit = GraftLog.clearCache()
+
+  override def withFixture(test: NoArgTest) =
+    FaultyLogStore.installed(spark)(super.withFixture(test))
 
   /** Fresh partitioned table; returns its log. */
   private def freshTable(): GraftLog = {
@@ -37,11 +42,14 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     GraftLog.forTable(spark, dir)
   }
 
-  /** Arm `txn` so that, on its FIRST commit attempt only, `winner` runs
-    * (committing ahead of it) — forcing the conflict-check path. */
-  private def injectOnFirstAttempt(txn: OptimisticTransaction)(winner: => Unit): Unit = {
+  /** Run `body` with `winner` committing just ahead of the first commit
+    * attempt `body` makes — forcing that attempt onto the conflict-check
+    * path. */
+  private def injectOnFirstAttempt[T](winner: => Unit)(body: => T): T = {
     var fired = false
-    txn.onCommitAttempt = _ => if (!fired) { fired = true; winner }
+    val result = FaultyLogStore.beforeEachCommit(_ => if (!fired) { fired = true; winner })(body)
+    assert(fired, "the winner never committed")
+    result
   }
 
   private def addFileFor(log: GraftLog, flag: String): AddFile = {
@@ -59,12 +67,13 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     val a = log.startTransaction()
     a.filterFiles() // whole-table read under Serializable
     val newAdd = addFileFor(log, "R")
-    injectOnFirstAttempt(a) {
+    val e = injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(newAdd), "APPEND")
-    }
-    val e = intercept[ConcurrentAppendException] {
-      a.commit(Seq(addFileFor(log, "A")), "APPEND")
+    } {
+      intercept[ConcurrentAppendException] {
+        a.commit(Seq(addFileFor(log, "A")), "APPEND")
+      }
     }
     assert(e.getMessage.contains("overlap the read set"))
   }
@@ -81,12 +90,13 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.types.StringType))
     a.filterFiles(partitionFilters = Seq(expr))
     val newAdd = addFileFor(log, "A") // disjoint partition
-    injectOnFirstAttempt(a) {
+    val v0 = log.update().version
+    val committed = injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(newAdd), "APPEND")
+    } {
+      a.commit(Seq(addFileFor(log, "R")), "APPEND")
     }
-    val v0 = log.update().version
-    val committed = a.commit(Seq(addFileFor(log, "R")), "APPEND")
     assert(committed === v0 + 2) // lost v0+1 to B, retried onto v0+2
   }
 
@@ -95,12 +105,13 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     val a = log.startTransaction()
     val read = a.filterFiles()
     val victim = read.head
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(victim.remove(System.currentTimeMillis())), "DELETE")
-    }
-    intercept[ConcurrentDeleteReadException] {
-      a.commit(Seq(addFileFor(log, "R")), "APPEND")
+    } {
+      intercept[ConcurrentDeleteReadException] {
+        a.commit(Seq(addFileFor(log, "R")), "APPEND")
+      }
     }
   }
 
@@ -112,13 +123,14 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     val log = freshTable()
     val a = log.startTransaction()
     val victim = a.snapshot.allFiles.head
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(victim.remove(System.currentTimeMillis())), "DELETE")
-    }
-    intercept[ConcurrentDeleteReadException] {
-      a.commit(Seq(victim.copy(dataChange = false, baseRowId = Some(0L))),
-        "ROW TRACKING BACKFILL")
+    } {
+      intercept[ConcurrentDeleteReadException] {
+        a.commit(Seq(victim.copy(dataChange = false, baseRowId = Some(0L))),
+          "ROW TRACKING BACKFILL")
+      }
     }
   }
 
@@ -131,12 +143,13 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     }
     val a = log.startTransaction()
     val victim = a.filterFiles().head
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(victim.remove(System.currentTimeMillis())), "DELETE")
+    } {
+      // Same interleaving as above, but SnapshotIsolation admits it.
+      a.commit(Seq(addFileFor(log, "R")), "APPEND")
     }
-    // Same interleaving as above, but SnapshotIsolation admits it.
-    a.commit(Seq(addFileFor(log, "R")), "APPEND")
   }
 
   test("ConcurrentDeleteDeleteException: both sides tombstone the same file") {
@@ -145,12 +158,13 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     // Not via filterFiles: a file in A's read set trips the more severe
     // delete-read check first; delete-delete is the pure compaction race.
     val victim = a.snapshot.allFiles.head
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(victim.remove(System.currentTimeMillis())), "DELETE")
-    }
-    intercept[ConcurrentDeleteDeleteException] {
-      a.commit(Seq(victim.remove(System.currentTimeMillis())), "DELETE")
+    } {
+      intercept[ConcurrentDeleteDeleteException] {
+        a.commit(Seq(victim.remove(System.currentTimeMillis())), "DELETE")
+      }
     }
   }
 
@@ -158,14 +172,15 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     val log = freshTable()
     val a = log.startTransaction()
     a.filterFiles()
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.updateMetadata(b.metadata.copy(configuration =
         b.metadata.configuration + ("graft.other" -> "x")))
       b.commit(Nil, "SET TBLPROPERTIES")
-    }
-    intercept[MetadataChangedException] {
-      a.commit(Seq(addFileFor(log, "R")), "APPEND")
+    } {
+      intercept[MetadataChangedException] {
+        a.commit(Seq(addFileFor(log, "R")), "APPEND")
+      }
     }
   }
 
@@ -177,12 +192,13 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     Graft.write(spark.range(3).toDF("id"), dst)
     val a = log.startTransaction()
     a.filterFiles()
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       GraftTable.forPath(spark, log.dataPath.toString)
         .enableRedirect(dst)
-    }
-    intercept[MetadataChangedException] {
-      a.commit(Seq(addFileFor(log, "R")), "APPEND")
+    } {
+      intercept[MetadataChangedException] {
+        a.commit(Seq(addFileFor(log, "R")), "APPEND")
+      }
     }
     // ... and a FRESH write attempt refuses on the redirect gate by name
     val e = intercept[UnsupportedOperationException] {
@@ -206,10 +222,11 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     a.updateMetadata(m.copy(configuration = m.configuration +
       (TableRedirect.PROP ->
         TableRedirect.propertyJson(TableRedirect.STATE_ENABLE, dstA))))
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       GraftTable.forPath(spark, src).enableRedirect(dstB)
+    } {
+      intercept[MetadataChangedException] { a.commit(Nil, "REDIRECT ENABLE") }
     }
-    intercept[MetadataChangedException] { a.commit(Nil, "REDIRECT ENABLE") }
     // the winner's ENABLE stands, pointing at ITS destination
     val live = TableRedirect.get(log.update().metadata)
     assert(live.exists(r =>
@@ -237,12 +254,13 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     a.updateMetadata(m.copy(configuration = m.configuration +
       (TableRedirect.PROP ->
         TableRedirect.propertyJson(TableRedirect.STATE_DROP, dst))))
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       // mid-DROP (still READY on disk): the public path serves the dest
       Graft.write(spark.range(100, 102).toDF("id"), src)
+    } {
+      // no FileAlreadyExists at the source log: first attempt commits
+      a.commit(Nil, "REDIRECT DROP")
     }
-    // no FileAlreadyExists at the source log: first attempt commits
-    a.commit(Nil, "REDIRECT DROP")
     // second transition clears via the validated route
     GraftTable.forPathNoRedirect(spark, src)
       .removeProperties(Seq(TableRedirect.PROP))
@@ -256,36 +274,39 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     val log = freshTable()
     val a = log.startTransaction()
     a.filterFiles()
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(log.update().protocol.copy(minWriterVersion = 3)), "UPGRADE")
-    }
-    intercept[ProtocolChangedException] {
-      a.commit(Seq(addFileFor(log, "R")), "APPEND")
+    } {
+      intercept[ProtocolChangedException] {
+        a.commit(Seq(addFileFor(log, "R")), "APPEND")
+      }
     }
   }
 
   test("ConcurrentTransactionException: same idempotent appId wins first") {
     val log = freshTable()
     val a = log.startTransaction()
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(SetTransaction("job-1", 7)), "WRITE")
-    }
-    intercept[ConcurrentTransactionException] {
-      a.commit(Seq(SetTransaction("job-1", 7), addFileFor(log, "R")), "WRITE")
+    } {
+      intercept[ConcurrentTransactionException] {
+        a.commit(Seq(SetTransaction("job-1", 7), addFileFor(log, "R")), "WRITE")
+      }
     }
   }
 
   test("ConcurrentTransactionException: same metadata domain advanced by both") {
     val log = freshTable()
     val a = log.startTransaction()
-    injectOnFirstAttempt(a) {
+    injectOnFirstAttempt {
       val b = log.startTransaction()
       b.commit(Seq(DomainMetadata("graft.domain.test", """{"v":1}""")), "DOMAIN")
-    }
-    intercept[ConcurrentTransactionException] {
-      a.commit(Seq(DomainMetadata("graft.domain.test", """{"v":2}""")), "DOMAIN")
+    } {
+      intercept[ConcurrentTransactionException] {
+        a.commit(Seq(DomainMetadata("graft.domain.test", """{"v":2}""")), "DOMAIN")
+      }
     }
   }
 
@@ -296,13 +317,16 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     // twice, so the loop must walk v+1 → v+2 → v+3.
     val adds = Seq(addFileFor(log, "A"), addFileFor(log, "N"))
     var n = 0
-    a.onCommitAttempt = _ => if (n < 2) {
-      val add = adds(n); n += 1
-      val b = log.startTransaction()
-      b.commit(Seq(add), "APPEND")
-    }
     val v0 = log.update().version
-    assert(a.commit(Seq(addFileFor(log, "R")), "APPEND") === v0 + 3)
+    val committed = FaultyLogStore.beforeEachCommit { v =>
+      if (n < 2) {
+        assert(v === v0 + 1 + n, "the hook missed an attempt")
+        val add = adds(n); n += 1
+        val b = log.startTransaction()
+        b.commit(Seq(add), "APPEND")
+      }
+    } { a.commit(Seq(addFileFor(log, "R")), "APPEND") }
+    assert(committed === v0 + 3)
   }
 
   /** A DV table of four files clustered on `id` (0-9, 10-19, 20-29,
@@ -311,27 +335,25 @@ class ConcurrencySuite extends AnyFunSuite with BeforeAndAfterAll {
     * metrics and the table's ids after it. */
   private def mergeRacingAppend(appended: Seq[Long]): (Map[String, String], Seq[Long]) = {
     import spark.implicits._
-    FaultyLogStore.installed(spark) {
-      val dir = tmpDir()
-      (0 until 4).foreach(i =>
-        Graft.write(spark.range(i * 10L, i * 10L + 10).toDF("id").coalesce(1), dir,
-          configuration = if (i > 0) Map.empty
-            else Map("graft.enableDeletionVectors" -> "true")))
-      val mergeVersion = GraftLog.forTable(spark, dir).update().version + 1
-      var fired = false
-      val metrics = FaultyLogStore.beforeEachWrite { p =>
-        if (!fired && FileNames.deltaVersion(p.getName).contains(mergeVersion)) {
-          fired = true
-          Graft.write(appended.toDF("id").coalesce(1), dir, mode = "append")
-        }
-      } {
-        GraftTable.forPath(spark, dir).merge(Seq(12L, 13L).toDF("id"), expr("t.id = s.id"))
-          .whenMatched().delete()
-          .execute()
+    val dir = tmpDir()
+    (0 until 4).foreach(i =>
+      Graft.write(spark.range(i * 10L, i * 10L + 10).toDF("id").coalesce(1), dir,
+        configuration = if (i > 0) Map.empty
+          else Map("graft.enableDeletionVectors" -> "true")))
+    val mergeVersion = GraftLog.forTable(spark, dir).update().version + 1
+    var firedAt = -1L
+    val metrics = FaultyLogStore.beforeEachCommit { v =>
+      if (firedAt < 0) {
+        firedAt = v
+        Graft.write(appended.toDF("id").coalesce(1), dir, mode = "append")
       }
-      assert(fired, "the winner never committed")
-      (metrics, Graft.read(spark, dir).as[Long].collect().sorted.toSeq)
+    } {
+      GraftTable.forPath(spark, dir).merge(Seq(12L, 13L).toDF("id"), expr("t.id = s.id"))
+        .whenMatched().delete()
+        .execute()
     }
+    assert(firedAt === mergeVersion, "the winner did not commit ahead of the MERGE")
+    (metrics, Graft.read(spark, dir).as[Long].collect().sorted.toSeq)
   }
 
   test("MERGE: a concurrent append outside the source's key range does not abort it") {

@@ -435,4 +435,83 @@ class DmlMatrixSuite extends AnyFunSuite {
       assert(rowsOf(path) === upserted1213 - 25L)
     }
   }
+
+  // ---- MERGE skipping's two venues for the source's key bounds: a local
+  // source's rows are bounded on the driver, any other source by an
+  // aggregate. The same rows through each must give the same filters,
+  // keep the same files, report the same metrics and leave the same
+  // table. Every table starts as four files clustered on `k`, the key
+  // `keyOf(id)` of ids 0-39, with v = id.
+
+  private def keyed(keyOf: String, conf: Map[String, String]): String = {
+    val dir = tmp()
+    (0 until 4).foreach(i => Graft.write(spark.range(i * 10L, i * 10L + 10)
+      .selectExpr(s"$keyOf as k", "cast(id as double) as v").coalesce(1), dir,
+      configuration = if (i > 0) Map.empty else conf))
+    dir
+  }
+
+  /** A venue case: the target's key `keyOf(id)`, the source's ids (None
+    * a null id), the rows the merge inserts, the ON clause `t.k = on`
+    * (also the key an inserted row gets), and the source's key of id
+    * where it is not the target's. */
+  private case class Venue(name: String, keyOf: String, ids: Seq[Option[Long]],
+      inserts: Int, on: String = "s.k", sourceKeyOf: String = "")
+
+  private val dateKey = "date_add(date'2024-01-01', cast(id as int))"
+  private val venueCases = Seq(
+    Venue("long", "id", Seq(Some(12L), Some(13L), Some(45L)), 1),
+    Venue("int", "cast(id as int)", Seq(Some(12L), Some(13L), Some(45L)), 1),
+    Venue("string", "lpad(cast(id as string), 3, '0')", Seq(Some(12L), Some(25L), Some(45L)), 1),
+    Venue("date", dateKey, Seq(Some(12L), Some(13L), Some(45L)), 1),
+    Venue("timestamp", "timestamp_seconds(1700000000 + id)",
+      Seq(Some(12L), Some(13L), Some(45L)), 1),
+    Venue("decimal", "cast(id * 0.25 as decimal(10, 2))", Seq(Some(12L), Some(25L), Some(45L)), 1),
+    Venue("double holding NaN", "if(id = 39, double('NaN'), cast(id as double))",
+      Seq(Some(12L), Some(39L), Some(45L)), 1),
+    Venue("null", "id", Seq(None, Some(12L)), 1),
+    Venue("all-null", "id", Seq(None, None), 2),
+    Venue("empty-source", "id", Nil, 0),
+    Venue("s.k + 1", "id", Seq(Some(11L), Some(12L)), 0, on = "s.k + 1"),
+    // Keys the analyzer leaves as expressions that only the optimizer
+    // rewrites into evaluable ones.
+    Venue("to_date(s.k)", dateKey, Seq(Some(12L), Some(13L), Some(45L)), 1,
+      on = "to_date(s.k)", sourceKeyOf = s"cast($dateKey as string)"),
+    Venue("nvl(s.k, 0)", "id", Seq(None, Some(12L), Some(45L)), 1, on = "nvl(s.k, 0)"))
+
+  for (dv <- Seq(false, true); c <- venueCases) {
+    val conf = if (dv) Map("graft.enableDeletionVectors" -> "true") else Map.empty[String, String]
+
+    test(s"merge skipping venues: a local and a shuffled source agree, ${c.name} key (dv=$dv)") {
+      import spark.implicits._
+      val cond = expr(s"t.k = ${c.on}")
+      val rows = c.ids.toDF("id").selectExpr(
+        s"${if (c.sourceKeyOf.isEmpty) c.keyOf else c.sourceKeyOf} as k",
+        "cast(coalesce(-id, -100) as double) as v")
+      val local = spark.createDataFrame(rows.collectAsList(), rows.schema)
+      val shuffled = local.repartition(2)
+      val target = Graft.read(spark, keyed(c.keyOf, conf)).alias("t")
+      def filters(src: DataFrame) =
+        graft.commands.Dml.joinFilters(spark, target, src.alias("s"), cond)
+      assert(filters(local) === filters(shuffled))
+      // The files a merge adds follow its source's partitioning, which the
+      // repartition changes whatever the bounds; every other metric agrees.
+      def merged(src: DataFrame) = {
+        val path = keyed(c.keyOf, conf)
+        val metrics = GraftTable.forPath(spark, path).merge(src, cond)
+          .whenMatched().update(Map("v" -> col("s.v")))
+          .whenNotMatched().insert(Map("k" -> expr(c.on), "v" -> col("s.v")))
+          .execute()
+        val table = Graft.read(spark, path)
+          .select(coalesce(col("k").cast("string"), lit("null")), col("v"))
+          .as[(String, Double)].collect().sorted.toSeq
+        (metrics - "numTargetFilesAdded", table)
+      }
+      val (localMetrics, localTable) = merged(local)
+      val (metrics, table) = merged(shuffled)
+      assert(localMetrics === metrics)
+      assert(localTable === table)
+      assert(table.size === 40 + c.inserts)
+    }
+  }
 }

@@ -4,14 +4,14 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-import graft.log.LogStore
+import graft.log.{FileNames, LogStore}
 
 /** Fault-injection store, plugged in through `spark.graft.logStore.impl`:
   * inside a [[FaultyLogStore.failing]] block every log write, put-if-absent
   * or overwrite, whose path matches the block's predicate throws — the
   * shape of a transient filesystem error. Inside a
-  * [[FaultyLogStore.beforeEachWrite]] block a callback runs before each
-  * write, e.g. to commit a concurrent winner just ahead of it. */
+  * [[FaultyLogStore.beforeEachCommit]] block a callback runs before each
+  * commit file write, e.g. to commit a concurrent winner just ahead of it. */
 class FaultyLogStore(conf: Configuration) extends LogStore(conf) {
   override def write(path: Path, chunks: Iterator[String]): Unit = {
     FaultyLogStore.check(path)
@@ -47,9 +47,16 @@ object FaultyLogStore {
     try body finally failWhen = _ => false
   }
 
-  /** Run `body` with `hook` called before every write the store makes. */
-  def beforeEachWrite[T](hook: Path => Unit)(body: => T): T = {
-    beforeWrite = hook
+  /** Run `body` with `hook` called with the version before every write of
+    * a commit file, except the commits `hook` makes itself: a hook that
+    * commits a concurrent winner is not called again for the winner. */
+  def beforeEachCommit[T](hook: Long => Unit)(body: => T): T = {
+    var inHook = false
+    beforeWrite = p =>
+      FileNames.deltaVersion(p.getName).filterNot(_ => inHook).foreach { v =>
+        inHook = true
+        try hook(v) finally inHook = false
+      }
     try body finally beforeWrite = _ => ()
   }
 }

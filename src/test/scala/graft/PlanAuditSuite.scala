@@ -260,9 +260,10 @@ class PlanAuditSuite extends AnyFunSuite {
 
   test("MERGE never plans an Expand — phase-1 distincts are rollup sums") {
     // Four countDistinct branches in one groupBy would plan as a 5-way
-    // Expand of the entire phase-1 join output; the two-level
-    // (FILE, RID) -> FILE rollup keeps it one row-grain shuffle. Capture
-    // every physical plan the merge executes and pin the absence.
+    // Expand of the entire phase-1 join output; phase 1 counts pairs and
+    // takes distinct rows as bitmap cardinalities instead, in one
+    // row-grain shuffle. Capture every physical plan the merge executes
+    // and pin the absence.
     val dir = tmpDir()
     Graft.write(spark.range(1000).selectExpr("id", "id % 7 as v"), dir)
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -587,6 +588,53 @@ class PlanAuditSuite extends AnyFunSuite {
       val broadcasts = after.id - before.id - 1
       assert(broadcasts <= 1, s"$policy: the cold load made $broadcasts broadcasts")
     }
+  }
+
+  test("Dml.joinFilters bounds a local source's keys with no Spark job") {
+    // A local source's rows are already on the driver: its key bounds
+    // are evaluated there, not by a min/max aggregate (2 jobs).
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression,
+      GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val dir = tmpDir()
+    Graft.write(spark.range(100).selectExpr("id", "id % 7 as v"), dir)
+    val target = Graft.read(spark, dir).alias("t")
+    val src = Seq((40L, 1L), (12L, 2L), (25L, 3L)).toDF("id", "v").alias("s")
+    var filters: Seq[Expression] = Nil
+    val jobs = jobsDuring {
+      filters = graft.commands.Dml.joinFilters(spark, target, src, expr("t.id = s.id"))
+    }
+    assert(jobs === 0, s"bounding a local source ran $jobs Spark jobs")
+    filters match {
+      case Seq(And(GreaterThanOrEqual(_, Literal(12L, _)), LessThanOrEqual(_, Literal(40L, _)))) =>
+      case other => fail(s"expected id BETWEEN 12 AND 40, got $other")
+    }
+    // The analyzed condition still holds `nvl` as an expression only the
+    // optimizer rewrites; the driver evaluates its rewrite all the same.
+    val nvlJobs = jobsDuring {
+      graft.commands.Dml.joinFilters(spark, target, src, expr("t.id = nvl(s.id, 0)"))
+    }
+    assert(nvlJobs === 0, s"bounding nvl over a local source ran $nvlJobs Spark jobs")
+  }
+
+  test("a DV upsert MERGE from a local source runs at most 6 Spark jobs") {
+    // The source's key bounds come from its rows on the driver, phase 1
+    // rolls up per file in one shuffle, and phase 2 joins in one
+    // shuffle per side before its write.
+    val dir = tmpDir()
+    (0 until 4).foreach(i => Graft.write(spark.range(i * 100L, i * 100L + 100)
+      .selectExpr("id", "id % 7 as v").coalesce(1), dir,
+      configuration = if (i > 0) Map.empty else Map("graft.enableDeletionVectors" -> "true")))
+    val src = (75L until 225L).map(i => (i * 2, -1L)).toDF("id", "v") // 150, 152, ..., 448
+    var metrics = Map.empty[String, String]
+    val jobs = jobsDuring {
+      metrics = GraftTable.forPath(spark, dir).merge(src, expr("t.id = s.id"))
+        .whenMatched().updateAll()
+        .whenNotMatched().insertAll()
+        .execute()
+    }
+    assert(metrics("numTargetFilesAfterSkipping") === "3")
+    assert(metrics("numTargetRowsUpdated") === "125" && metrics("numTargetRowsInserted") === "25")
+    assert(jobs <= 6, s"the merge ran $jobs Spark jobs")
   }
 
   test("no top-level object in src/main/scala declares a var") {

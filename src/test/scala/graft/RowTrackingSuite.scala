@@ -157,20 +157,27 @@ class RowTrackingSuite extends AnyFunSuite {
 
   test("backfill bounds consecutive commit-race losses with a named error") {
     val dir = tmpDir()
-    // 25 single-file appends: every batch loss has a fresh file to blame
-    (0 until 25).foreach(i =>
-      Graft.write(spark.range(i * 5L, i * 5L + 5).toDF("id").coalesce(1), dir))
-    val t = GraftTable.forPath(spark, dir)
+    val t = FaultyLogStore.installed(spark) {
+      // 25 single-file appends: every batch loss has a fresh file to blame
+      (0 until 25).foreach(i =>
+        Graft.write(spark.range(i * 5L, i * 5L + 5).toDF("id").coalesce(1), dir))
+      GraftTable.forPath(spark, dir)
+    }
+    // The backfill's protocol upgrade commits first, so that every commit
+    // the backfill makes below is a batch commit.
+    t.addFeatureSupport("rowTracking")
     // adversarial winner: on EVERY batch commit attempt, whole-file-delete
     // the next untouched file (a batch member, since one batch selects all
     // null-id files) — the re-add would resurrect it, so the batch loses.
     var k = 0
-    t.onBackfillBatch = txn => txn.onCommitAttempt = _ =>
-      if (k < 25) { t.delete($"id" >= k * 5L && $"id" < k * 5L + 5); k += 1 }
-    val e = intercept[IllegalArgumentException] { t.backfillRowTracking() }
+    val e = intercept[IllegalArgumentException] {
+      FaultyLogStore.beforeEachCommit { _ =>
+        if (k < 25) { t.delete($"id" >= k * 5L && $"id" < k * 5L + 5); k += 1 }
+      }(t.backfillRowTracking())
+    }
     assert(e.getMessage.contains("20 consecutive commit races"))
+    assert(k === 20, "a batch commit attempt ran without the adversary")
     // with the adversary gone, the same table backfills to completion
-    t.onBackfillBatch = _ => ()
     t.backfillRowTracking()
     t.upsertProperties(Map("graft.enableRowTracking" -> "true"))
     val ids = idsOf(dir)
