@@ -31,8 +31,8 @@ object Dml extends PredicateHelper {
     findTouchedFilesWithCount(spark, log, txn, candidates, condition)._1
 
   /** Same single scan, but also returns the exact matched-row count (the
-    * per-file counts ride the distinct-file aggregation for free) — this
-    * is where UPDATE's numUpdatedRows comes from without a second pass. */
+    * per-file counts ride the scan tasks' [[MatchFold]]) — this is where
+    * UPDATE's numUpdatedRows comes from without a second pass. */
   def findTouchedFilesWithCount(
       spark: SparkSession,
       log: GraftLog,
@@ -40,11 +40,20 @@ object Dml extends PredicateHelper {
       candidates: Seq[AddFile],
       condition: Column): (Seq[AddFile], Long) = {
     if (candidates.isEmpty) return (Nil, 0L)
-    val df = GraftFileIndex.dataFrame(spark, log, txn.snapshot, Some(candidates))
-    val perFile = df.filter(condition)
-      .groupBy(fileUri.as("f")).count().collect()
-    (resolveTouched(log, candidates, perFile.map(_.getString(0)).toIndexedSeq),
-      perFile.map(_.getLong(1)).sum)
+    val perFile = touchedFiles(log, candidates,
+      GraftFileIndex.dataFrame(spark, log, txn.snapshot, Some(candidates))
+        .filter(condition).select(fileUri))
+    (perFile.map(_._1), perFile.map(_._2.applied(0)).sum)
+  }
+
+  /** The candidates that hold a row of `uris` (one column of
+    * [[fileUri]] values), each with its rollup, folded in the scan tasks. */
+  private[commands] def touchedFiles(
+      log: GraftLog,
+      candidates: Seq[AddFile],
+      uris: DataFrame): Seq[(AddFile, MatchFold.File)] = {
+    MatchFold.run(uris.select(col(uris.columns.head), lit(0), lit(null), lit(null), lit(null)),
+      clauses = 1).touched(log, candidates)
   }
 
   /** THE one mapping from [[fileUri]] values back to the AddFiles that

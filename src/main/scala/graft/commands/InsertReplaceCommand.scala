@@ -95,11 +95,8 @@ object InsertReplaceCommand {
           val FILE = "__graft_file"
           val targetScan = Dml.scanFiles(spark, log, txn, candidates)
             .withColumn(FILE, Dml.fileUri)
-          val touchedPaths = targetScan.alias(targetAlias)
-            .join(src, condition, "left_semi")
-            .select(col(FILE)).distinct().collect().map(_.getString(0))
-          val touched = Dml.resolveTouched(log, candidates,
-            touchedPaths.toIndexedSeq)
+          val touched = Dml.touchedFiles(log, candidates, targetScan.alias(targetAlias)
+            .join(src, condition, "left_semi").select(col(FILE))).map(_._1)
           if (touched.isEmpty) (Nil, Nil, None, 0L)
           else {
             val base = Dml.scanFiles(spark, log, txn, touched)

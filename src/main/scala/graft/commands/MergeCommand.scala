@@ -1,7 +1,13 @@
 package graft.commands
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SparkShims
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.GraftTable
 import graft.log._
@@ -92,25 +98,33 @@ class MergeBuilder(
  *
  * Phase 1 (find touched files): inner-join the source with the candidate
  * scan, each target row carrying its identity (`_metadata.file_path`,
- * `_metadata.row_index`). One aggregate per file, one shuffle, gives
- * the files with matches, pair counts per clause op, and a bitmap of the
- * matched rows (in a matched-only merge, those some clause applies to).
- * More pairs than that bitmap's cardinality is a multi-match; past that
- * guard pair counts are the exact update/delete counts. Under deletion
- * vectors with no NOT MATCHED BY SOURCE clause, the bitmaps of the rows
- * some clause applies to are the merge's deletion vectors.
+ * `_metadata.row_index`). The scan tasks roll their pairs up per file
+ * ([[MatchFold]]): pair counts per matched clause and a bitmap of the
+ * matched rows (in a matched-only merge, those some clause applies to);
+ * the driver ORs the tasks' rollups, with no shuffle. More pairs than
+ * that bitmap's cardinality is a multi-match; past that guard pair counts
+ * are the exact update/delete counts. Under deletion vectors with no NOT
+ * MATCHED BY SOURCE clause, the bitmaps of the rows some clause applies
+ * to are the merge's deletion vectors.
  *
- * Phase 2 (write all changes): join the touched files with the source
- * and emit, per row, the first applicable clause's projection
- * (update/delete/insert/copy) via a single CASE WHEN chain — Catalyst
- * plans the join (broadcast or shuffle) and codegen runs the projection.
- * With phase-1 bitmaps and no change data feed only changed rows are
- * written, so the join keeps matched pairs and source rows (inner, or
- * source-preserving when rows may be inserted). Otherwise it is outer on
- * the target side, and under deletion vectors the changed rows' identity
- * is collected from it into bitmaps. Under deletion vectors a copied row
- * is never written, so the join carries only the target columns the
- * clauses read.
+ * Phase 2 (write all changes): emit, per row, the first applicable
+ * clause's projection (update/delete/insert/copy) via a single CASE WHEN
+ * chain. A local source (its optimized plan a local relation) within
+ * AQE's minimum partition size, under deletion vectors, with no NOT
+ * MATCHED BY SOURCE clause and no change data feed, has its rows indexed
+ * on the driver, and phase 1 also records the clause that applied to
+ * each source row. When the updates and inserts write only source
+ * columns and no applied source row applied to two target rows, phase 2
+ * projects the source's own rows, tagged on the driver, into one write
+ * task: no target scan, join or shuffle. Otherwise phase 2 joins the
+ * touched files with the source — Catalyst plans the join (broadcast or shuffle) and codegen runs the
+ * projection. With phase-1 bitmaps and no change data feed only changed
+ * rows are written, so the join keeps matched pairs and source rows
+ * (inner, or source-preserving when rows may be inserted). Otherwise it
+ * is outer on the target side, and under deletion vectors the changed
+ * rows' identity is collected from it into bitmaps. Under deletion
+ * vectors a copied row is never written, so the join carries only the
+ * target columns the clauses read.
  *
  * Insert-only merges take a left-anti-join fast path over the candidates
  * that rewrites no target files.
@@ -119,18 +133,12 @@ class MergeBuilder(
  */
 object MergeCommand {
 
-  /** Phase 1's rollup of one file with matches: its matched pairs that
-    * the multi-match guard weighs, that update, that delete and that some
-    * clause applies to; the index set of the rows the guard weighs; and,
-    * where phase 1 takes it, the index set of its clause-applied rows. */
-  private case class FileMatches(file: AddFile, pairs: Long, updates: Long,
-      deletes: Long, applied: Long, rows: graft.dv.Bitmap64,
-      appliedRows: Option[graft.dv.Bitmap64])
-
   private val OP = "__graft_op"
   private val FILE = "__graft_file"
   private val RID = "__graft_rid"
   private val SRC = "__graft_src_exists"
+  private val CLAUSE = "__graft_clause"
+  private val SID = "__graft_sid"
 
   def run(
       table: GraftTable,
@@ -242,16 +250,69 @@ object MergeCommand {
       // phase 1 collects them as one bitmap per file.
       val dvFromMatch = useDv && nmbsClauses.isEmpty
 
+      val srcCols = source.schema.fieldNames.map(_.toLowerCase).toSet
+      def clauseSet(c: MergeClause): Map[String, Column] = c match {
+        case MatchedUpdate(_, null) | NotMatchedInsert(_, null) =>
+          // updateAll/insertAll: t.col = s.col by name
+          schema.fieldNames.filter(n => srcCols.contains(n.toLowerCase))
+            .map(n => n -> col(s"$sourceAlias.$n")).toMap
+        case MatchedUpdate(_, set) => set
+        case NotMatchedBySourceUpdate(_, set) => set
+        case NotMatchedInsert(_, values) => values
+        case _ => Map.empty
+      }
+      def overlay(set: Map[String, Column], name: String, default: Column): Column =
+        set.collectFirst { case (k, x) if k.equalsIgnoreCase(name) => x }
+          .getOrElse(default)
+
+      // A local source's rows are on the driver. Under DVs with phase-1
+      // bitmaps and no change data feed, they get an index there, so
+      // phase 1 can also record which source rows matched and which
+      // clause applied to each. Only a source within AQE's minimum
+      // partition size does: the join's coalesced shuffle of it would be
+      // one partition, and the driver plans the tagged rows one by one
+      // (on a 4-core host a 200k-row source ran 20% slower this way than
+      // by the join).
+      val local = if (dvFromMatch && !cdf) source.queryExecution.optimizedPlan match {
+        case l: LocalRelation if !l.isStreaming && l.stats.sizeInBytes <=
+            source.queryExecution.sparkSession.sessionState.conf
+              .getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE) => Some(l)
+        case _ => None
+      } else None
+      /** The local source's rows, each with `attr` set to `value` of the
+        * row's index, under the source's own attributes and alias. */
+      def localSource(attr: AttributeReference, value: Int => Any): DataFrame = {
+        val l = local.get
+        SparkShims.ofRows(spark, LocalRelation(source.queryExecution.analyzed.output :+ attr,
+          l.data.zipWithIndex.map { case (r, i) =>
+            InternalRow.fromSeq(r.toSeq(l.schema) :+ value(i))
+          })).alias(sourceAlias)
+      }
+
       // ---- Phase 1: find touched files + multi-match guard.
-      val joinedInner = scanWithIds(candidates).alias(targetAlias)
-        .join(src, condition, "inner")
-      // First-applicable-clause op per matched row, evaluated on the SAME
-      // phase-1 aggregation — exact numTargetRowsUpdated/Deleted for free.
-      val matchedOp: Column = matchedClauses.foldRight(lit("none")) { (c, acc) =>
-        when(clauseCond(c), lit(c match {
-          case _: MatchedUpdate => "mu"
-          case _: MatchedDelete => "del"
-        })).otherwise(acc)
+      val joinedInner = scanWithIds(candidates).alias(targetAlias).join(
+        if (local.isDefined) localSource(AttributeReference(SID, LongType, nullable = false)(),
+          _.toLong) else src,
+        condition, "inner")
+      // Phase 2 can write from the source's own rows only when what it
+      // writes reads no target column: every update sets every column,
+      // and updates and inserts read source columns only.
+      val sourceWrites = local.isDefined && scala.util.Try {
+        val writes = clauses.flatMap {
+          case u: MatchedUpdate =>
+            schema.fieldNames.toSeq.map(n => overlay(clauseSet(u), n, col(s"$targetAlias.$n")))
+          case i: NotMatchedInsert => clauseSet(i).values.toSeq ++ i.condition
+          case _ => Nil
+        }
+        val plan = joinedInner.select(writes: _*).queryExecution.analyzed
+        val sourceAttrs = plan.collectFirst { case j: Join => j.right.outputSet }.get
+        plan.expressions.forall(e =>
+          !SubqueryExpression.hasSubquery(e) && e.references.subsetOf(sourceAttrs))
+      }.getOrElse(false)
+      // The first matched clause that applies to each pair, -1 for none:
+      // exact numTargetRowsUpdated/Deleted from the same pass.
+      val clause = matchedClauses.zipWithIndex.foldRight(lit(-1)) { case ((c, i), acc) =>
+        when(clauseCond(c), lit(i)).otherwise(acc)
       }
       // Duplicate matches are unambiguous ONLY when the sole matched
       // clause is an unconditional DELETE: every matched row pair deletes,
@@ -268,38 +329,24 @@ object MergeCommand {
       val matchedOnly = insertClauses.isEmpty && nmbsClauses.isEmpty
       val isOnlyOneUnconditionalDelete =
         matchedClauses == Seq(MatchedDelete(None))
-      val applied = matchedOp =!= "none"
-      val guardedRid = if (matchedOnly) when(applied, col(RID)) else col(RID)
-      // Per-file rollup in one aggregate: the pairs the guard weighs, the
-      // pairs per op and clause-applied, and a bitmap of the guarded rows'
-      // indexes. A bitmap's cardinality is the number of distinct rows it
-      // holds, so more pairs than that is a multi-match — no distinct
-      // aggregate, which would plan as an Expand of the whole join output,
-      // and no second shuffle. Under DVs the clause-applied rows' bitmap is
-      // the deletion vector; in a matched-only merge those are the guarded
-      // rows, otherwise a second bitmap takes them.
+      val applied = col(CLAUSE) >= 0
+      // Per-file rollup in the scan tasks: the pairs the guard weighs, the
+      // pairs per clause, and a bitmap of the weighed rows' indexes. A
+      // bitmap's cardinality is the number of distinct rows it holds, so
+      // more pairs than that is a multi-match. Under DVs the clause-applied
+      // rows' bitmap is the deletion vector; in a matched-only merge those
+      // are the weighed rows, otherwise a second bitmap takes them.
       val appliedBitmap = dvFromMatch && !matchedOnly
-      val aggs = Seq(
-        count(guardedRid).as("n"),
-        count(when(matchedOp === "mu", lit(1))).as("mu"),
-        count(when(matchedOp === "del", lit(1))).as("del"),
-        count(when(applied, lit(1))).as("gn"),
-        graft.dv.RowIndexBitmap.column(guardedRid).as("rows")) ++
-        (if (appliedBitmap) Seq(graft.dv.RowIndexBitmap.column(when(applied, col(RID))).as("bm"))
-         else Nil)
-      val fileAndMatches = joinedInner.groupBy(col(FILE)).agg(aggs.head, aggs.tail: _*)
-        .collect()
-      val matches = fileAndMatches.toSeq.zip(Dml.resolveTouched(log, candidates,
-          fileAndMatches.map(_.getString(0)).toIndexedSeq)).map { case (r, f) =>
-        def bitmap(name: String) =
-          graft.dv.Bitmap64.fromDeltaPortable(r.getAs[Array[Byte]](name))
-        val rows = bitmap("rows")
-        FileMatches(f, pairs = r.getLong(1), updates = r.getLong(2),
-          deletes = r.getLong(3), applied = r.getLong(4), rows = rows,
-          appliedRows = if (appliedBitmap) Some(bitmap("bm"))
-            else if (matchedOnly) Some(rows) else None)
-      }
-      val hasMultipleMatches = matches.exists(f => f.pairs > f.rows.cardinality)
+      val fold = MatchFold.run(joinedInner
+        .select(col(FILE), col(RID), clause.as(CLAUSE),
+          (if (sourceWrites) col(SID) else lit(null)).as(SID))
+        .select(col(FILE), col(CLAUSE),
+          if (matchedOnly) when(applied, col(RID)) else col(RID),
+          if (appliedBitmap) when(applied, col(RID)) else lit(null),
+          col(SID)),
+        matchedClauses.size)
+      val matches = fold.touched(log, candidates)
+      val hasMultipleMatches = matches.exists { case (_, f) => f.weighed > f.rows.cardinality }
       if (hasMultipleMatches && !isOnlyOneUnconditionalDelete) {
         throw new IllegalStateException(
           "MERGE failed: a target row matched multiple source rows — " +
@@ -310,116 +357,126 @@ object MergeCommand {
       // Past the guard a row has at most one applied pair, so the pair
       // counts are row counts — except under a lone unconditional DELETE,
       // whose duplicates each delete the same row once.
-      val matchedUpdated = matches.map(_.updates).sum
+      val updateClause = matchedClauses.map(_.isInstanceOf[MatchedUpdate])
+      def appliedPairs(update: Boolean): Long = matches.map { case (_, f) =>
+        f.applied.indices.filter(updateClause(_) == update).map(f.applied(_)).sum
+      }.sum
+      val matchedUpdated = appliedPairs(update = true)
       val matchedDeleted =
-        if (isOnlyOneUnconditionalDelete) matches.map(_.rows.cardinality).sum
-        else matches.map(_.deletes).sum
+        if (isOnlyOneUnconditionalDelete) matches.map(_._2.rows.cardinality).sum
+        else appliedPairs(update = false)
       // Matched-only merges rewrite only files where some row actually
       // satisfies a matched clause condition; a file whose matches all
       // fail every clause keeps its rows and needs no rewrite (reference
       // concept: ClassicMergeExecutor.scala:105-110 matchedPredicate
       // pruning — re-designed).
-      val touched = matches.collect { case f if !matchedOnly || f.applied > 0 => f.file }
+      val touched = matches.collect { case (file, f) if !matchedOnly || f.applied.sum > 0 => file }
       // Files needing rewrite: touched (matched rows) plus, when
       // NOT-MATCHED-BY-SOURCE clauses exist, every candidate file.
       val rewriteFiles = if (nmbsClauses.nonEmpty) candidates else touched
+      // The source's rows decide phase 2 when each source row some clause
+      // applied to applied to one target row: as many applied pairs as
+      // applied source rows.
+      val sourceSide = sourceWrites && {
+        val appliedSources = new graft.dv.Bitmap64()
+        fold.sourceApplied.foreach(appliedSources.or)
+        matches.map(_._2.applied.sum).sum == appliedSources.cardinality
+      }
 
-      // ---- Phase 2: write all changes from one join. Under DVs with
-      // phase-1 bitmaps a copied row is a no-op, so without CDF the join
-      // keeps only matched pairs and source rows: inner when every clause
-      // is a matched one, source-preserving when rows may be inserted.
-      // Otherwise it is outer on the target side, so copies (rewrite),
-      // NOT MATCHED BY SOURCE rows and CDF pre-images reach the output.
-      val joinType = (dvFromMatch && !cdf, insertClauses.nonEmpty) match {
-        case (true, true) => "right_outer"
-        case (true, false) => "inner"
-        case (false, true) => "full_outer"
-        case (false, false) => "left_outer"
+      // Row operation: first applicable clause wins; `matched(i)` holds
+      // where matched clause i applies.
+      def opCol(matched: Int => Column, isSourceOnly: Column, isTargetOnly: Column): Column = {
+        val cases = matchedClauses.zipWithIndex.map { case (c, i) =>
+            matched(i) -> (c match {
+              case _: MatchedUpdate => s"mu$i"
+              case _: MatchedDelete => "del"
+            })
+          } ++ insertClauses.zipWithIndex.map { case (c, i) =>
+            (isSourceOnly && clauseCond(c)) -> s"ins$i"
+          } ++ nmbsClauses.zipWithIndex.map { case (c, i) =>
+            (isTargetOnly && clauseCond(c)) -> (c match {
+              case _: NotMatchedBySourceUpdate => s"nu$i"
+              case _: NotMatchedBySourceDelete => "del"
+            })
+          }
+        // Source-only rows with no applicable insert clause are dropped.
+        cases.reverse.foldLeft(
+          when(isSourceOnly, lit("drop")).otherwise(lit("copy"))) {
+          case (acc, (cond, tag)) => when(cond, lit(tag)).otherwise(acc)
+        }
       }
-      // The source-preserving join is a sort-merge join, as the full outer
-      // join it replaces is: broadcasting the touched files instead would
-      // write one file per source partition, not files sized by the
-      // shuffle's coalesced partitions.
-      val srcMarked = {
-        val marked = source.withColumn(SRC, lit(true))
-        (if (joinType == "right_outer") marked.hint("merge") else marked)
-          .alias(sourceAlias)
-      }
-      // Matched-only: a pair failing every clause condition is a no-op;
-      // fold the clause disjunction into the join condition so such target
-      // rows fall out of the join as unmatched and are copied exactly once
-      // even when the raw condition matches them to several source rows.
-      val rewriteCondition =
-        if (matchedOnly && matchedClauses.forall(_.condition.isDefined))
-          condition && matchedClauses.map(clauseCond).reduce(_ || _)
-        else condition
-      val joined = scanWithIds(rewriteFiles).withColumn("__tgt_exists", lit(true))
-        .alias(targetAlias)
-        .join(srcMarked, rewriteCondition, joinType)
 
-      val isMatched = col("__tgt_exists").isNotNull && col(SRC).isNotNull
-      val isTargetOnly = col("__tgt_exists").isNotNull && col(SRC).isNull
-      val isSourceOnly = col("__tgt_exists").isNull && col(SRC).isNotNull
+      // ---- Phase 2: write all changes.
+      val withOp = if (sourceSide) {
+        // From the source's own rows, tagged as phase 1 found them: the
+        // clause that applied, -1 where none did, null where no target row
+        // matched. No target scan, join or shuffle.
+        val tagged = localSource(AttributeReference(CLAUSE, IntegerType)(), i =>
+          fold.sourceApplied.indexWhere(_.contains(i)) match {
+            case -1 if fold.sourceMatched.contains(i) => -1
+            case -1 => null
+            case c => c
+          })
+        tagged.withColumn(OP, opCol(col(CLAUSE) === _, col(CLAUSE).isNull, lit(false)))
+      } else {
+        // From one join. Under DVs with phase-1 bitmaps a copied row is a
+        // no-op, so without CDF the join keeps only matched pairs and
+        // source rows: inner when every clause is a matched one,
+        // source-preserving when rows may be inserted. Otherwise it is
+        // outer on the target side, so copies (rewrite), NOT MATCHED BY
+        // SOURCE rows and CDF pre-images reach the output.
+        val joinType = (dvFromMatch && !cdf, insertClauses.nonEmpty) match {
+          case (true, true) => "right_outer"
+          case (true, false) => "inner"
+          case (false, true) => "full_outer"
+          case (false, false) => "left_outer"
+        }
+        // The source-preserving join is a sort-merge join, as the full
+        // outer join it replaces is: broadcasting the touched files instead
+        // would write one file per source partition, not files sized by the
+        // shuffle's coalesced partitions.
+        val srcMarked = {
+          val marked = source.withColumn(SRC, lit(true))
+          (if (joinType == "right_outer") marked.hint("merge") else marked)
+            .alias(sourceAlias)
+        }
+        // Matched-only: a pair failing every clause condition is a no-op;
+        // fold the clause disjunction into the join condition so such
+        // target rows fall out of the join as unmatched and are copied
+        // exactly once even when the raw condition matches them to several
+        // source rows.
+        val rewriteCondition =
+          if (matchedOnly && matchedClauses.forall(_.condition.isDefined))
+            condition && matchedClauses.map(clauseCond).reduce(_ || _)
+          else condition
+        val joined = scanWithIds(rewriteFiles).withColumn("__tgt_exists", lit(true))
+          .alias(targetAlias)
+          .join(srcMarked, rewriteCondition, joinType)
+        val isMatched = col("__tgt_exists").isNotNull && col(SRC).isNotNull
+        joined.withColumn(OP, opCol(i => isMatched && clauseCond(matchedClauses(i)),
+          isSourceOnly = col("__tgt_exists").isNull && col(SRC).isNotNull,
+          isTargetOnly = col("__tgt_exists").isNotNull && col(SRC).isNull))
+      }
 
-      // Row operation: first applicable clause wins.
-      var cases = Seq.empty[(Column, String)]
-      matchedClauses.zipWithIndex.foreach { case (c, i) =>
-        cases :+= (isMatched && clauseCond(c), c match {
-          case _: MatchedUpdate => s"mu$i"
-          case _: MatchedDelete => "del"
-        })
-      }
-      insertClauses.zipWithIndex.foreach { case (c, i) =>
-        cases :+= (isSourceOnly && clauseCond(c), s"ins$i")
-      }
-      nmbsClauses.zipWithIndex.foreach { case (c, i) =>
-        cases :+= (isTargetOnly && clauseCond(c), c match {
-          case _: NotMatchedBySourceUpdate => s"nu$i"
-          case _: NotMatchedBySourceDelete => "del"
-        })
-      }
-      // Source-only rows with no applicable insert clause are dropped.
-      val opCol = cases.reverse.foldLeft(
-        when(isSourceOnly, lit("drop")).otherwise(lit("copy"))) {
-        case (acc, (cond, tag)) => when(cond, lit(tag)).otherwise(acc)
-      }
-      val withOp = joined.withColumn(OP, opCol)
-
-      val srcCols = source.schema.fieldNames.map(_.toLowerCase).toSet
-      def clauseSet(c: MergeClause): Map[String, Column] = c match {
-        case MatchedUpdate(_, null) => // updateAll: t.col = s.col by name
-          schema.fieldNames.filter(n => srcCols.contains(n.toLowerCase))
-            .map(n => n -> col(s"$sourceAlias.$n")).toMap
-        case MatchedUpdate(_, set) => set
-        case NotMatchedBySourceUpdate(_, set) => set
-        case NotMatchedInsert(_, null) =>
-          schema.fieldNames.filter(n => srcCols.contains(n.toLowerCase))
-            .map(n => n -> col(s"$sourceAlias.$n")).toMap
-        case NotMatchedInsert(_, values) => values
-        case _ => Map.empty
-      }
       def outCol(name: String): Column = {
         val tcol = col(s"$targetAlias.$name")
-        def overlay(set: Map[String, Column], default: Column): Column =
-          set.collectFirst { case (k, x) if k.equalsIgnoreCase(name) => x }
-            .getOrElse(default)
         // Under DVs a copied row is never written, so the final default is
         // null: the join then carries only the target columns some clause
         // reads, not every column of the table.
         var result = if (useDv) lit(null) else tcol
         matchedClauses.zipWithIndex.foreach {
           case (cu: MatchedUpdate, i) =>
-            result = when(col(OP) === s"mu$i", overlay(clauseSet(cu), tcol))
+            result = when(col(OP) === s"mu$i", overlay(clauseSet(cu), name, tcol))
               .otherwise(result)
           case _ =>
         }
         insertClauses.zipWithIndex.foreach { case (ci, i) =>
-          result = when(col(OP) === s"ins$i", overlay(clauseSet(ci), lit(null)))
+          result = when(col(OP) === s"ins$i", overlay(clauseSet(ci), name, lit(null)))
             .otherwise(result)
         }
         nmbsClauses.zipWithIndex.foreach {
           case (cu: NotMatchedBySourceUpdate, i) =>
-            result = when(col(OP) === s"nu$i", overlay(clauseSet(cu), tcol))
+            result = when(col(OP) === s"nu$i", overlay(clauseSet(cu), name, tcol))
               .otherwise(result)
           case _ =>
         }
@@ -434,7 +491,9 @@ object MergeCommand {
           col(OP) =!= "copy" && col(OP) =!= "del" && col(OP) =!= "drop"
         } else col(OP) =!= "del" && col(OP) =!= "drop")
         .select(outCols.toIndexedSeq: _*)
-      val adds = txn.writeFiles(output)
+      // The source side writes one file, as the join's coalesced shuffle
+      // does for a source within the minimum partition size.
+      val adds = txn.writeFiles(if (sourceSide) output.coalesce(1) else output)
 
       val cdcActions = if (cdf) {
         val changeRows = withOp.filter(col(OP) =!= "copy" && col(OP) =!= "drop")
@@ -464,7 +523,9 @@ object MergeCommand {
         // untouched candidate files are left completely alone.
         val (removes, dvAdds, nChanged) =
           if (dvFromMatch) graft.dv.DeletionVectors.writeBitmaps(spark, log,
-            matches.map(f => f.file -> f.appliedRows.get))
+            matches.map { case (file, f) =>
+              file -> (if (appliedBitmap) f.appliedRows else f.rows)
+            })
           else graft.dv.DeletionVectors.writeDeletionVectors(spark, log, rewriteFiles,
             withOp.filter(col(OP) =!= "copy" && col(OP) =!= "drop" && col(FILE).isNotNull)
               .select(graft.dv.DeletionVectors.normFileCol(col(FILE)).as("__f"),

@@ -72,8 +72,8 @@ final class Bitmap64 private (
     size
   }
 
-  /** Java serialization (an aggregation buffer crossing a shuffle)
-    * goes through the portable bytes. */
+  /** Java serialization (a task's match-pass rollup returning to the
+    * driver) goes through the portable bytes. */
   private def writeReplace(): AnyRef =
     new Bitmap64.Portable(Bitmap64.toDeltaPortable(this))
 

@@ -213,26 +213,3 @@ object DeletionVectors {
     (removes, adds, newlyDeleted)
   }
 }
-
-/** Aggregate of row indexes into one bitmap, returned in Delta's portable
-  * serialization ([[Bitmap64.fromDeltaPortable]] reads it back). Null
-  * inputs are skipped, so `when(cond, rowIndex)` collects the rows where
-  * `cond` holds. Partial bitmaps stay objects within a task. */
-private[graft] object RowIndexBitmap
-    extends org.apache.spark.sql.expressions.Aggregator[java.lang.Long, Bitmap64, Array[Byte]] {
-  def zero: Bitmap64 = new Bitmap64()
-  def reduce(b: Bitmap64, i: java.lang.Long): Bitmap64 = {
-    if (i != null) b.add(i)
-    b
-  }
-  def merge(a: Bitmap64, b: Bitmap64): Bitmap64 = { a.or(b); a }
-  def finish(b: Bitmap64): Array[Byte] = Bitmap64.toDeltaPortable(b)
-  def bufferEncoder: org.apache.spark.sql.Encoder[Bitmap64] =
-    org.apache.spark.sql.Encoders.javaSerialization[Bitmap64]
-  def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-    org.apache.spark.sql.Encoders.BINARY
-
-  /** The aggregate as a column function. */
-  def column(rowIndex: Column): Column =
-    udaf(this, org.apache.spark.sql.Encoders.LONG)(rowIndex)
-}

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -97,7 +98,8 @@ private[graft] object CheckpointCodec {
   def holdsMetadata(spark: SparkSession, store: LogStore, path: Path): Boolean = {
     val conf = spark.sessionState.newHadoopConf()
     files(store, Seq(path)).exists { st =>
-      val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf).build())
       try footer.getFooter.getBlocks.asScala.exists(_.getColumns.asScala.exists { c =>
         val stats = c.getStatistics
         c.getPath.toDotString == "metaData.id" &&

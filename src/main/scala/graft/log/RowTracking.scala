@@ -96,9 +96,10 @@ object RowTracking {
         it.map { rel =>
           val p = new Path(rel)
           val abs = if (p.isAbsolute) p else new Path(new Path(root), rel)
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(abs, confBc.value)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val conf = confBc.value
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(abs, conf),
+            org.apache.parquet.HadoopReadOptions.builder(conf).build())
           try rel -> r.getRecordCount finally r.close()
         }
       }.collect().toMap

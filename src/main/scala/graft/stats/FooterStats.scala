@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -116,7 +117,8 @@ object FooterStats {
       file: Path,
       conf: Configuration,
       statCols: Vector[(String, DataType)]): String = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
     val footer = try reader.getFooter finally reader.close()
     val blocks = footer.getBlocks
     var numRecords = 0L

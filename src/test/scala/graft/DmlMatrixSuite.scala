@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.commands.MergeBuilder
 import graft.log.GraftLog
 
 /**
@@ -496,22 +497,102 @@ class DmlMatrixSuite extends AnyFunSuite {
       assert(filters(local) === filters(shuffled))
       // The files a merge adds follow its source's partitioning, which the
       // repartition changes whatever the bounds; every other metric agrees.
-      def merged(src: DataFrame) = {
+      // Each source goes through two clause shapes: one that sets a column
+      // and keeps the target's key, and the full-row updateAll/insertAll,
+      // which a local source under DVs writes from its own rows.
+      def merged(src: DataFrame, fullRow: Boolean) = {
         val path = keyed(c.keyOf, conf)
-        val metrics = GraftTable.forPath(spark, path).merge(src, cond)
-          .whenMatched().update(Map("v" -> col("s.v")))
-          .whenNotMatched().insert(Map("k" -> expr(c.on), "v" -> col("s.v")))
+        val b = GraftTable.forPath(spark, path).merge(src, cond)
+        val metrics = (if (fullRow) b.whenMatched().updateAll().whenNotMatched().insertAll()
+          else b.whenMatched().update(Map("v" -> col("s.v")))
+            .whenNotMatched().insert(Map("k" -> expr(c.on), "v" -> col("s.v"))))
           .execute()
         val table = Graft.read(spark, path)
           .select(coalesce(col("k").cast("string"), lit("null")), col("v"))
           .as[(String, Double)].collect().sorted.toSeq
         (metrics - "numTargetFilesAdded", table)
       }
+      for (fullRow <- Seq(false, true)) {
+        val (localMetrics, localTable) = merged(local, fullRow)
+        val (metrics, table) = merged(shuffled, fullRow)
+        assert(localMetrics === metrics, s"fullRow=$fullRow")
+        assert(localTable === table, s"fullRow=$fullRow")
+        assert(table.size === 40 + c.inserts, s"fullRow=$fullRow")
+      }
+    }
+  }
+
+  // ---- MERGE phase 2's two venues for a local source: under DVs, with
+  // no NOT MATCHED BY SOURCE clause and no change data feed, a local
+  // source's own rows, tagged by phase 1, are written when updates and
+  // inserts read only source columns and no source row applied to two
+  // target rows; otherwise, and for any other source, phase 2 joins. Each
+  // shape runs from a local source and from the same rows repartitioned,
+  // against a model. The target is four files of k = 0-39 with v = k; a
+  // source row is (k, -k).
+
+  /** A phase-2 venue case: the source's keys, the clauses, the keys whose
+    * rows the merge updates, deletes and inserts, whether the source
+    * carries `v`, and whether the target holds a second row of key 12. */
+  private case class Shape(name: String, ids: Seq[Long],
+      clauses: MergeBuilder => MergeBuilder, updated: Set[Long] = Set.empty,
+      deleted: Set[Long] = Set.empty, inserted: Set[Long] = Set.empty,
+      withV: Boolean = true, dupKey: Boolean = false)
+
+  private def upsertAll(b: MergeBuilder) = b.whenMatched().updateAll().whenNotMatched().insertAll()
+  private val shapes = Seq(
+    Shape("updateAll and insertAll", Seq(12L, 13L, 45L), upsertAll,
+      updated = Set(12L, 13L), inserted = Set(45L)),
+    Shape("a duplicated target key", Seq(12L, 13L, 45L), upsertAll,
+      updated = Set(12L, 13L), inserted = Set(45L), dupKey = true),
+    Shape("a matched condition on t", Seq(12L, 13L, 45L),
+      b => b.whenMatched(expr("t.v < 13")).updateAll().whenNotMatched().insertAll(),
+      updated = Set(12L), inserted = Set(45L)),
+    Shape("a conditional insert", Seq(12L, 41L, 45L),
+      b => b.whenMatched().updateAll().whenNotMatched(expr("s.v < -44")).insertAll(),
+      updated = Set(12L), inserted = Set(45L)),
+    Shape("a matched row no clause applies to", Seq(12L, 13L, 45L),
+      b => b.whenMatched(expr("s.k = 12")).updateAll().whenNotMatched().insertAll(),
+      updated = Set(12L), inserted = Set(45L)),
+    Shape("update and delete", Seq(12L, 13L, 45L),
+      b => b.whenMatched(expr("s.k = 12")).updateAll().whenMatched().delete()
+        .whenNotMatched().insertAll(),
+      updated = Set(12L), deleted = Set(13L), inserted = Set(45L)),
+    Shape("a source without v", Seq(12L, 45L), upsertAll,
+      updated = Set(12L), inserted = Set(45L), withV = false),
+    Shape("a source without v, delete and insertAll", Seq(12L, 45L),
+      b => b.whenMatched().delete().whenNotMatched().insertAll(),
+      deleted = Set(12L), inserted = Set(45L), withV = false))
+
+  for (dv <- Seq(false, true); sh <- shapes) {
+    val conf = if (dv) Map("graft.enableDeletionVectors" -> "true") else Map.empty[String, String]
+
+    test(s"merge venues: a local and a shuffled source agree, ${sh.name} (dv=$dv)") {
+      import spark.implicits._
+      val full = sh.ids.toDF("id").selectExpr("id as k", "cast(-id as double) as v")
+      val rows = if (sh.withV) full else full.drop("v")
+      val local = spark.createDataFrame(rows.collectAsList(), rows.schema)
+      val targetRows = (0L until 40L).map(k => k -> k.toDouble) ++
+        (if (sh.dupKey) Seq(12L -> 112.0) else Nil)
+      val expected = (targetRows.collect {
+        case (k, v) if !sh.deleted(k) =>
+          k -> Some(if (sh.updated(k) && sh.withV) -k.toDouble else v)
+      } ++ sh.inserted.toSeq.map(k => k -> (if (sh.withV) Some(-k.toDouble) else None)))
+        .sorted
+      def merged(src: DataFrame) = {
+        val path = keyed("id", conf)
+        if (sh.dupKey) Graft.write(Seq((12L, 112.0)).toDF("k", "v"), path)
+        val metrics = sh.clauses(GraftTable.forPath(spark, path).merge(src, expr("t.k = s.k")))
+          .execute()
+        val table = Graft.read(spark, path).select("k", "v")
+          .as[(Long, Option[Double])].collect().sorted.toSeq
+        (metrics - "numTargetFilesAdded", table)
+      }
       val (localMetrics, localTable) = merged(local)
-      val (metrics, table) = merged(shuffled)
+      val (metrics, table) = merged(local.repartition(2))
+      assert(localTable === expected)
+      assert(table === expected)
       assert(localMetrics === metrics)
-      assert(localTable === table)
-      assert(table.size === 40 + c.inserts)
     }
   }
 }

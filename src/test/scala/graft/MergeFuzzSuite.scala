@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * first-applicable-clause per row, clause-condition evaluation over
  * (t, s), unmatched rows untouched. Each seed runs over a one-file
  * and a four-file clustered target, with and without deletion vectors,
- * and also checks which files skipping kept and how many rows the
- * deletion vectors retired. Source ids are distinct so no run trips the
+ * from a local source and from the same rows repartitioned, and also
+ * checks which files skipping kept and how many rows the deletion
+ * vectors retired. Source ids are distinct so no run trips the
  * multi-match ambiguity guard (DmlMatrixSuite pins those).
  */
 class MergeFuzzSuite extends AnyFunSuite {
@@ -122,9 +123,11 @@ class MergeFuzzSuite extends AnyFunSuite {
 
     // The same merge over each target layout, with and without deletion
     // vectors: one file, or four files clustered on id (0-9 .. 30-39), of
-    // which skipping keeps those that meet the source's id range.
-    for (files <- Seq(1, 4); dv <- Seq(false, true)) {
-      val layout = s"seed ${7100 + iter} files=$files dv=$dv clauses=$clauses"
+    // which skipping keeps those that meet the source's id range. A local
+    // source under DVs can be written from its own rows in phase 2; the
+    // repartitioned one always joins.
+    for (files <- Seq(1, 4); dv <- Seq(false, true); local <- Seq(true, false)) {
+      val layout = s"seed ${7100 + iter} files=$files dv=$dv local=$local clauses=$clauses"
       val dir = tmp()
       val perFile = 40 / files
       (0 until files).foreach { f =>
@@ -135,9 +138,9 @@ class MergeFuzzSuite extends AnyFunSuite {
       }
 
       // drive the builder
+      val src = srcMap.toSeq.map { case (i, x) => (i, x.v, x.w) }.toDF("id", "v", "w")
       var b = GraftTable.forPath(spark, dir).merge(
-        srcMap.toSeq.map { case (i, x) => (i, x.v, x.w) }.toDF("id", "v", "w"),
-        expr("t.id = s.id"))
+        if (local) src else src.repartition(2), expr("t.id = s.id"))
       clauses.foreach {
         case MU(c, all) =>
           val m = c.map(x => b.whenMatched(expr(x.sql))).getOrElse(b.whenMatched())

@@ -289,7 +289,7 @@ class PlanAuditSuite extends AnyFunSuite {
       // marker query AFTER the merge and wait until ITS plan shows up —
       // at that point every merge plan is guaranteed captured (polling
       // for merely plans.nonEmpty could exit with later merge plans,
-      // including the phase-1 aggregate, still queued on the bus).
+      // including phase 1's, still queued on the bus).
       spark.range(424243).filter($"id" === 424242L).count()
       val deadline = System.nanoTime() + 30_000_000_000L
       def markerSeen: Boolean =
@@ -310,59 +310,71 @@ class PlanAuditSuite extends AnyFunSuite {
     // Phase 1's rollup returns the deletion vectors, so no later query
     // re-runs the join to recover the matched rows, and skipping keeps
     // every target scan to the files whose id range meets the source's.
+    // Phase 1 is the first target join. A range source's phase 2 joins
+    // the target once more; a local source's phase 2 writes from the
+    // source's own rows and joins nothing, unless the source is above
+    // AQE's minimum partition size.
     // A user optimizer rule sees every optimized plan; the write's
     // session is a clone, so a fresh parent conf makes it inherit the rule.
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.catalyst.plans.{Inner, RightOuter}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
     import org.apache.spark.sql.catalyst.rules.Rule
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val dir = tmpDir()
-    val log = graft.log.GraftLog.forTable(spark, dir)
-    val rangeOf = (0 until 6).map { i =>
-      val before = log.update().allFiles.map(_.path).toSet
-      Graft.write(spark.range(i * 100L, i * 100L + 100).selectExpr("id", "id % 7 as v")
-        .coalesce(1), dir, configuration = if (i > 0) Map.empty
-          else Map("graft.enableDeletionVectors" -> "true"))
-      val added = log.update().allFiles.map(_.path).toSet -- before
-      assert(added.size === 1)
-      added.head -> (i * 100L, i * 100L + 99)
-    }.toMap
     val (lo, hi) = (250L, 349L)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
-    val record = new Rule[LogicalPlan] {
-      def apply(p: LogicalPlan): LogicalPlan = { plans.synchronized(plans += p); p }
-    }
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ record
-    spark.conf.set("spark.planaudit.marker", java.util.UUID.randomUUID.toString)
-    try {
-      GraftTable.forPath(spark, dir)
-        .merge(spark.range(lo, hi + 1).selectExpr("id", "-1L as v"), expr("t.id = s.id"))
-        .whenMatched().updateAll()
-        .whenNotMatched().insertAll()
-        .execute()
-    } finally {
-      spark.experimental.extraOptimizations = saved
-      spark.conf.unset("spark.planaudit.marker")
-    }
     def targetScans(p: LogicalPlan): Seq[graft.files.GraftFileIndex] = p.collect {
       case LogicalRelation(HadoopFsRelation(i: graft.files.GraftFileIndex, _, _, _, _, _),
         _, _, _, _) => i
     }
-    val captured = plans.synchronized(plans.toList)
-    val joins = captured.filter(_.exists {
-      case j: Join => targetScans(j).nonEmpty
-      case _ => false
-    })
-    assert(joins.nonEmpty && joins.head.exists(_.isInstanceOf[Aggregate]),
-      s"the first target join is not phase 1's rollup:\n${joins.headOption.getOrElse("")}")
-    assert(joins.size === 2,
-      s"expected phase 1 and one more target join, got ${joins.size}:\n${joins.mkString("\n")}")
-    val scanned = captured.flatMap(targetScans).flatMap(_.pinnedFiles.getOrElse(Nil))
-    assert(scanned.nonEmpty, "no pinned target scan captured")
-    scanned.foreach { f =>
-      val (fLo, fHi) = rangeOf(f.path)
-      assert(fLo <= hi && fHi >= lo, s"scanned ${f.path} ($fLo-$fHi) outside $lo-$hi")
+    def audit(name: String, src: org.apache.spark.sql.DataFrame): Seq[Join] = {
+      val dir = tmpDir()
+      val log = graft.log.GraftLog.forTable(spark, dir)
+      val rangeOf = (0 until 6).map { i =>
+        val before = log.update().allFiles.map(_.path).toSet
+        Graft.write(spark.range(i * 100L, i * 100L + 100).selectExpr("id", "id % 7 as v")
+          .coalesce(1), dir, configuration = if (i > 0) Map.empty
+            else Map("graft.enableDeletionVectors" -> "true"))
+        val added = log.update().allFiles.map(_.path).toSet -- before
+        assert(added.size === 1)
+        added.head -> (i * 100L, i * 100L + 99)
+      }.toMap
+      val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+      val record = new Rule[LogicalPlan] {
+        def apply(p: LogicalPlan): LogicalPlan = { plans.synchronized(plans += p); p }
+      }
+      val saved = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = saved :+ record
+      spark.conf.set("spark.planaudit.marker", java.util.UUID.randomUUID.toString)
+      try {
+        GraftTable.forPath(spark, dir).merge(src, expr("t.id = s.id"))
+          .whenMatched().updateAll()
+          .whenNotMatched().insertAll()
+          .execute()
+      } finally {
+        spark.experimental.extraOptimizations = saved
+        spark.conf.unset("spark.planaudit.marker")
+      }
+      assert(Graft.read(spark, dir).filter($"v" === -1L).count() === hi - lo + 1, name)
+      val captured = plans.synchronized(plans.toList)
+      val scanned = captured.flatMap(targetScans).flatMap(_.pinnedFiles.getOrElse(Nil))
+      assert(scanned.nonEmpty, s"$name: no pinned target scan captured")
+      scanned.foreach { f =>
+        val (fLo, fHi) = rangeOf(f.path)
+        assert(fLo <= hi && fHi >= lo, s"$name: scanned ${f.path} ($fLo-$fHi) outside $lo-$hi")
+      }
+      captured.flatMap(_.collect { case j: Join if targetScans(j).nonEmpty => j })
     }
+    val ranged = audit("range source", spark.range(lo, hi + 1).selectExpr("id", "-1L as v"))
+    assert(ranged.map(_.joinType) === Seq(Inner, RightOuter),
+      s"expected phase 1 and one phase-2 target join:\n${ranged.mkString("\n")}")
+    val local = audit("local source", (lo to hi).map(i => (i, -1L)).toDF("id", "v"))
+    assert(local.map(_.joinType) === Seq(Inner),
+      s"expected phase 1's target join only:\n${local.mkString("\n")}")
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.set(minSize, "1k")
+    val large = try audit("local source above the minimum partition size",
+      (lo to hi).map(i => (i, -1L)).toDF("id", "v")) finally spark.conf.unset(minSize)
+    assert(large.map(_.joinType) === Seq(Inner, RightOuter),
+      s"expected phase 1 and one phase-2 target join:\n${large.mkString("\n")}")
   }
 
   private def planOf(q: String): String =
@@ -616,10 +628,10 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(nvlJobs === 0, s"bounding nvl over a local source ran $nvlJobs Spark jobs")
   }
 
-  test("a DV upsert MERGE from a local source runs at most 6 Spark jobs") {
+  test("a DV upsert MERGE from a local source runs at most 3 Spark jobs") {
     // The source's key bounds come from its rows on the driver, phase 1
-    // rolls up per file in one shuffle, and phase 2 joins in one
-    // shuffle per side before its write.
+    // broadcasts the source and rolls up per file in its scan tasks, and
+    // phase 2 writes from the source's own rows in one task.
     val dir = tmpDir()
     (0 until 4).foreach(i => Graft.write(spark.range(i * 100L, i * 100L + 100)
       .selectExpr("id", "id % 7 as v").coalesce(1), dir,
@@ -634,26 +646,61 @@ class PlanAuditSuite extends AnyFunSuite {
     }
     assert(metrics("numTargetFilesAfterSkipping") === "3")
     assert(metrics("numTargetRowsUpdated") === "125" && metrics("numTargetRowsInserted") === "25")
-    assert(jobs <= 6, s"the merge ran $jobs Spark jobs")
+    assert(metrics("numTargetFilesAdded") === "1")
+    assert(jobs <= 3, s"the merge ran $jobs Spark jobs")
   }
 
-  test("no top-level object in src/main/scala declares a var") {
-    // A var on an object is JVM-wide mutable state: concurrent callers
-    // share it, and a test hook left set by a failed test breaks every
-    // later caller. Fault-injection seams are scoped to one call instead.
+  test("a non-DV UPDATE and DELETE find their touched files in one Spark job") {
+    // The match pass rolls up per file in its scan tasks: one job, then
+    // the rewrite's write job. A group-by of the matched files adds a
+    // shuffle and its result job.
+    val dir = tmpDir()
+    (0 until 4).foreach(i => Graft.write(spark.range(i * 100L, i * 100L + 100)
+      .selectExpr("id", "id % 7 as v").coalesce(1), dir))
+    var updated = Map.empty[String, String]
+    val updateJobs = jobsDuring {
+      updated = graft.commands.UpdateCommand.run(spark, dir, Some($"v" === 3L),
+        Map("v" -> lit(-3L)))
+    }
+    assert(updated("numUpdatedFiles") === "4" && updated("numUpdatedRows") === "57")
+    assert(updateJobs <= 2, s"the update ran $updateJobs Spark jobs")
+    val deleteJobs = jobsDuring { GraftTable.forPath(spark, dir).delete($"id" < 150L) }
+    assert(deleteJobs <= 2, s"the delete ran $deleteJobs Spark jobs")
+    assert(Graft.read(spark, dir).count() === 250L)
+    assert(Graft.read(spark, dir).filter($"v" === -3L).count() === 57L - 21L)
+  }
+
+  /** The engine's sources, each parsed (not typed) by the Scala compiler. */
+  private final class EngineSources {
     import scala.jdk.CollectionConverters._
     import scala.reflect.internal.util.BatchSourceFile
     import scala.reflect.io.AbstractFile
     import scala.tools.nsc.{Global, Settings}
     import scala.tools.nsc.reporters.StoreReporter
-    val root = java.nio.file.Paths.get("src", "main", "scala")
+    private val root = java.nio.file.Paths.get("src", "main", "scala")
     assert(Files.isDirectory(root), s"no engine sources at ${root.toAbsolutePath}")
-    val settings = new Settings()
+    private val settings = new Settings()
     settings.usejavacp.value = true
-    val reporter = new StoreReporter(settings)
+    private val reporter = new StoreReporter(settings)
     val global = new Global(settings, reporter)
-    import global.{CompilationUnit, ModuleDef, PackageDef, Tree, ValDef}
     new global.Run
+    private val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    val trees: List[(java.nio.file.Path, global.Tree)] = files.map { f =>
+      f -> global.newUnitParser(new global.CompilationUnit(
+        new BatchSourceFile(AbstractFile.getFile(f.toFile)))).parse()
+    }
+    assert(!reporter.hasErrors, reporter.infos.mkString("\n"))
+    assert(files.size > 50, s"only ${files.size} sources under $root")
+  }
+  private lazy val engineSources = new EngineSources
+
+  test("no top-level object in src/main/scala declares a var") {
+    // A var on an object is JVM-wide mutable state: concurrent callers
+    // share it, and a test hook left set by a failed test breaks every
+    // later caller. Fault-injection seams are scoped to one call instead.
+    val sources = engineSources
+    import sources.global.{ModuleDef, PackageDef, Tree, ValDef}
     def varsOf(obj: ModuleDef, owner: String): List[String] = {
       val name = owner + obj.name
       obj.impl.body.flatMap {
@@ -667,16 +714,24 @@ class PlanAuditSuite extends AnyFunSuite {
       case m: ModuleDef => List(m)
       case _ => Nil
     }
-    val files = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toList
-    val hits = files.flatMap { f =>
-      val unit = new CompilationUnit(
-        new BatchSourceFile(AbstractFile.getFile(f.toFile)))
-      topLevel(global.newUnitParser(unit).parse()).flatMap(varsOf(_, s"$f: "))
-    }
-    assert(!reporter.hasErrors, reporter.infos.mkString("\n"))
-    assert(files.size > 50, s"only ${files.size} sources under $root")
+    val hits = sources.trees.flatMap { case (f, t) => topLevel(t).flatMap(varsOf(_, s"$f: ")) }
     assert(hits.isEmpty, s"vars on top-level objects:\n${hits.mkString("\n")}")
+  }
+
+  test("no engine source opens a parquet reader without read options") {
+    // ParquetFileReader.open(file) builds default read options, which
+    // parse a fresh Hadoop configuration from the classpath: about 10 ms
+    // per footer, on every write's stats and every checkpoint probe.
+    val sources = engineSources
+    import sources.global.{Apply, Select}
+    val hits = sources.trees.flatMap { case (f, t) =>
+      t.collect {
+        case a @ Apply(Select(qual, name), args) if name.toString == "open" &&
+            qual.toString.endsWith("ParquetFileReader") && args.size < 2 =>
+          s"$f:${a.pos.line}: $a"
+      }
+    }
+    assert(hits.isEmpty, s"parquet readers opened without read options:\n${hits.mkString("\n")}")
   }
 
   test("the engine reads exactly the listed spark.graft.* settings") {
