@@ -20,6 +20,9 @@ object Dml extends PredicateHelper {
     * through a scan groups by this column. */
   def fileUri: Column = col("_metadata.file_path")
 
+  /** A scanned row's index in its file: a deletion vector's domain. */
+  def rowIndex: Column = col("_metadata.row_index")
+
   /** Resolve the table-relative AddFiles that actually contain matching
     * rows, by scanning candidates grouped by [[fileUri]]. */
   def findTouchedFiles(
@@ -46,14 +49,17 @@ object Dml extends PredicateHelper {
     (perFile.map(_._1), perFile.map(_._2.applied(0)).sum)
   }
 
-  /** The candidates that hold a row of `uris` (one column of
-    * [[fileUri]] values), each with its rollup, folded in the scan tasks. */
+  /** The candidates that hold a row of `matched`, each with its rollup,
+    * folded in the scan tasks. The first column of `matched` holds the
+    * rows' [[fileUri]]; a second, their [[rowIndex]], fills each rollup's
+    * `appliedRows`: the bitmap a deletion vector is written from. */
   private[commands] def touchedFiles(
       log: GraftLog,
       candidates: Seq[AddFile],
-      uris: DataFrame): Seq[(AddFile, MatchFold.File)] = {
-    MatchFold.run(uris.select(col(uris.columns.head), lit(0), lit(null), lit(null), lit(null)),
-      clauses = 1).touched(log, candidates)
+      matched: DataFrame): Seq[(AddFile, MatchFold.File)] = {
+    val cols = matched.columns.toSeq.map(c => col(s"`$c`"))
+    MatchFold.run(matched.select(cols.head, lit(0), lit(null),
+      cols.lift(1).getOrElse(lit(null)), lit(null)), clauses = 1).touched(log, candidates)
   }
 
   /** THE one mapping from [[fileUri]] values back to the AddFiles that
@@ -222,29 +228,25 @@ object DeleteCommand {
                 Dml.statsRowCount(files).map("numDeletedRows" -> _.toString))
           } else if (graft.dv.DeletionVectors.isEnabled(m)) {
             // DV path: mark matching row indexes in a bitmap sidecar per
-            // touched file; NO data file is rewritten. No findTouchedFiles
-            // pre-scan: the bitmap writer derives the touched set from the
-            // matched rows themselves (files without matches produce no
-            // bitmap and stay untouched), so one candidate scan suffices.
+            // touched file; NO data file is rewritten. One candidate scan
+            // finds the touched files and their bitmaps: its tasks fold
+            // the matched rows' indexes per file, and a file without
+            // matches gets no bitmap.
             val candidates = txn.filterFiles(partF, dataF)
             if (candidates.isEmpty) (Nil, Nil, Nil, Map("numRemovedFiles" -> "0"))
             else {
-              // DV-filtered scan (in-reader bitmap splice) carrying row
-              // identity: __i is the physical file row index, exactly the
-              // bitmap domain.
-              val visible = GraftFileIndex.dataFrame(
-                  spark, log, txn.snapshot, Some(candidates))
-                .withColumn("__f", graft.dv.DeletionVectors.normFileCol(
-                  col("_metadata.file_path")))
-                .withColumn("__i", col("_metadata.row_index"))
-              val matched = visible.filter(coalesce(cond, lit(false)))
+              // DV-filtered scan (in-reader bitmap splice): rows already
+              // deleted never match again.
+              val matched = Dml.scanFiles(spark, log, txn, candidates)
+                .filter(coalesce(cond, lit(false)))
               val cdc = if (cdf) {
                 Cdc.writeChangeFiles(spark, log,
-                  matched.drop("__f", "__i")
-                    .withColumn(Cdc.CHANGE_TYPE, lit("delete")))
+                  matched.withColumn(Cdc.CHANGE_TYPE, lit("delete")))
               } else Nil
-              val (removes, adds, newlyDeleted) =
-                graft.dv.DeletionVectors.writeDeletionVectors(spark, log, candidates, matched)
+              val touched = Dml.touchedFiles(log, candidates,
+                matched.select(Dml.fileUri, Dml.rowIndex))
+              val (removes, adds, newlyDeleted) = graft.dv.DeletionVectors.writeBitmaps(
+                spark, log, touched.map { case (f, r) => f -> r.appliedRows })
               (removes, adds, cdc,
                 Map("numDeletionVectors" -> adds.size.toString,
                     "numDeletedRows" -> newlyDeleted.toString,
@@ -391,23 +393,21 @@ object UpdateCommand {
         // DV path: mark the old versions of matched rows deleted via
         // bitmap sidecars and append a file containing ONLY the updated
         // rows — a point update on a 1 GB file writes KBs, not the GB.
-        // No findTouchedFiles pre-scan: the bitmap writer derives the
-        // touched set from the matched rows, so candidates scan once.
-        val visible = GraftFileIndex.dataFrame(
-            spark, log, txn.snapshot, Some(candidates))
-          .withColumn("__f", graft.dv.DeletionVectors.normFileCol(
-            col("_metadata.file_path")))
-          .withColumn("__i", col("_metadata.row_index"))
-        val matched = visible.filter(coalesce(cond, lit(false)))
-        val updatedRows = matched.drop("__f", "__i").select(
+        // The match pass folds the matched rows' indexes per file in its
+        // scan tasks, so the touched set and the bitmaps come from one
+        // scan, and an update that matches nothing writes nothing.
+        val matched = Dml.scanFiles(spark, log, txn, candidates)
+          .filter(coalesce(cond, lit(false)))
+        val touched = Dml.touchedFiles(log, candidates,
+          matched.select(Dml.fileUri, Dml.rowIndex))
+        val updatedRows = matched.select(
           updatedColumns(m.schema, set, lit(true)).toIndexedSeq: _*)
-        val newAdds = txn.writeFiles(updatedRows)
-        val (removes, dvAdds, updatedCount) =
-          graft.dv.DeletionVectors.writeDeletionVectors(spark, log, candidates, matched)
+        val newAdds = if (touched.isEmpty) Nil else txn.writeFiles(updatedRows)
+        val (removes, dvAdds, updatedCount) = graft.dv.DeletionVectors.writeBitmaps(
+          spark, log, touched.map { case (f, r) => f -> r.appliedRows })
         metrics += "numUpdatedFiles" -> dvAdds.size.toString
         val cdcActions = if (cdf) {
-          val pre = matched.drop("__f", "__i")
-            .withColumn(Cdc.CHANGE_TYPE, lit("update_preimage"))
+          val pre = matched.withColumn(Cdc.CHANGE_TYPE, lit("update_preimage"))
           val post = updatedRows.withColumn(Cdc.CHANGE_TYPE, lit("update_postimage"))
           Cdc.writeChangeFiles(spark, log, pre.unionByName(post))
         } else Nil

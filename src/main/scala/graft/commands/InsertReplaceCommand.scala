@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.GraftTable
-import graft.files.GraftFileIndex
 import graft.log._
 
 /**
@@ -76,37 +75,33 @@ object InsertReplaceCommand {
       val (removes, rewriteAdds, deleteCdcRows, deletedCount) =
         if (candidates.isEmpty) {
           (Nil, Nil, None, 0L)
-        } else if (useDv) {
-          // matched rows keep their file identity (__f/__i) through the
-          // semi join, landing directly in per-file bitmap sidecars
-          val visible = GraftFileIndex.dataFrame(
-              spark, log, txn.snapshot, Some(candidates))
-            .withColumn("__f", graft.dv.DeletionVectors.normFileCol(
-              col("_metadata.file_path")))
-            .withColumn("__i", col("_metadata.row_index"))
-          val matched = visible.alias(targetAlias)
-            .join(src, condition, "left_semi")
-          val (rm, dvAdds, n) = graft.dv.DeletionVectors
-            .writeDeletionVectors(spark, log, candidates, matched)
-          (rm, dvAdds,
-            if (cdf) Some(matched.drop("__f", "__i")) else None, n)
         } else {
-          // rewrite path: only files that actually contain matches
+          // Matched rows carry their file and row index through the semi
+          // join; the match pass folds them per file in its scan tasks,
+          // into the touched files and, under DVs, their bitmaps.
           val FILE = "__graft_file"
+          val RID = "__graft_rid"
           val targetScan = Dml.scanFiles(spark, log, txn, candidates)
-            .withColumn(FILE, Dml.fileUri)
-          val touched = Dml.touchedFiles(log, candidates, targetScan.alias(targetAlias)
-            .join(src, condition, "left_semi").select(col(FILE))).map(_._1)
-          if (touched.isEmpty) (Nil, Nil, None, 0L)
+            .withColumn(FILE, Dml.fileUri).withColumn(RID, Dml.rowIndex)
+          val matched = targetScan.alias(targetAlias).join(src, condition, "left_semi")
+          val touched = Dml.touchedFiles(log, candidates,
+            matched.select(col(FILE), if (useDv) col(RID) else lit(null)))
+          if (useDv) {
+            val (rm, dvAdds, n) = graft.dv.DeletionVectors.writeBitmaps(spark, log,
+              touched.map { case (f, r) => f -> r.appliedRows })
+            (rm, dvAdds, if (cdf) Some(matched.drop(FILE, RID)) else None, n)
+          } else if (touched.isEmpty) (Nil, Nil, None, 0L)
           else {
-            val base = Dml.scanFiles(spark, log, txn, touched)
+            // rewrite path: only files that actually contain matches
+            val files = touched.map(_._1)
+            val base = Dml.scanFiles(spark, log, txn, files)
             val survivors = base.alias(targetAlias).join(src, condition, "left_anti")
             val newAdds = txn.writeFiles(survivors)
             val deleted = (for {
-              r <- Dml.statsRowCount(touched)
+              r <- Dml.statsRowCount(files)
               a <- Dml.statsRowCount(newAdds)
             } yield r - a).getOrElse(-1L)
-            (touched.map(_.remove(now)), newAdds,
+            (files.map(_.remove(now)), newAdds,
               if (cdf) Some(base.alias(targetAlias).join(src, condition, "left_semi"))
               else None, deleted)
           }

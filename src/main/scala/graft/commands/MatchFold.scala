@@ -12,14 +12,15 @@ import graft.log.{AddFile, GraftLog}
 
 /**
  * The match pass of a row-level DML, rolled up per file inside its scan
- * tasks. Each input row is one matched pair; its columns are, in order:
+ * tasks. Each input row is one matched pair, or a target row that
+ * matched nothing where the pass keeps those; its columns are, in order:
  *
  *  - the target row's file, [[Dml.fileUri]];
  *  - the index of the matched clause that applies to the pair, -1 for none;
  *  - the target row's index in its file, where the pair is weighed by a
  *    multi-match guard (else null);
- *  - the target row's index, where the pair's clause applies and the
- *    caller keeps those rows (else null);
+ *  - the target row's index, where the DML retires the row through a
+ *    deletion vector (else null);
  *  - the index of the local source row of the pair (else null).
  *
  * Each task folds its pairs into one [[MatchFold]]; the driver ORs each
@@ -83,8 +84,8 @@ private[commands] final class MatchFold(clauses: Int) extends Serializable {
 private[commands] object MatchFold {
 
   /** One file's matched pairs: those the guard weighs, those each clause
-    * applies to, and the index sets of the weighed and the kept applied
-    * rows. More weighed pairs than weighed rows is a multi-match. */
+    * applies to, and the index sets of the weighed and the retired rows.
+    * More weighed pairs than weighed rows is a multi-match. */
   final class File(clauses: Int) extends Serializable {
     var weighed = 0L
     val applied = new Array[Long](clauses)

@@ -103,9 +103,11 @@ class MergeBuilder(
  * matched rows (in a matched-only merge, those some clause applies to);
  * the driver ORs the tasks' rollups, with no shuffle. More pairs than
  * that bitmap's cardinality is a multi-match; past that guard pair counts
- * are the exact update/delete counts. Under deletion vectors with no NOT
- * MATCHED BY SOURCE clause, the bitmaps of the rows some clause applies
- * to are the merge's deletion vectors.
+ * are the exact update/delete counts. Under deletion vectors the bitmaps
+ * of the rows the merge retires are its deletion vectors: the matched
+ * rows some clause applies to and, with NOT MATCHED BY SOURCE clauses,
+ * the unmatched target rows one applies to, which a target-preserving
+ * (left outer) phase-1 join keeps; the guard weighs matched pairs only.
  *
  * Phase 2 (write all changes): emit, per row, the first applicable
  * clause's projection (update/delete/insert/copy) via a single CASE WHEN
@@ -117,14 +119,14 @@ class MergeBuilder(
  * columns and no applied source row applied to two target rows, phase 2
  * projects the source's own rows, tagged on the driver, into one write
  * task: no target scan, join or shuffle. Otherwise phase 2 joins the
- * touched files with the source — Catalyst plans the join (broadcast or shuffle) and codegen runs the
- * projection. With phase-1 bitmaps and no change data feed only changed
+ * touched files with the source — Catalyst plans the join (broadcast or
+ * shuffle) and codegen runs the projection. Under deletion vectors with
+ * no NOT MATCHED BY SOURCE clause and no change data feed, only changed
  * rows are written, so the join keeps matched pairs and source rows
  * (inner, or source-preserving when rows may be inserted). Otherwise it
- * is outer on the target side, and under deletion vectors the changed
- * rows' identity is collected from it into bitmaps. Under deletion
- * vectors a copied row is never written, so the join carries only the
- * target columns the clauses read.
+ * is outer on the target side. Under deletion vectors a copied row is
+ * never written, so the join carries only the target columns the clauses
+ * read.
  *
  * Insert-only merges take a left-anti-join fast path over the candidates
  * that rewrites no target files.
@@ -139,6 +141,7 @@ object MergeCommand {
   private val SRC = "__graft_src_exists"
   private val CLAUSE = "__graft_clause"
   private val SID = "__graft_sid"
+  private val NMBS = "__graft_nmbs"
 
   def run(
       table: GraftTable,
@@ -241,14 +244,17 @@ object MergeCommand {
       def scanWithIds(files: Seq[AddFile]): DataFrame =
         pad(Dml.scanFiles(spark, log, txn, files)
           .withColumn(FILE, Dml.fileUri)
-          .withColumn(RID, col("_metadata.row_index")))
+          .withColumn(RID, Dml.rowIndex))
       def clauseCond(c: MergeClause): Column =
         c.condition.map(coalesce(_, lit(false))).getOrElse(lit(true))
+      // Under DVs phase 1 collects the rows a merge retires as one bitmap
+      // per file: the matched rows some clause applies to and, with NOT
+      // MATCHED BY SOURCE clauses, the unmatched target rows one applies
+      // to. A copied row is then never written: with no such clause and
+      // no change data feed, phase 2 needs only matched pairs and source
+      // rows.
       val useDv = graft.dv.DeletionVectors.isEnabled(m)
-      // Under DVs with no NOT MATCHED BY SOURCE clause, the rows a merge
-      // retires are exactly the matched rows some clause applies to, so
-      // phase 1 collects them as one bitmap per file.
-      val dvFromMatch = useDv && nmbsClauses.isEmpty
+      val changedOnly = useDv && nmbsClauses.isEmpty && !cdf
 
       val srcCols = source.schema.fieldNames.map(_.toLowerCase).toSet
       def clauseSet(c: MergeClause): Map[String, Column] = c match {
@@ -265,15 +271,14 @@ object MergeCommand {
         set.collectFirst { case (k, x) if k.equalsIgnoreCase(name) => x }
           .getOrElse(default)
 
-      // A local source's rows are on the driver. Under DVs with phase-1
-      // bitmaps and no change data feed, they get an index there, so
-      // phase 1 can also record which source rows matched and which
-      // clause applied to each. Only a source within AQE's minimum
-      // partition size does: the join's coalesced shuffle of it would be
-      // one partition, and the driver plans the tagged rows one by one
-      // (on a 4-core host a 200k-row source ran 20% slower this way than
-      // by the join).
-      val local = if (dvFromMatch && !cdf) source.queryExecution.optimizedPlan match {
+      // A local source's rows are on the driver. When phase 2 writes
+      // only changed rows, they get an index there, so phase 1 can also
+      // record which source rows matched and which clause applied to
+      // each. Only a source within AQE's minimum partition size does: the
+      // join's coalesced shuffle of it would be one partition, and the
+      // driver plans the tagged rows one by one (on a 4-core host a
+      // 200k-row source ran 20% slower this way than by the join).
+      val local = if (changedOnly) source.queryExecution.optimizedPlan match {
         case l: LocalRelation if !l.isStreaming && l.stats.sizeInBytes <=
             source.queryExecution.sparkSession.sessionState.conf
               .getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE) => Some(l)
@@ -289,11 +294,16 @@ object MergeCommand {
           })).alias(sourceAlias)
       }
 
-      // ---- Phase 1: find touched files + multi-match guard.
-      val joinedInner = scanWithIds(candidates).alias(targetAlias).join(
+      // ---- Phase 1: find touched files + multi-match guard. Under DVs
+      // with NOT MATCHED BY SOURCE clauses it keeps the unmatched target
+      // rows too, the source side marked as phase 2 marks it.
+      val srcMarked = source.withColumn(SRC, lit(true))
+      val targetOnlyRows = useDv && nmbsClauses.nonEmpty
+      val phase1Join = scanWithIds(candidates).alias(targetAlias).join(
         if (local.isDefined) localSource(AttributeReference(SID, LongType, nullable = false)(),
-          _.toLong) else src,
-        condition, "inner")
+          _.toLong) else if (targetOnlyRows) srcMarked.alias(sourceAlias) else src,
+        condition, if (targetOnlyRows) "left_outer" else "inner")
+      val isPair = if (targetOnlyRows) col(SRC).isNotNull else lit(true)
       // Phase 2 can write from the source's own rows only when what it
       // writes reads no target column: every update sets every column,
       // and updates and inserts read source columns only.
@@ -304,15 +314,16 @@ object MergeCommand {
           case i: NotMatchedInsert => clauseSet(i).values.toSeq ++ i.condition
           case _ => Nil
         }
-        val plan = joinedInner.select(writes: _*).queryExecution.analyzed
+        val plan = phase1Join.select(writes: _*).queryExecution.analyzed
         val sourceAttrs = plan.collectFirst { case j: Join => j.right.outputSet }.get
         plan.expressions.forall(e =>
           !SubqueryExpression.hasSubquery(e) && e.references.subsetOf(sourceAttrs))
       }.getOrElse(false)
-      // The first matched clause that applies to each pair, -1 for none:
-      // exact numTargetRowsUpdated/Deleted from the same pass.
+      // The first matched clause that applies to each pair, -1 for none
+      // (and for an unmatched target row): exact numTargetRowsUpdated/
+      // Deleted from the same pass.
       val clause = matchedClauses.zipWithIndex.foldRight(lit(-1)) { case ((c, i), acc) =>
-        when(clauseCond(c), lit(i)).otherwise(acc)
+        when(isPair && clauseCond(c), lit(i)).otherwise(acc)
       }
       // Duplicate matches are unambiguous ONLY when the sole matched
       // clause is an unconditional DELETE: every matched row pair deletes,
@@ -333,16 +344,20 @@ object MergeCommand {
       // Per-file rollup in the scan tasks: the pairs the guard weighs, the
       // pairs per clause, and a bitmap of the weighed rows' indexes. A
       // bitmap's cardinality is the number of distinct rows it holds, so
-      // more pairs than that is a multi-match. Under DVs the clause-applied
-      // rows' bitmap is the deletion vector; in a matched-only merge those
-      // are the weighed rows, otherwise a second bitmap takes them.
-      val appliedBitmap = dvFromMatch && !matchedOnly
-      val fold = MatchFold.run(joinedInner
-        .select(col(FILE), col(RID), clause.as(CLAUSE),
-          (if (sourceWrites) col(SID) else lit(null)).as(SID))
+      // more pairs than that is a multi-match. Under DVs the bitmap of the
+      // rows the merge retires is the deletion vector; in a matched-only
+      // merge those are the weighed rows, otherwise a second bitmap takes
+      // them, with the unmatched target rows a NOT MATCHED BY SOURCE
+      // clause applies to.
+      val appliedBitmap = useDv && !matchedOnly
+      val nmbsApplies = nmbsClauses.map(clauseCond).foldLeft(lit(false))(_ || _)
+      val fold = MatchFold.run(phase1Join
+        .select(col(FILE), col(RID), clause.as(CLAUSE), isPair.as(SRC),
+          (if (sourceWrites) col(SID) else lit(null)).as(SID),
+          (!isPair && nmbsApplies).as(NMBS))
         .select(col(FILE), col(CLAUSE),
-          if (matchedOnly) when(applied, col(RID)) else col(RID),
-          if (appliedBitmap) when(applied, col(RID)) else lit(null),
+          when(if (matchedOnly) applied else col(SRC), col(RID)),
+          if (appliedBitmap) when(applied || col(NMBS), col(RID)) else lit(null),
           col(SID)),
         matchedClauses.size)
       val matches = fold.touched(log, candidates)
@@ -419,13 +434,13 @@ object MergeCommand {
           })
         tagged.withColumn(OP, opCol(col(CLAUSE) === _, col(CLAUSE).isNull, lit(false)))
       } else {
-        // From one join. Under DVs with phase-1 bitmaps a copied row is a
-        // no-op, so without CDF the join keeps only matched pairs and
-        // source rows: inner when every clause is a matched one,
-        // source-preserving when rows may be inserted. Otherwise it is
-        // outer on the target side, so copies (rewrite), NOT MATCHED BY
-        // SOURCE rows and CDF pre-images reach the output.
-        val joinType = (dvFromMatch && !cdf, insertClauses.nonEmpty) match {
+        // From one join. When only changed rows are written, the join
+        // keeps only matched pairs and source rows: inner when every
+        // clause is a matched one, source-preserving when rows may be
+        // inserted. Otherwise it is outer on the target side, so copies
+        // (rewrite), NOT MATCHED BY SOURCE rows and CDF pre-images reach
+        // the output.
+        val joinType = (changedOnly, insertClauses.nonEmpty) match {
           case (true, true) => "right_outer"
           case (true, false) => "inner"
           case (false, true) => "full_outer"
@@ -435,11 +450,8 @@ object MergeCommand {
         // outer join it replaces is: broadcasting the touched files instead
         // would write one file per source partition, not files sized by the
         // shuffle's coalesced partitions.
-        val srcMarked = {
-          val marked = source.withColumn(SRC, lit(true))
-          (if (joinType == "right_outer") marked.hint("merge") else marked)
-            .alias(sourceAlias)
-        }
+        val marked = (if (joinType == "right_outer") srcMarked.hint("merge") else srcMarked)
+          .alias(sourceAlias)
         // Matched-only: a pair failing every clause condition is a no-op;
         // fold the clause disjunction into the join condition so such
         // target rows fall out of the join as unmatched and are copied
@@ -451,7 +463,7 @@ object MergeCommand {
           else condition
         val joined = scanWithIds(rewriteFiles).withColumn("__tgt_exists", lit(true))
           .alias(targetAlias)
-          .join(srcMarked, rewriteCondition, joinType)
+          .join(marked, rewriteCondition, joinType)
         val isMatched = col("__tgt_exists").isNotNull && col(SRC).isNotNull
         joined.withColumn(OP, opCol(i => isMatched && clauseCond(matchedClauses(i)),
           isSourceOnly = col("__tgt_exists").isNull && col(SRC).isNotNull,
@@ -521,15 +533,8 @@ object MergeCommand {
       if (useDv) {
         // Mark old versions of updated/deleted target rows in bitmaps;
         // untouched candidate files are left completely alone.
-        val (removes, dvAdds, nChanged) =
-          if (dvFromMatch) graft.dv.DeletionVectors.writeBitmaps(spark, log,
-            matches.map { case (file, f) =>
-              file -> (if (appliedBitmap) f.appliedRows else f.rows)
-            })
-          else graft.dv.DeletionVectors.writeDeletionVectors(spark, log, rewriteFiles,
-            withOp.filter(col(OP) =!= "copy" && col(OP) =!= "drop" && col(FILE).isNotNull)
-              .select(graft.dv.DeletionVectors.normFileCol(col(FILE)).as("__f"),
-                col(RID).as("__i")))
+        val (removes, dvAdds, nChanged) = graft.dv.DeletionVectors.writeBitmaps(spark, log,
+          matches.map { case (file, f) => file -> (if (appliedBitmap) f.appliedRows else f.rows) })
         // With no NOT-MATCHED-BY-SOURCE clauses, every written row is an
         // update or an insert, so inserted = written - updated (footer
         // stats; deleted rows are bitmap-marked, never written).

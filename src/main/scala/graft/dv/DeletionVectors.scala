@@ -3,13 +3,10 @@ package graft.dv
 import java.io.{DataInputStream, DataOutputStream}
 import java.util.UUID
 
-import scala.collection.mutable
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.log.{AddFile, GraftLog, Metadata, Protocol, Snapshot, TableFeatures}
 
@@ -20,7 +17,10 @@ import graft.log.{AddFile, GraftLog, Metadata, Protocol, Snapshot, TableFeatures
  * into the parquet reader itself ([[GraftParquetFileFormat]]): each task
  * consults the bitmap for its own file against the reader-generated row
  * index — a narrow per-split filter, no join and no shuffle at any
- * deleted-row cardinality.
+ * deleted-row cardinality. Write side: every DML (DELETE, UPDATE, INSERT
+ * REPLACE, MERGE) folds the indexes of the rows it retires into one
+ * bitmap per file in its match pass's scan tasks, and [[writeBitmaps]]
+ * writes them — no shuffle of row identities.
  * (Reference concept: deletionvectors/RoaringBitmapArray.scala:46 +
  * DMLWithDeletionVectorsHelper.scala:132-448 +
  * DeltaParquetFileFormat.scala:161-266 — re-designed.)
@@ -128,52 +128,12 @@ object DeletionVectors {
 
   // ---- write path ---------------------------------------------------------
 
-  /**
-   * Write merged deletion vectors for `matched` (rows of a DV-filtered
-   * scan of `touched` carrying __f/__i). Bitmaps are built per file on
-   * the executors (rows arrive clustered by __f) and go through
-   * [[writeMerged]] there; the result commits as RemoveFile +
-   * AddFile-with-DV — no data file is written.
-   */
-  def writeDeletionVectors(
-      spark: SparkSession,
-      log: GraftLog,
-      touched: Seq[AddFile],
-      matched: DataFrame): (Seq[graft.log.RemoveFile], Seq[AddFile], Long) = {
-    import spark.implicits._
-    val confBc = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    val root = log.dataPath.toString
-    val byKey = touched.map(f => fileKey(log, f) -> f).toMap
-    val oldDvByKey = touched.filter(_.dvPath.isDefined)
-      .map(f => fileKey(log, f) -> f.dvPath.get).toMap
-    val oldDvBc = spark.sparkContext.broadcast(oldDvByKey)
-
-    val written: Array[(String, String, Long)] = matched
-      .select(col("__f").as[String], col("__i").as[Long])
-      .repartition(col("__f"))
-      .sortWithinPartitions("__f", "__i")
-      .mapPartitions { it =>
-        val conf = confBc.value
-        val out = mutable.ArrayBuffer.empty[(String, String, Long)]
-        var current: String = null
-        var bm: Bitmap64 = null
-        def flush(): Unit = if (current != null) {
-          val (rel, card) = writeMerged(root, conf, oldDvBc.value.get(current), bm)
-          out += ((current, rel, card))
-        }
-        it.foreach { case (f, i) =>
-          if (f != current) { flush(); current = f; bm = new Bitmap64() }
-          bm.add(i)
-        }
-        flush()
-        out.iterator
-      }.collect()
-    dvActions(written.toSeq.map { case (key, rel, card) => (byKey(key), rel, card) })
-  }
-
-  /** Write bitmaps already built per file (MERGE's match pass returns
-    * them), each through [[writeMerged]] on the driver, and commit them
-    * as [[writeDeletionVectors]] does. Empty bitmaps write nothing. */
+  /** Write the deletion vectors of a DML: per file, the bitmap of the
+    * row indexes it retires, as the scan tasks of its match pass folded
+    * them ([[graft.commands.MatchFold]]). Each goes through
+    * [[writeMerged]] on the driver and commits as a RemoveFile plus an
+    * AddFile carrying the new DV; no data file is written. Empty bitmaps
+    * write nothing. */
   def writeBitmaps(
       spark: SparkSession,
       log: GraftLog,

@@ -48,11 +48,6 @@ object SparkShims {
       : Array[org.apache.spark.sql.connector.catalog.Column] =
     org.apache.spark.sql.connector.catalog.CatalogV2Util.structTypeToV2Columns(schema)
 
-  def v2ColumnsToStructType(
-      cols: Array[org.apache.spark.sql.connector.catalog.Column])
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.connector.catalog.CatalogV2Util.v2ColumnsToStructType(cols)
-
   /** DataFrame from InternalRows (e.g. re-planning a streaming
     * micro-batch through the batch write path, or wrapping a batch plan
     * as a streaming getBatch result). */

@@ -431,9 +431,19 @@ class DmlMatrixSuite extends AnyFunSuite {
       assert(rowsOf(path) === upserted1213)
       if (dv) assert(GraftLog.forTable(spark, path).update().allFiles
         .exists(_.dvPath.isDefined), "the upsert wrote no deletion vector")
-      // DELETE finds its rows' files under the same path
-      GraftTable.forPath(spark, path).delete(col("id") === 25L)
+      // DELETE, UPDATE, INSERT REPLACE and a NOT MATCHED BY SOURCE merge
+      // find their rows' files under the same path
+      val table = GraftTable.forPath(spark, path)
+      table.delete(col("id") === 25L)
       assert(rowsOf(path) === upserted1213 - 25L)
+      table.update(col("id") === 26L, Map("v" -> lit(-26.0)))
+      table.insertReplaceOn(source(Some(27L) -> -27.0), "t.id = s.id")
+      table.merge(source(Some(28L) -> -28.0), expr("t.id = s.id"))
+        .whenMatched().updateAll()
+        .whenNotMatchedBySource(expr("t.id = 29")).update(Map("v" -> lit(-29.0)))
+        .execute()
+      assert(rowsOf(path) === upserted1213 - 25L ++
+        Map(26L -> -26.0, 27L -> -27.0, 28L -> -28.0, 29L -> -29.0))
     }
   }
 
@@ -562,7 +572,13 @@ class DmlMatrixSuite extends AnyFunSuite {
       updated = Set(12L), inserted = Set(45L), withV = false),
     Shape("a source without v, delete and insertAll", Seq(12L, 45L),
       b => b.whenMatched().delete().whenNotMatched().insertAll(),
-      deleted = Set(12L), inserted = Set(45L), withV = false))
+      deleted = Set(12L), inserted = Set(45L), withV = false),
+    // A NOT MATCHED BY SOURCE clause keeps phase 2 on the target-side
+    // join, whatever the source.
+    Shape("a NOT MATCHED BY SOURCE update", Seq(12L, 13L, 45L),
+      b => upsertAll(b).whenNotMatchedBySource(expr("t.k >= 30"))
+        .update(Map("v" -> expr("-t.k"))),
+      updated = Set(12L, 13L) ++ (30L until 40L), inserted = Set(45L)))
 
   for (dv <- Seq(false, true); sh <- shapes) {
     val conf = if (dv) Map("graft.enableDeletionVectors" -> "true") else Map.empty[String, String]
@@ -593,6 +609,16 @@ class DmlMatrixSuite extends AnyFunSuite {
       assert(localTable === expected)
       assert(table === expected)
       assert(localMetrics === metrics)
+      // The row counts a merge reports follow the model with DVs or
+      // without, and under DVs it retires exactly the rows it updates or
+      // deletes.
+      def count(keys: Set[Long]) = targetRows.count { case (k, _) => keys(k) }
+      Map("numTargetRowsUpdated" -> count(sh.updated),
+        "numTargetRowsDeleted" -> count(sh.deleted),
+        "numTargetRowsInserted" -> sh.inserted.size).foreach { case (key, n) =>
+        metrics.get(key).foreach(got => assert(got === n.toString, key))
+      }
+      if (dv) assert(metrics("numChangedTargetRows") === count(sh.updated ++ sh.deleted).toString)
     }
   }
 }

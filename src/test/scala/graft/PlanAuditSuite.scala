@@ -650,24 +650,65 @@ class PlanAuditSuite extends AnyFunSuite {
     assert(jobs <= 3, s"the merge ran $jobs Spark jobs")
   }
 
-  test("a non-DV UPDATE and DELETE find their touched files in one Spark job") {
-    // The match pass rolls up per file in its scan tasks: one job, then
-    // the rewrite's write job. A group-by of the matched files adds a
-    // shuffle and its result job.
-    val dir = tmpDir()
-    (0 until 4).foreach(i => Graft.write(spark.range(i * 100L, i * 100L + 100)
-      .selectExpr("id", "id % 7 as v").coalesce(1), dir))
-    var updated = Map.empty[String, String]
-    val updateJobs = jobsDuring {
-      updated = graft.commands.UpdateCommand.run(spark, dir, Some($"v" === 3L),
-        Map("v" -> lit(-3L)))
+  test("UPDATE and DELETE find their touched files in one Spark job, DVs on or off") {
+    // The match pass rolls up per file in its scan tasks, deletion-vector
+    // bitmaps included: one job. Without DVs the rewrite's write job
+    // follows; with DVs a DELETE writes no data file and an UPDATE writes
+    // only its updated rows. A group-by or a shuffle of the matched rows
+    // adds jobs of its own. A NOT MATCHED BY SOURCE MERGE and an INSERT
+    // REPLACE, whose DVs come from the same fold, run no more jobs with
+    // DVs than without.
+    val counts = Seq(false, true).map { dv =>
+      val dir = tmpDir()
+      (0 until 4).foreach(i => Graft.write(spark.range(i * 100L, i * 100L + 100)
+        .selectExpr("id", "id % 7 as v").coalesce(1), dir,
+        configuration = if (i > 0 || !dv) Map.empty
+          else Map("graft.enableDeletionVectors" -> "true")))
+      val table = GraftTable.forPath(spark, dir)
+      var updated = Map.empty[String, String]
+      val updateJobs = jobsDuring {
+        updated = graft.commands.UpdateCommand.run(spark, dir, Some($"v" === 3L),
+          Map("v" -> lit(-3L)))
+      }
+      assert(updated("numUpdatedFiles") === "4" && updated("numUpdatedRows") === "57", s"dv=$dv")
+      val deleteJobs = jobsDuring { table.delete($"id" < 150L) }
+      val pointDeleteJobs = jobsDuring { table.delete($"id" === 222L) }
+      assert(Graft.read(spark, dir).count() === 249L, s"dv=$dv")
+      assert(Graft.read(spark, dir).filter($"v" === -3L).count() === 57L - 21L, s"dv=$dv")
+      // Matched rows take the source's v; unmatched rows with v = 0 get -1.
+      val src = Seq((160L, 100L), (310L, 100L)).toDF("id", "v")
+      val mergeJobs = jobsDuring {
+        table.merge(src, expr("t.id = s.id")).whenMatched().updateAll()
+          .whenNotMatchedBySource(expr("t.v = 0")).update(Map("v" -> lit(-1L)))
+          .execute()
+      }
+      assert(Graft.read(spark, dir).filter($"v" === 100L).count() === 2L, s"dv=$dv")
+      assert(Graft.read(spark, dir).filter($"v" === -1L).count() === 36L, s"dv=$dv")
+      val replaceJobs = jobsDuring {
+        table.insertReplaceOn(Seq((310L, 7L), (500L, 7L)).toDF("id", "v"), "t.id = s.id")
+      }
+      assert(Graft.read(spark, dir).filter($"v" === 7L).count() === 2L, s"dv=$dv")
+      assert(Graft.read(spark, dir).count() === 250L, s"dv=$dv")
+      // the four first files only ever take DVs
+      if (dv) assert(graft.log.GraftLog.forTable(spark, dir).update().allFiles
+        .count(_.dvPath.isDefined) >= 4)
+      (updateJobs, deleteJobs, pointDeleteJobs, mergeJobs, replaceJobs)
     }
-    assert(updated("numUpdatedFiles") === "4" && updated("numUpdatedRows") === "57")
-    assert(updateJobs <= 2, s"the update ran $updateJobs Spark jobs")
-    val deleteJobs = jobsDuring { GraftTable.forPath(spark, dir).delete($"id" < 150L) }
-    assert(deleteJobs <= 2, s"the delete ran $deleteJobs Spark jobs")
-    assert(Graft.read(spark, dir).count() === 250L)
-    assert(Graft.read(spark, dir).filter($"v" === -3L).count() === 57L - 21L)
+    info(s"jobs of (UPDATE, DELETE, point DELETE, MERGE, INSERT REPLACE): " +
+      s"${counts.head} without DVs, ${counts(1)} with DVs")
+    val Seq((update, delete, _, merge, replace),
+      (dvUpdate, dvDelete, dvPointDelete, dvMerge, dvReplace)) = counts
+    assert(update <= 2, s"the update ran $update Spark jobs")
+    assert(delete <= 2, s"the delete ran $delete Spark jobs")
+    assert(dvUpdate <= 2, s"the DV update ran $dvUpdate Spark jobs")
+    assert(dvDelete === 1, s"the DV delete ran $dvDelete Spark jobs")
+    assert(dvPointDelete === 1, s"the DV point delete ran $dvPointDelete Spark jobs")
+    assert(dvMerge <= merge,
+      s"the DV NOT MATCHED BY SOURCE merge ran $dvMerge Spark jobs, $merge without DVs")
+    assert(dvReplace <= replace,
+      s"the DV INSERT REPLACE ran $dvReplace Spark jobs, $replace without DVs")
+    // the source's broadcast, the match pass and the insert's write
+    assert(dvReplace <= 3, s"the DV INSERT REPLACE ran $dvReplace Spark jobs")
   }
 
   /** The engine's sources, each parsed (not typed) by the Scala compiler. */
